@@ -71,6 +71,8 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    if reps < 1:
+        raise ValueError(f"SPARK_GRAFT_BENCH_REPS must be >= 1, got {reps}")
     spark = get_spark(app_name="tc-bench", cores=cpus, shuffle_partitions=cpus)
     jobs: list[tuple[str, object]] = []
     all_reps: dict[str, list[float]] = {}

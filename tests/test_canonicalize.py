@@ -58,10 +58,15 @@ def test_vertex_dictionary_deterministic(spark):
 
 
 def test_canonicalize_packed_matches_unpacked(spark):
-    """canonicalize_edges_packed must equal canonicalize_edges on any
-    dictionary-mapped id range (0 <= vid < 2^31), including self-loops,
-    duplicates, and anti-parallel pairs."""
+    """Both canonical forms must equal a pure-Python symmetric set on
+    long and int columns over the packed form's whole id range
+    [0, 2^31), including self-loops, duplicates, anti-parallel pairs
+    and 2^31-1, and keep the input's column types; ids outside the
+    range (2^31, -1) must fail the packed form's job, not pack to
+    wrong keys."""
     import random
+
+    import pytest
 
     from trianglecount_spark.operators.canonicalize import (
         canonicalize_edges,
@@ -71,18 +76,21 @@ def test_canonicalize_packed_matches_unpacked(spark):
     rng = random.Random(7)
     pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(300)]
     pairs += [(5, 5), (0, 1), (1, 0), (0, 1)]  # self-loop + antiparallel dup
-    # boundary ids: top of the int31 range must pack/unpack losslessly
-    big = (1 << 31) - 1
-    pairs += [(big, 0), (big - 1, big), (0, big)]
-    df = spark.createDataFrame(pairs, "src long, dst long")
-    a = {(r.src, r.dst) for r in canonicalize_edges(df).collect()}
-    b = {(r.src, r.dst) for r in canonicalize_edges_packed(df).collect()}
-    assert a == b and len(a) > 0
+    big = (1 << 31) - 1  # top of the packed range: must round-trip
+    pairs += [(big, 0), (big - 1, big), (0, big), (big, big)]
+    want = {(s, d) for s, d in pairs if s != d} | {
+        (d, s) for s, d in pairs if s != d
+    }
     # int-typed input: Java shift semantics wrap the count mod 32 on an
     # int column — the packed form must cast to long first or every id
     # packs to garbage silently
-    small = [(s, d) for s, d in pairs if s < (1 << 31) and d < (1 << 31)]
-    di = spark.createDataFrame(small, "src int, dst int")
-    ai = {(r.src, r.dst) for r in canonicalize_edges(di).collect()}
-    bi = {(r.src, r.dst) for r in canonicalize_edges_packed(di).collect()}
-    assert ai == bi and len(ai) > 0
+    for typ in ("long", "int"):
+        df = spark.createDataFrame(pairs, f"src {typ}, dst {typ}")
+        for canon in (canonicalize_edges, canonicalize_edges_packed):
+            out = canon(df)
+            assert out.schema == df.schema
+            assert {(r.src, r.dst) for r in out.collect()} == want, canon
+    for bad in ((1 << 31, 0), (3, -1)):
+        df = spark.createDataFrame(pairs[:5] + [bad], "src long, dst long")
+        with pytest.raises(Exception, match="outside"):
+            canonicalize_edges_packed(df).collect()

@@ -109,6 +109,34 @@ def test_pipeline_fingerprint_invalidation(spark, tmp_path):
     assert all(s.get("skipped") for s in m3["stages"].values())
 
 
+def test_pipeline_refingerprints_changed_html(spark, tmp_path):
+    """The pages fingerprint covers content: re-running with the SAME
+    urls but changed html must re-mine the edges, and the re-mined
+    artifact must be the new html's edges."""
+    from pyspark.sql import functions as F
+
+    from trianglecount_spark.functions.extract import edges_from_pages
+    from trianglecount_spark.plans.pipeline import _edges_fingerprint, run_pipeline
+    from trianglecount_spark.sources.pages import make_pages
+
+    out = str(tmp_path / "run")
+    pages = make_pages(spark, n_pages=300, n_sites=20)
+    m1 = run_pipeline(spark, pages, out, pr_rounds=2, lpa_rounds=1)
+    # same url set, every other page's links unmarked
+    html = F.col("html").cast("string")
+    pages_b = pages.withColumn(
+        "html",
+        F.when(
+            F.xxhash64("url") % 2 == 0,
+            F.regexp_replace(html, 'href="', 'hxef="').cast("binary"),
+        ).otherwise(F.col("html")),
+    )
+    m2 = run_pipeline(spark, pages_b, out, pr_rounds=2, lpa_rounds=1)
+    assert not m2["stages"]["edges"].get("skipped")
+    assert m2["edges_fingerprint"] != m1["edges_fingerprint"]
+    assert m2["edges_fingerprint"] == _edges_fingerprint(edges_from_pages(pages_b)[0])
+
+
 def test_pipeline_stale_pr_state_cleared_on_crash(spark, tmp_path, monkeypatch):
     """r4 advisor (high): when the pr_state fingerprint gate rejects a
     recorded state, the stale round=N dirs must be deleted BEFORE the
@@ -151,3 +179,24 @@ def test_pipeline_stale_pr_state_cleared_on_crash(spark, tmp_path, monkeypatch):
     m3 = run_pipeline(spark, pages_b, out, pr_rounds=4, lpa_rounds=2)
     assert not m3["stages"]["pagerank"].get("skipped")
     assert spark.read.parquet(f"{out}/pagerank").count() == m3["n_vertices"]
+
+
+def test_scaling_pair_table_skips_harness_mismatch():
+    """A lo/hi pair measured under different harness versions is not a
+    speedup: pair_table leaves it out of the table and the efficiencies
+    and lists it under the table."""
+    from tools.scaling import pair_table
+
+    def cell(sec, harness):
+        return {"seconds": sec, "harness": harness}
+
+    results = {
+        "tc_arrays": {2: cell(40.0, 6), 8: cell(12.5, 6)},
+        "webe2e": {2: cell(200.0, 10), 8: cell(60.0, 11)},
+        "tc_join": {2: cell(100.0, 6)},  # partial: silently skipped
+    }
+    lines, effs = pair_table(2, 8, results)
+    assert effs == {"tc_arrays": 0.8}
+    assert not any(line.startswith("| webe2e") for line in lines)
+    assert "webe2e (harness v10 vs v11)" in lines[-1]
+    assert "tc_join" not in "\n".join(lines)

@@ -649,6 +649,7 @@ def test_pair_counts_auto_regime_selection(spark, monkeypatch):
     regime bounds hold — hub cap set AND capped adjacency under the
     byte ceiling — and the all-shuffle plan otherwise."""
     import trianglecount_spark.operators.metrics as M
+    from trianglecount_spark.operators import regime
 
     sym = _sym(
         spark,
@@ -665,8 +666,8 @@ def test_pair_counts_auto_regime_selection(spark, monkeypatch):
     shuf = M.link_prediction_jaccard(sym, min_common=1)
     assert "MapInArrow" not in plan(shuf)
     # capped but past the size ceiling: bound (1) fails -> shuffle form
-    monkeypatch.setattr(M, "_KERNEL_BYTE_LIMIT", 1)
-    monkeypatch.setattr(M, "_KERNEL_ROW_LIMIT", 1)
+    monkeypatch.setattr(regime, "BYTE_LIMIT", 1)
+    monkeypatch.setattr(regime, "ROW_LIMIT", 1)
     big = M.link_prediction_jaccard(sym, min_common=1, max_center_degree=8)
     assert "MapInArrow" not in plan(big)
     monkeypatch.undo()
@@ -674,7 +675,7 @@ def test_pair_counts_auto_regime_selection(spark, monkeypatch):
     rows = lambda df: {  # noqa: E731
         (r.u, r.w, r.common, round(r.jaccard, 12)) for r in df.collect()
     }
-    assert rows(kern) == rows(
+    assert rows(kern) == rows(big) == rows(
         M.link_prediction_jaccard(
             sym, min_common=1, max_center_degree=8, broadcast_adjacency=False
         )
@@ -699,24 +700,42 @@ def test_pair_counts_uncapped_kernel_raises(spark):
 def test_frontier_auto_resolves_by_size(spark, monkeypatch):
     """'auto' broadcast_state degrades to the shuffle regime when the
     edge-table size estimate exceeds the ceiling, with identical
-    results either way."""
+    results either way — and triangles_join's closure='auto' follows
+    the same rule."""
     import trianglecount_spark.operators.metrics as M
+    from trianglecount_spark.operators import regime
+    from trianglecount_spark.operators.canonicalize import orient
+    from trianglecount_spark.operators.triangles import triangles_join
 
-    sym = _sym(spark, [(0, 1), (1, 2), (2, 3), (0, 3), (1, 4)])
-    assert M._resolve_broadcast_state("auto", sym) is True  # noqa: SLF001
-    assert M._resolve_broadcast_state(True, sym) is True  # noqa: SLF001
-    assert M._resolve_broadcast_state(False, sym) is False  # noqa: SLF001
-    monkeypatch.setattr(M, "_KERNEL_BYTE_LIMIT", 1)
-    monkeypatch.setattr(M, "_KERNEL_ROW_LIMIT", 1)
-    assert M._resolve_broadcast_state("auto", sym) is False  # noqa: SLF001
+    sym = _sym(spark, [(0, 1), (1, 2), (2, 3), (0, 3), (1, 4), (0, 2)])
+    o = orient(sym)
+
+    def closure_hinted(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        return "strategy=broadcast" in plan
+
+    def tris(df):
+        return {(r.u, r.v, r.w) for r in df.collect()}
+
+    assert regime.resolve_broadcast("auto", sym) is True
+    assert regime.resolve_broadcast(True, sym) is True
+    assert regime.resolve_broadcast(False, sym) is False
+    t_bc = triangles_join(o)
+    assert closure_hinted(t_bc)
+    monkeypatch.setattr(regime, "BYTE_LIMIT", 1)
+    monkeypatch.setattr(regime, "ROW_LIMIT", 1)
+    assert regime.resolve_broadcast("auto", sym) is False
     # end-to-end under the shrunken ceiling: auto now runs the shuffle
     # regime and must agree with the explicit broadcast run
     d_auto, _ = M.bfs_distances(sym, 0, max_rounds=6)
+    t_auto = triangles_join(o)
+    assert not closure_hinted(t_auto)
     monkeypatch.undo()
     d_bc, _ = M.bfs_distances(sym, 0, max_rounds=6, broadcast_state=True)
     assert {(r.v, r.dist) for r in d_auto.collect()} == {
         (r.v, r.dist) for r in d_bc.collect()
     }
+    assert tris(t_auto) == tris(t_bc) and len(tris(t_bc)) == 2
 
 
 def test_broadcast_tristate_typo_raises(spark):
@@ -726,12 +745,17 @@ def test_broadcast_tristate_typo_raises(spark):
     import pytest
 
     import trianglecount_spark.operators.metrics as M
+    from trianglecount_spark.operators import regime
+    from trianglecount_spark.operators.canonicalize import orient
     from trianglecount_spark.operators.lpa import label_propagation
     from trianglecount_spark.operators.pagerank import pagerank
+    from trianglecount_spark.operators.triangles import triangles_join
 
     sym = _sym(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])
     with pytest.raises(ValueError, match="auto"):
-        M._resolve_broadcast_state("Auto", sym)  # noqa: SLF001
+        regime.resolve_broadcast("Auto", sym)
+    with pytest.raises(ValueError, match="auto"):
+        triangles_join(orient(sym), closure="Auto")
     with pytest.raises(ValueError, match="auto"):
         M.link_prediction_jaccard(
             sym, min_common=1, max_center_degree=8, broadcast_adjacency="none"
@@ -750,9 +774,9 @@ def test_estimated_bytes_file_scan_deser_factor(spark, tmp_path):
     the deserialization factor before any broadcast-ceiling comparison,
     while accurate non-scan stats (Range/InMemory/Local leaves) pass
     through unadjusted."""
-    from trianglecount_spark.operators.triangles import (
-        _FILE_SCAN_DESER_FACTOR,
-        _estimated_bytes,
+    from trianglecount_spark.operators.regime import (
+        FILE_SCAN_DESER_FACTOR,
+        estimated_bytes,
     )
 
     p = str(tmp_path / "edges.parquet")
@@ -762,10 +786,10 @@ def test_estimated_bytes_file_scan_deser_factor(spark, tmp_path):
         scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
     )
     assert raw > 0
-    assert _estimated_bytes(scan) == raw * _FILE_SCAN_DESER_FACTOR
+    assert estimated_bytes(scan) == raw * FILE_SCAN_DESER_FACTOR
 
     rng = spark.range(1000)  # Range leaf: exact in-memory estimate
     raw_rng = int(
         rng._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
     )
-    assert _estimated_bytes(rng) == raw_rng
+    assert estimated_bytes(rng) == raw_rng

@@ -165,16 +165,25 @@ def pair_table(lo: int, hi: int, results: dict) -> tuple[list[str], dict]:
         "|---|---|---|---|---|",
     ]
     effs = {}
+    mismatched = []
     for q in JOBS:
         cells = results.get(q, {})
         if lo not in cells or hi not in cells:
             continue  # partial cache / subset rerun: skip, don't crash
+        h_lo, h_hi = cells[lo].get("harness"), cells[hi].get("harness")
+        if h_lo != h_hi:
+            # measured under different protocols: not a speedup
+            mismatched.append(f"{q} (harness v{h_lo} vs v{h_hi})")
+            continue
         t_lo = cells[lo]["seconds"]
         t_hi = cells[hi]["seconds"]
         sp = t_lo / t_hi
         eff = sp / (hi / lo)
         effs[q] = eff
         lines.append(f"| {q} | {t_lo:.2f} | {t_hi:.2f} | {sp:.2f}x | {eff:.2f} |")
+    if mismatched:
+        lines += ["", "Skipped, lo and hi cells from different harness versions: "
+                  + ", ".join(mismatched) + "."]
     return lines, effs
 
 

@@ -177,7 +177,7 @@ def main() -> None:
             # shuffle closure: the all-shuffle plan is the form whose
             # scaling the two-cluster criterion constrains (broadcast
             # build is a serial driver-side step)
-            out["n_triangles"] = triangles_join(oriented, closure="shuffle").count()
+            out["n_triangles"] = triangles_join(oriented, closure=False).count()
         elif job == "tc_kernel":
             # n_parts = the shuffle-partition count: halo arrays replicate
             # once per demanding group, so finer groups multiply shuffle
@@ -223,15 +223,6 @@ def main() -> None:
                 canonicalize_edges_packed,
             )
 
-            # packed-key canonicalize is the v11 default (measured win,
-            # see HARNESS_VERSIONS); SPARK_GRAFT_PACKED_CANON=0 re-runs
-            # the v10 unpacked A/B arm without a code flip
-            canon = (
-                canonicalize_edges
-                if os.environ.get("SPARK_GRAFT_PACKED_CANON") == "0"
-                else canonicalize_edges_packed
-            )
-
             handles: list = []
             we, _verts = edges_from_pages(pages, handles=handles)
             # materialize each stage artifact once, exactly like the
@@ -241,7 +232,7 @@ def main() -> None:
             # stream) — without the persists the mapping joins and the
             # canonicalize distinct re-execute 2-4x per downstream
             # reference, timing recomputation instead of the pipeline
-            sym_w = canon(we).persist()
+            sym_w = canonicalize_edges_packed(we).persist()
             sym_w.count()
             ori_w = orient(sym_w).persist()
             ori_w.count()

@@ -13,19 +13,13 @@ Stages:
   dict      two-phase url dictionary over both endpoints
   probe     fingerprint collision probe (groupBy h + empty check)
   map       long-key url->vid mapping joins (the r4 plan)
-  canon     canonicalize_edges (symmetrize + dedupe)
+  canon     canonicalize_edges_packed (symmetrize + dedupe on one
+            packed int64 key — the pipeline's plan)
   orient    degree orientation
   tc        arrays triangle count
 
 Usage: web_piecewise.py <cpus> [reps]   (prints one JSON line)
 Driven by: for c in 2 8; do python tools/web_piecewise.py $c 2; done
-
-NOTE (r5): the recorded r4 probe (extract 0.94 / map 0.73 / canon 0.78
-/ orient 0.76 / tc 0.77) measured the UNPACKED canonicalize; harness
-v11 switched the canon stage to the packed-int64 distinct
-(canonicalize_edges_packed) on its diagnosis — re-run this probe with
-the import below swapped if a fresh per-stage decomposition of the
-v11 plan is needed.
 """
 
 from __future__ import annotations
@@ -48,7 +42,7 @@ def main() -> None:
     cpus = int(sys.argv[1])
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     from trianglecount_spark.operators.canonicalize import (
-        canonicalize_edges,
+        canonicalize_edges_packed,
         orient,
         vertex_dictionary_scalable,
     )
@@ -120,7 +114,7 @@ def main() -> None:
             .select("src", "dst")
         )
         edges = stage("map", lambda: pin(edges))
-        sym = stage("canon", lambda: pin(canonicalize_edges(edges)))
+        sym = stage("canon", lambda: pin(canonicalize_edges_packed(edges)))
         ori = stage("orient", lambda: pin(orient(sym)))
         stage("tc", lambda: triangle_count_arrays(ori))
         cells["total"] = round(sum(cells.values()), 3)

@@ -41,6 +41,11 @@ def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> 
     )
 
 
+# exclusive upper bound on ids the packed form accepts: two 31-bit ids
+# pack into one non-negative int64 (src << 32) | dst
+_PACK_LIMIT = 1 << 31
+
+
 def canonicalize_edges_packed(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -55,14 +60,31 @@ def canonicalize_edges_packed(
     REQUIRES ``0 <= id < 2^31`` for both endpoints — the contract of
     dictionary-mapped vids (``vertex_dictionary_scalable`` ranks are
     dense from 0; the kernel applies the same int32 downcast,
-    triangles.py). Callers with arbitrary ids use the unpacked form.
+    triangles.py). The contract is checked in-plan, on the rows the
+    distinct reads anyway: an id outside it fails the job through
+    ``raise_error`` instead of packing to a wrong key. Output columns
+    carry the same types as ``canonicalize_edges``'s.
     """
+    # the pair form's union widens both output columns to the common
+    # type of the two inputs; coalesce resolves the same type
+    id_type = edges.select(F.coalesce(src, dst)).schema[0].dataType
     # cast to long BEFORE shifting: on an int-typed column Java's shift
     # semantics wrap the shift count mod 32, so shiftleft(int, 32) would
     # silently return the value unshifted and corrupt the packing
+    s, d = F.col(src).cast("long"), F.col(dst).cast("long")
+    out_of_range = (s < 0) | (s >= _PACK_LIMIT) | (d < 0) | (d >= _PACK_LIMIT)
     e = edges.select(
-        F.col(src).cast("long").alias("src"),
-        F.col(dst).cast("long").alias("dst"),
+        F.when(
+            out_of_range,
+            F.raise_error(
+                F.format_string(
+                    "canonicalize_edges_packed: edge (%s, %s) has an id "
+                    "outside [0, 2^31); use canonicalize_edges",
+                    s, d,
+                )
+            ),
+        ).otherwise(s).alias("src"),
+        d.alias("dst"),
     ).where(F.col("src") != F.col("dst"))
     packed = e.select(
         (F.shiftleft(F.col("src"), 32) + F.col("dst")).alias("pk")
@@ -70,8 +92,8 @@ def canonicalize_edges_packed(
         e.select((F.shiftleft(F.col("dst"), 32) + F.col("src")).alias("pk"))
     )
     return packed.distinct().select(
-        F.shiftright("pk", 32).alias("src"),
-        (F.col("pk") % F.lit(1 << 32)).alias("dst"),
+        F.shiftright("pk", 32).cast(id_type).alias("src"),
+        (F.col("pk") % F.lit(1 << 32)).cast(id_type).alias("dst"),
     )
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trianglecount_spark.operators.iterative import IterationLog, iterate
+from trianglecount_spark.operators.regime import resolve_broadcast
 
 
 def label_propagation(
@@ -45,12 +46,7 @@ def label_propagation(
     (≲10M vertices — the gate/bench graphs do, see plans/queries.py),
     where the forced broadcast makes each round's edge-side join
     shuffle-free."""
-    # unconditional routing: the resolver passes True/False through,
-    # probes on "auto", and REJECTS anything else (typo-safety — a
-    # truthy string must not silently force the broadcast regime)
-    from trianglecount_spark.operators.metrics import _resolve_broadcast_state
-
-    broadcast_state = _resolve_broadcast_state(broadcast_state, edges)
+    broadcast_state = resolve_broadcast(broadcast_state, edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     sym = (
         edges.select("src", "dst")

@@ -31,56 +31,8 @@ from pyspark.sql import functions as F
 
 from trianglecount_spark.operators.canonicalize import degrees, orient
 from trianglecount_spark.operators.iterative import IterationLog, iterate
-from trianglecount_spark.operators.triangles import (
-    _BROADCAST_BYTE_LIMIT,
-    _BROADCAST_EDGE_LIMIT,
-    _estimated_bytes,
-    triangles_join,
-)
-
-# Byte/row ceilings for choosing a broadcast/kernel regime (the same
-# probe-and-threshold pattern as triangles_join(closure="auto")).
-# Module-local aliases so tests can shrink them to force the shuffle
-# regime on a small fixture.
-_KERNEL_BYTE_LIMIT = _BROADCAST_BYTE_LIMIT
-_KERNEL_ROW_LIMIT = _BROADCAST_EDGE_LIMIT
-
-
-def _resolve_broadcast_state(flag: bool | str, proxy: DataFrame) -> bool:
-    """Resolve a ``broadcast_state``/``broadcast_adjacency`` tri-state:
-    ``True``/``False`` pass through (explicit override); ``"auto"``
-    broadcasts iff ``proxy`` fits the regime ceiling. Callers pass the
-    EDGE table as the proxy for vertex-sized state (a sound upper
-    bound: the state never exceeds one row per edge endpoint), so an
-    oversized input degrades to the always-correct shuffle regime
-    instead of failing at the broadcast.
-
-    Probe order: Catalyst's optimized-plan size estimate first (a JVM
-    stats call, no job) — trusted when it ALLOWS the broadcast, because
-    without CBO table stats Catalyst only ever overestimates join
-    lineage (measured 55 GB claimed for a 4 MB self-join projection),
-    so a small estimate is reliable. An unknown or over-ceiling
-    estimate is settled by one ``count()`` against the row ceiling —
-    a map-side partial agg over the proxy, noise next to either regime
-    it guards. File-scan estimates carry a deserialization factor
-    (``triangles._FILE_SCAN_DESER_FACTOR``): parquet's sizeInBytes is
-    the compressed footprint, 3-10x under the broadcast size (r4
-    advisor) — so near-ceiling scans settle by count, not estimate.
-
-    The tri-state is VALIDATED: anything but True/False/"auto" raises —
-    a typo like ``'Auto'`` or ``'none'`` must not silently force the
-    memory-unsafe broadcast regime via string truthiness."""
-    if flag not in (True, False, "auto"):
-        raise ValueError(
-            "broadcast regime flag must be True, False or 'auto', "
-            f"got {flag!r}"
-        )
-    if flag != "auto":
-        return bool(flag)
-    est = _estimated_bytes(proxy)
-    if est is not None and est <= _KERNEL_BYTE_LIMIT:
-        return True
-    return proxy.count() <= _KERNEL_ROW_LIMIT
+from trianglecount_spark.operators.regime import resolve_broadcast
+from trianglecount_spark.operators.triangles import triangles_join
 
 
 def triangles_per_vertex_all(oriented: DataFrame) -> DataFrame:
@@ -208,9 +160,9 @@ def _pair_counts(
     CHECKS the two kernel regime bounds at plan time instead of
     trusting the call site: the kernel is selected iff the hub cap is
     set (bound 2 — per-task pair memory C(τ,2)·centers/task) AND the
-    capped-center adjacency's Catalyst size estimate fits
-    ``_KERNEL_BYTE_LIMIT`` (bound 1 — driver CSR + broadcast); anything
-    else routes to the always-correct shuffle form. Explicit
+    capped-center adjacency fits the broadcast ceiling (bound 1 —
+    driver CSR + broadcast, ``regime.fits_broadcast``); anything else
+    routes to the always-correct shuffle form. Explicit
     ``True``/``False`` remain as overrides, except that the
     memory-unsafe combination ``True`` with ``max_center_degree=None``
     now raises: uncapped hub graphs violate bound 2 by construction
@@ -264,21 +216,13 @@ def _pair_counts(
     range in the kernel's bincount, emitted as int64; both regimes and
     the SQL oracle agree bit-for-bit."""
     centered = _wedge_centers(sym_edges, deg, max_center_degree)
-    if broadcast_adjacency not in (True, False, "auto"):
-        raise ValueError(
-            "broadcast_adjacency must be True, False or 'auto', "
-            f"got {broadcast_adjacency!r}"
-        )
-    if broadcast_adjacency == "auto":
-        # both regime bounds: the hub cap for per-task pair memory
-        # (bound 2, a plan property), then the capped adjacency's size
-        # for the driver-CSR broadcast (bound 1 — plan-stats probe with
-        # count fallback, see _resolve_broadcast_state)
-        broadcast_adjacency = (
-            max_center_degree is not None
-            and _resolve_broadcast_state("auto", centered.select("v", "u"))
-        )
-    elif broadcast_adjacency and max_center_degree is None:
+    if broadcast_adjacency == "auto" and max_center_degree is None:
+        broadcast_adjacency = False  # bound 2 fails: no hub cap
+    # bound 1: the capped adjacency must fit the driver-CSR broadcast
+    broadcast_adjacency = resolve_broadcast(
+        broadcast_adjacency, centered.select("v", "u")
+    )
+    if broadcast_adjacency and max_center_degree is None:
         raise ValueError(
             "broadcast_adjacency=True with max_center_degree=None is "
             "memory-unsafe: the kernel's per-task pair sort is bounded "
@@ -589,7 +533,7 @@ def bfs_distances(
     ceiling — the 10^12-url regime where a frontier can exceed the
     broadcast limit; ``True``/``False`` force a regime (same tri-state
     as pagerank/label_propagation/core_numbers)."""
-    broadcast_state = _resolve_broadcast_state(broadcast_state, sym_edges)
+    broadcast_state = resolve_broadcast(broadcast_state, sym_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     sym_edges = sym_edges.localCheckpoint(eager=False)  # one round-loop pin
     spark = sym_edges.sparkSession
@@ -644,7 +588,7 @@ def sssp_distances(
     swaps in the shuffle join for the 10^12-vertex regime where a
     |V|-row state exceeds the broadcast limit (``True``/``False``
     force a regime, same tri-state as pagerank/label_propagation)."""
-    broadcast_state = _resolve_broadcast_state(broadcast_state, weighted_edges)
+    broadcast_state = resolve_broadcast(broadcast_state, weighted_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     INF = 1 << 40
     weighted_edges = weighted_edges.localCheckpoint(eager=False)
@@ -751,7 +695,7 @@ def core_numbers(
     sym_edges = sym_edges.repartition("src").localCheckpoint(eager=True)
     h = degrees(sym_edges).select("v", F.col("deg").cast("long").alias("h"))
     w = Window.partitionBy("v").orderBy(F.desc("nh"))
-    broadcast_state = _resolve_broadcast_state(broadcast_state, sym_edges)
+    broadcast_state = resolve_broadcast(broadcast_state, sym_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     for _ in range(rounds):
         nbr = sym_edges.join(
@@ -819,7 +763,7 @@ def shortest_path_counts(
     the edge-table size estimate fits the ceiling and swaps in a
     shuffle join past it (10^12-url frontiers — same tri-state as
     pagerank/label_propagation/bfs_distances)."""
-    broadcast_state = _resolve_broadcast_state(broadcast_state, sym_edges)
+    broadcast_state = resolve_broadcast(broadcast_state, sym_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     # pinned once: every level joins the frontier against `sym_edges`
     sym_edges = sym_edges.localCheckpoint(eager=False)

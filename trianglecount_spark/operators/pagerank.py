@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trianglecount_spark.operators.iterative import IterationLog, iterate
+from trianglecount_spark.operators.regime import resolve_broadcast
 
 
 def pagerank(
@@ -115,12 +116,10 @@ def pagerank(
     # rank vector cannot broadcast — the default shuffle join partitions
     # ew on src and ships only the vertex-sized vector per round.
     # "auto" resolves the regime from the edge table's size probe
-    # (metrics._resolve_broadcast_state — the r4 tri-state shared with
-    # the frontier ops); default stays False because the measured
-    # scaling cells (pagerank10/pagerank10bc) pin their regimes.
-    from trianglecount_spark.operators.metrics import _resolve_broadcast_state
-
-    broadcast_state = _resolve_broadcast_state(broadcast_state, edges)
+    # (regime.resolve_broadcast, shared with the frontier ops); default
+    # stays False because the measured scaling cells
+    # (pagerank10/pagerank10bc) pin their regimes.
+    broadcast_state = resolve_broadcast(broadcast_state, edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     ew = (
         edges.join(outdeg, "src")

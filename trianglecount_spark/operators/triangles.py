@@ -35,7 +35,6 @@ corner), matching the reference's per-vertex g_sum
 
 from __future__ import annotations
 
-import os
 from typing import Iterable
 
 import numpy as np
@@ -43,55 +42,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trianglecount_spark.operators.regime import fits_broadcast, resolve_broadcast
 
 # ---------------------------------------------------------------------------
 # Strategy 1: declarative join form
 # ---------------------------------------------------------------------------
 
-# Above this many oriented edges the closure side stops being broadcast
-# and the semi-join shuffles (AQE picks the strategy). 32M packed edges
-# ≈ 512 MB serialized — the practical single-executor broadcast ceiling.
-_BROADCAST_EDGE_LIMIT = 32_000_000
-_BROADCAST_BYTE_LIMIT = 512 * 1024 * 1024
-
-
-# For FILE-SCAN relations Catalyst's sizeInBytes is the COMPRESSED
-# on-disk footprint (spark.sql.sources.fileCompressionFactor defaults to
-# 1.0), which understates the deserialized/broadcast size by 3-10x for
-# parquet — the one direction in which the "Catalyst only overestimates"
-# regime-probe argument fails (r4 advisor). Estimates whose plan leaves
-# include a file scan are therefore inflated by this factor before any
-# broadcast ceiling comparison; InMemoryRelation / LocalRelation / Range
-# leaves report accurate in-memory sizes and pass through unadjusted.
-_FILE_SCAN_DESER_FACTOR = 4
-# Optimized-plan leaf class names that denote file/table scans (probed
-# on this Spark build: parquet reads = LogicalRelation; cached =
-# InMemoryRelation; V2 sources / Hive names included defensively).
-_SCAN_LEAF_PREFIXES = ("LogicalRelation", "DataSourceV2", "HiveTableRelation")
-
-
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate — a JVM call, no job.
-    None when stats are unavailable (then callers fall back to count()).
-    File-scan-backed plans are inflated by ``_FILE_SCAN_DESER_FACTOR``
-    (compressed-footprint stats, see above)."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        size = int(plan.stats().sizeInBytes())
-        # Catalyst's "unknown" sentinel is Long.MaxValue-ish
-        if not (0 <= size < (1 << 62)):
-            return None
-        leaves = plan.collectLeaves()
-        for i in range(leaves.size()):
-            name = leaves.apply(i).getClass().getSimpleName()
-            if name.startswith(_SCAN_LEAF_PREFIXES):
-                return size * _FILE_SCAN_DESER_FACTOR
-        return size
-    except Exception:
-        return None
-
-
-def triangles_join(oriented: DataFrame, closure: str = "auto") -> DataFrame:
+def triangles_join(oriented: DataFrame, closure: bool | str = "auto") -> DataFrame:
     """All triangles as (u, v, w) rows, u ≺ v ≺ w in oriented order.
 
     Wedge join on v, then closure semi-join of (u, w) against the edge
@@ -99,34 +56,25 @@ def triangles_join(oriented: DataFrame, closure: str = "auto") -> DataFrame:
     (≤ O(√E) amortized), which is what makes the wedge join feasible on
     power-law graphs at all.
 
-    ``closure`` picks the physical strategy for the closure probe:
-    - ``"broadcast"``: broadcast-hash semi-join — the wedge stream is
+    ``closure`` picks the physical strategy for the closure probe, the
+    regime tri-state of ``regime.resolve_broadcast`` with the edge side
+    as its own proxy:
+    - ``True``: broadcast-hash semi-join — the wedge stream is
       filtered in place, never shuffled. The dominant cost of the
       declarative form is otherwise the exchange of |wedges| ≫ |E| rows;
       broadcasting the *edge* side (16 bytes/row) eliminates it. This is
       the physical analog of the reference keeping the full CSR resident
       on-device and probing it per wedge
       (ShareKernelTCV62_update_v1.cu:100-173).
-    - ``"shuffle"``: shuffled semi-join — required when E itself is too
+    - ``False``: shuffled semi-join — required when E itself is too
       big for one executor's memory (the 100 TB regime); AQE handles
       skew splitting.
-    - ``"auto"``: broadcast iff Catalyst's size estimate for the edge
-      side is under ``_BROADCAST_BYTE_LIMIT`` — a plan-stats lookup, not
-      a count() job (a count would add one full job per call on uncached
-      inputs). Falls back to a count only when stats are unknown.
+    - ``"auto"``: broadcast iff ``regime.fits_broadcast(oriented)``.
     """
     e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     e2 = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
     e3 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    if closure == "auto":
-        est = _estimated_bytes(oriented)
-        if est is not None:
-            closure = "broadcast" if est <= _BROADCAST_BYTE_LIMIT else "shuffle"
-        else:
-            closure = (
-                "broadcast" if oriented.count() <= _BROADCAST_EDGE_LIMIT else "shuffle"
-            )
-    if closure == "broadcast":
+    if resolve_broadcast(closure, oriented):
         e3 = F.broadcast(e3)
     wedges = e1.join(e2, "v")
     return wedges.join(e3, ["u", "w"], "left_semi").select("u", "v", "w")
@@ -216,7 +164,7 @@ _K_SEED_SALTED = 2   # salted hub anchor: full N+(u); the kernel expands
 # worker regardless of group size (500k vs 2M measured within noise at
 # local[8]/8M edges — the cap is a memory-footprint bound, not a
 # throughput tunable)
-_WEDGE_CHUNK = int(os.environ.get("SPARK_GRAFT_WEDGE_CHUNK", "1000000"))
+_WEDGE_CHUNK = 1_000_000
 
 
 def _gather_segments(starts: np.ndarray, lens: np.ndarray, flat: np.ndarray) -> np.ndarray:
@@ -554,9 +502,7 @@ def triangle_count_kernel(
     return int(row["t"] or 0)
 
 
-def weighted_triangle_total(
-    raw_pairs: DataFrame, closure: str = "auto"
-) -> DataFrame:
+def weighted_triangle_total(raw_pairs: DataFrame) -> DataFrame:
     """WEIGHTED triangle count over a raw pair table with repeats:
     weight(edge) = multiplicity, each triangle contributes
     min(w_uv, w_vw, w_uw) — bottleneck cohesion. One-row result
@@ -565,10 +511,10 @@ def weighted_triangle_total(
     Same plan as the unweighted join form (orientation prunes the wedge
     stream to Σ deg+²); the only addition is the exact-integer weight
     carried on each oriented edge and a LEAST folded at the closure
-    match — no extra shuffle. ``closure`` follows ``triangles_join``'s
-    strategy rule (broadcast the 24-byte/row weighted edge side under
-    the size limit so the wedge stream is never exchanged; shuffle in
-    the >limit regime). Reference parity: the reference's
+    match — no extra shuffle. The closure side follows
+    ``triangles_join``'s ``"auto"`` rule (broadcast the 24-byte/row
+    weighted edge side while it fits, so the wedge stream is never
+    exchanged; shuffle past the ceiling). Reference parity: the reference's
     edge_weight.cu is weight-free despite its name (SURVEY §2.4); this
     is the [EXT] weighted semantics a co-occurrence graph wants."""
     from trianglecount_spark.operators.canonicalize import orient
@@ -592,25 +538,7 @@ def weighted_triangle_total(
     e3 = wor.select(
         F.col("src").alias("u"), F.col("dst").alias("w"), F.col("wt").alias("w3")
     )
-    if closure == "auto":
-        est = _estimated_bytes(wor)
-        if est is not None:
-            closure = "broadcast" if est <= _BROADCAST_BYTE_LIMIT else "shuffle"
-        else:
-            # stats unknown ⇒ the decision needs a count; persist first
-            # so the weighted graph is built once, not once per branch
-            wor = wor.persist()
-            e1, e2, e3 = (
-                wor.select(
-                    F.col("src").alias(a), F.col("dst").alias(b),
-                    F.col("wt").alias(c),
-                )
-                for a, b, c in (("u", "v", "w1"), ("v", "w", "w2"), ("u", "w", "w3"))
-            )
-            closure = (
-                "broadcast" if wor.count() <= _BROADCAST_EDGE_LIMIT else "shuffle"
-            )
-    if closure == "broadcast":
+    if fits_broadcast(wor):
         e3 = F.broadcast(e3)
     tri = e1.join(e2, "v").join(e3, ["u", "w"])
     return tri.agg(

@@ -52,11 +52,12 @@ resumed — and when that guard REJECTS the recorded state the stale
 (r4 advisor: leftover rounds under a fresh stamp would otherwise be
 silently resumed — or, when the stale max round ≥ pr_rounds, returned
 wholesale — as the new graph's ranks). The edges stage itself is keyed
-on a PAGES fingerprint (count + bit_xor of xxhash64(url), a
-column-pruned scan that reads no html bytes): a changed pages input
-forces a re-mine exactly as a changed edges artifact invalidates every
-downstream stage (r4 judge ask — previously the only guard was
-"delete ``out_dir/edges`` by hand").
+on a PAGES fingerprint (count + bit_xor of xxhash64(url, html), so
+it covers content, not only the url set): a changed pages input —
+including re-crawled html under the same urls — forces a re-mine
+exactly as a changed edges artifact invalidates every downstream
+stage. The price is one hash pass over the html bytes per run, skipped
+resumes included.
 """
 
 from __future__ import annotations
@@ -86,12 +87,11 @@ def _edges_fingerprint(edges: DataFrame) -> dict:
 
 
 def _pages_fingerprint(pages: DataFrame) -> dict:
-    """Same construction over the pages INPUT, keyed on url only — the
-    scan is column-pruned (no html bytes move), so the guard costs one
-    cheap agg even on a skipped resume."""
+    """Same construction over the pages INPUT, keyed on (url, html) —
+    the mined edges are a function of both."""
     row = pages.agg(
         F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(url))").alias("x"),
+        F.expr("bit_xor(xxhash64(url, html))").alias("x"),
     ).collect()[0]
     return {"pages_n": int(row["n"]), "pages_xor": int(row["x"] or 0)}
 
