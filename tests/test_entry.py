@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -179,6 +180,43 @@ def test_pipeline_stale_pr_state_cleared_on_crash(spark, tmp_path, monkeypatch):
     m3 = run_pipeline(spark, pages_b, out, pr_rounds=4, lpa_rounds=2)
     assert not m3["stages"]["pagerank"].get("skipped")
     assert spark.read.parquet(f"{out}/pagerank").count() == m3["n_vertices"]
+
+
+def test_pipeline_records_iterative_regimes(spark, tmp_path, monkeypatch):
+    """metrics.json names the regime every iterative stage ran in: the
+    resident one on a graph that fits the broadcast ceiling, the
+    shuffle plan once the ceilings are shrunk below it — with the same
+    results."""
+    from trianglecount_spark.operators import regime
+    from trianglecount_spark.plans.pipeline import run_pipeline
+    from trianglecount_spark.sources.pages import make_pages
+
+    pages = make_pages(spark, n_pages=300, n_sites=20)
+    iterative = ("pagerank", "components", "lpa")
+
+    def run(name):
+        out = str(tmp_path / name)
+        run_pipeline(spark, pages, out, pr_rounds=4, lpa_rounds=2)
+        with open(f"{out}/metrics.json") as f:
+            m = json.load(f)
+        regimes = {s: {r["regime"] for r in m["stages"][s]["rounds"]} for s in iterative}
+        tables = {
+            s: {r[0]: r[1] for r in spark.read.parquet(f"{out}/{s}").collect()}
+            for s in iterative
+        }
+        return regimes, tables
+
+    res_regimes, res = run("resident")
+    with monkeypatch.context() as m:
+        m.setattr(regime, "BYTE_LIMIT", -1)
+        m.setattr(regime, "ROW_LIMIT", -1)
+        shu_regimes, shu = run("shuffle")
+    assert res_regimes == {s: {"resident"} for s in iterative}
+    assert shu_regimes == {s: {"shuffle"} for s in iterative}
+    assert res["components"] == shu["components"]
+    assert res["lpa"] == shu["lpa"]
+    assert res["pagerank"].keys() == shu["pagerank"].keys()
+    assert all(abs(res["pagerank"][v] - shu["pagerank"][v]) < 1e-12 for v in res["pagerank"])
 
 
 def test_scaling_pair_table_skips_harness_mismatch():

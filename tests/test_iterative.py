@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from tests.conftest import GOLDEN, edges_df
+from trianglecount_spark.operators import regime
 from trianglecount_spark.operators.canonicalize import canonicalize_edges
 from trianglecount_spark.operators.components import (
     connected_components,
@@ -185,7 +186,7 @@ def test_pagerank_materialize_cadence_invariant(spark):
 
 
 @pytest.mark.parametrize("name", ["two_tris", "path6", "hub"])
-def test_components_both_strategies(spark, name):
+def test_components_both_strategies(spark, name, monkeypatch):
     raw, _ = GOLDEN[name]
     e = edges_df(spark, raw).where("src != dst")
     want = numpy_components(raw)
@@ -193,6 +194,14 @@ def test_components_both_strategies(spark, name):
     got_ml, _ = connected_components_minlabel(e, check_every=4)
     assert {r.v: r.comp for r in got_star.collect()} == want
     assert {r.v: r.comp for r in got_ml.collect()} == want
+    # both regimes of the star-contraction form
+    (res, res_log), (shu, shu_log) = _both_regimes(
+        monkeypatch, lambda: connected_components(e)
+    )
+    assert {r["regime"] for r in res_log.rounds} == {"resident"}
+    assert {r["regime"] for r in shu_log.rounds} == {"shuffle"}
+    assert {r.v: r.comp for r in res.collect()} == want
+    assert {r.v: r.comp for r in shu.collect()} == want
 
 
 def test_components_two_tris_exact(spark):
@@ -209,6 +218,9 @@ def test_lpa_matches_numpy(spark, name):
     got, _ = label_propagation(e, max_iter=12)
     want = numpy_lpa(raw, max_iter=12)
     assert {r.v: r.label for r in got.collect()} == want
+    resident, log = label_propagation(e, max_iter=12, broadcast_state="auto")
+    assert {r["regime"] for r in log.rounds} == {"resident"}
+    assert {r.v: r.label for r in resident.collect()} == want
 
 
 def test_pagerank_resume(spark, tmp_path):
@@ -321,3 +333,184 @@ def test_label_spreading_two_clusters(spark):
     # cliques adopt their seed's label
     assert all(out[v] == 7 for v in range(5))
     assert all(out[v + 10] == 9 for v in range(5))
+
+
+# ---------------------------------------------------------------------------
+# resident vs distributed regimes
+# ---------------------------------------------------------------------------
+
+
+def _both_regimes(monkeypatch, run):
+    """``run()`` as is — resident on these small graphs — then with the
+    broadcast ceilings shrunk below any table, so every ``"auto"``
+    regime and ``connected_components`` run the shuffle plan."""
+    resident = run()
+    with monkeypatch.context() as m:
+        m.setattr(regime, "BYTE_LIMIT", -1)
+        m.setattr(regime, "ROW_LIMIT", -1)
+        shuffle = run()
+    return resident, shuffle
+
+
+def _assert_regimes_agree(resident, shuffle, atol=0.0):
+    (a, log_a), (b, log_b) = resident, shuffle
+    assert a.schema == b.schema
+    assert log_a.rounds and log_b.rounds
+    assert {r["regime"] for r in log_a.rounds} == {"resident"}
+    assert {r["regime"] for r in log_b.rounds} == {"shuffle"}
+    assert [r["round"] for r in log_a.rounds] == [r["round"] for r in log_b.rounds]
+    ga = {r[0]: r[1] for r in a.collect()}
+    gb = {r[0]: r[1] for r in b.collect()}
+    assert a.count() == len(ga) and set(ga) == set(gb)
+    if atol:
+        assert all(abs(ga[v] - gb[v]) <= atol for v in ga)
+    else:
+        assert ga == gb
+
+
+CROSS_GRAPHS = {
+    # every GOLDEN fixture at once, as one disjoint union (ids offset
+    # by 1000 per fixture): one distributed run instead of twelve
+    "golden_union": (
+        [
+            (a + 1000 * k, b + 1000 * k)
+            for k, (raw, _) in enumerate(GOLDEN.values())
+            for a, b in raw
+        ],
+        "long",
+    ),
+    "hub": (GOLDEN["hub"][0], "long"),
+    "int_columns": (GOLDEN["bowtie"][0] + [(6, 7)], "int"),
+    "big_ids": (
+        [(2**31 - 1, 2**40), (2**40, 5), (5, 2**31 - 1), (2**40, 2**40 + 1), (7, 8)],
+        "long",
+    ),
+    "one_edge": ([(3, 9)], "long"),
+    # url-like keys: the resident form must order them as Spark does
+    "string_ids": (
+        [("b", "a"), ("a", "é"), ("é", "b"), ("zz", "z"), ("Z", "a")],
+        "string",
+    ),
+}
+
+
+# url-like keys only where the order of ids decides the result and the
+# distributed form takes them: components (the distributed LPA breaks
+# ties on the negated label, so it needs numeric ids)
+NUMERIC_GRAPHS = sorted(n for n, (_, typ) in CROSS_GRAPHS.items() if typ != "string")
+
+
+def _cross_edges(spark, name):
+    raw, typ = CROSS_GRAPHS[name]
+    return spark.createDataFrame(raw, f"src {typ}, dst {typ}")
+
+
+@pytest.mark.parametrize("name", NUMERIC_GRAPHS)
+def test_pagerank_regimes_agree(spark, name, monkeypatch):
+    sym = canonicalize_edges(_cross_edges(spark, name))
+    _assert_regimes_agree(*_both_regimes(monkeypatch, lambda: pagerank(
+        sym, tol=1e-6, max_iter=8, check_every=4, broadcast_state="auto",
+    )), atol=1e-12)
+
+
+@pytest.mark.parametrize("name", sorted(CROSS_GRAPHS))
+def test_components_regimes_agree(spark, name, monkeypatch):
+    e = _cross_edges(spark, name)
+    _assert_regimes_agree(*_both_regimes(monkeypatch, lambda: connected_components(e)))
+
+
+@pytest.mark.parametrize("name", NUMERIC_GRAPHS)
+def test_lpa_regimes_agree(spark, name, monkeypatch):
+    e = _cross_edges(spark, name)
+    _assert_regimes_agree(*_both_regimes(monkeypatch, lambda: label_propagation(
+        e, max_iter=8, check_every=2, broadcast_state="auto",
+    )))
+
+
+@pytest.mark.parametrize("form", ["uniform", "dangling_free", "teleport", "weight"])
+def test_pagerank_forms_regimes_agree(spark, form, monkeypatch):
+    """Directed sinks for the missing-mass closure, the symmetric hub for
+    the dangling-free share; personalized and weighted forms too."""
+    sinks = edges_df(spark, [(0, 1), (1, 2), (3, 2), (3, 4), (4, 0), (0, 5)])
+    kw = dict(tol=1e-9, max_iter=12, check_every=4, broadcast_state="auto")
+    if form == "uniform":
+        run = lambda: pagerank(sinks, **kw)  # noqa: E731
+    elif form == "dangling_free":
+        hub = canonicalize_edges(edges_df(spark, GOLDEN["hub"][0]))
+        run = lambda: pagerank(hub, dangling_free=True, partition_metrics=True, **kw)  # noqa: E731
+    elif form == "teleport":
+        tele = spark.createDataFrame([(0, 0.5), (2, 0.25), (5, 0.25), (77, 0.0)], "v long, s double")
+        run = lambda: pagerank(sinks, teleport=tele, **kw)  # noqa: E731
+    else:
+        wg = sinks.selectExpr("src", "dst", "(src * 3 + dst) % 4 + 1 AS wt")
+        run = lambda: pagerank(wg, weight="wt", **kw)  # noqa: E731
+    resident, shuffle = _both_regimes(monkeypatch, run)
+    _assert_regimes_agree(resident, shuffle, atol=1e-12)
+    if form == "dangling_free":
+        # one resident partition holds every vertex
+        entry = resident[1].rounds[-1]
+        assert entry["partitions"] == entry["n_partitions_nonempty"] == 1
+        assert entry["rows_per_partition"] == [entry["rows_total"]] == [101]
+
+
+@pytest.mark.parametrize("op", ["pagerank", "components", "lpa"])
+def test_iterative_empty_graph(spark, op, monkeypatch):
+    """An empty edge table gives an empty result with the schema of a
+    non-empty run, and an empty log, in both regimes (pagerank used to
+    divide by the zero vertex count)."""
+    def run(e):
+        if op == "pagerank":
+            return pagerank(e, max_iter=4, broadcast_state="auto")
+        if op == "components":
+            return connected_components(e)
+        return label_propagation(e, max_iter=4, broadcast_state="auto")
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    one = edges_df(spark, [(1, 2)])
+    (a, log_a), (b, log_b) = _both_regimes(monkeypatch, lambda: run(empty))
+    (one_a, _), (one_b, _) = _both_regimes(monkeypatch, lambda: run(one))
+    assert a.count() == b.count() == 0
+    assert log_a.rounds == log_b.rounds == []
+    assert a.schema == b.schema == one_a.schema == one_b.schema
+
+
+def _run_op(op, e, **kw):
+    if op == "pagerank":
+        return pagerank(e, tol=1e-10, check_every=4, broadcast_state="auto", **kw)
+    if op == "components":
+        return connected_components(e, check_every=2, **kw)
+    return label_propagation(e, check_every=4, broadcast_state="auto", **kw)
+
+
+@pytest.mark.parametrize("op", ["pagerank", "components", "lpa"])
+@pytest.mark.parametrize("writer", ["resident", "shuffle"])
+def test_resume_across_regimes(spark, tmp_path, monkeypatch, op, writer):
+    """Rounds written by one regime resume in the other; the partial
+    round rule (a round=N dir without _SUCCESS is ignored) holds."""
+    import os
+
+    e = canonicalize_edges(edges_df(spark, GOLDEN["hub"][0]))
+    first_iter = 2 if op == "components" else 8
+    state_dir = str(tmp_path / "state")
+
+    def shrunk(m):
+        m.setattr(regime, "BYTE_LIMIT", -1)
+        m.setattr(regime, "ROW_LIMIT", -1)
+
+    with monkeypatch.context() as m:
+        if writer == "shuffle":
+            shrunk(m)
+        _, log1 = _run_op(op, e, max_iter=first_iter, state_dir=state_dir)
+    assert log1.rounds[-1]["regime"] == writer
+    os.makedirs(f"{state_dir}/round=99")  # a crash mid-write
+    with monkeypatch.context() as m:
+        if writer == "resident":
+            shrunk(m)
+        got, log2 = _run_op(op, e, max_iter=16, state_dir=state_dir, resume=True)
+        fresh, _ = _run_op(op, e, max_iter=16)
+    assert {r["regime"] for r in log2.rounds} == {"resident", "shuffle"} - {writer}
+    assert first_iter - 1 < log2.rounds[0]["round"] < 16
+    a = {r[0]: r[1] for r in got.collect()}
+    b = {r[0]: r[1] for r in fresh.collect()}
+    assert set(a) == set(b)
+    assert all(abs(a[v] - b[v]) < 1e-8 for v in a)

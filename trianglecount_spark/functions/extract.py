@@ -174,19 +174,20 @@ def edges_from_pages(
     against string-keyed DuckDB oracles)."""
     from trianglecount_spark.operators.canonicalize import vertex_dictionary_scalable
 
-    # the mined link table is referenced four times downstream (two url
-    # unions + two mapping joins); persist it so the HTML extractor runs
+    # the mined link table is referenced three times downstream (the url
+    # scan + two mapping joins); persist it so the HTML extractor runs
     # ONCE — at crawl scale this table is materialized to storage anyway
     raw = extract_links(pages).persist()
     if handles is not None:
         # caller-managed cleanup: repeated invocations (bench reps,
         # scaling harness) unpersist these instead of stacking blocks
         handles.append(raw)
-    urls = raw.select(F.col("src_url").alias("url")).unionByName(
-        raw.select(F.col("dst_url").alias("url"))
-    )
+    # ONE scan of raw for both endpoints: a union of two scans lets AQE
+    # run both branches at once, each filling the persisted raw — i.e.
+    # the extractor twice, concurrently
+    urls = raw.select(F.explode(F.array("src_url", "dst_url")).alias("url"))
     # the mapping joins against BOTH edge endpoints below — persist so the
-    # offset join over the (already persisted) numbering runs once
+    # offset lookup over the (already persisted) numbering runs once
     vertices = vertex_dictionary_scalable(urls, "url").persist()
     if handles is not None:
         handles.append(vertices)

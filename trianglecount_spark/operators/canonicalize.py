@@ -176,7 +176,7 @@ def vertex_dictionary_scalable(keys: DataFrame, key_col: str = "url") -> DataFra
     retried partition re-sorts identically and gets identical ids —
     the same guarantee the pandas form had.
 
-    ``numbered`` is consumed twice (size collect + final join) — it is
+    ``numbered`` is consumed twice (size collect + offset lookup) — it is
     persisted so the range shuffle and numbering run once.
     """
     distinct = keys.select(key_col).distinct().repartitionByRange(F.col(key_col))
@@ -191,15 +191,14 @@ def vertex_dictionary_scalable(keys: DataFrame, key_col: str = "url") -> DataFra
         .persist()
     )
     sizes = numbered.groupBy("part_id").agg(F.count("*").alias("n")).collect()
-    offsets = {}
+    # per-partition offsets as an in-plan literal map on part_id: a
+    # driver-built table would cost a Python-worker job to parallelize
+    offsets = []
     acc = 0
     for r in sorted(sizes, key=lambda r: r["part_id"]):
-        offsets[r["part_id"]] = acc
+        offsets += [F.lit(r["part_id"]), F.lit(acc).cast("long")]
         acc += r["n"]
-    off_df = numbered.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)], "part_id int, offset long"
-    )
-    return (
-        numbered.join(F.broadcast(off_df), "part_id")
-        .select(F.col(key_col), (F.col("local_rn") + F.col("offset")).alias("vid"))
+    offset = F.create_map(*offsets)[F.col("part_id")] if offsets else F.lit(0).cast("long")
+    return numbered.select(
+        F.col(key_col), (F.col("local_rn") + offset).alias("vid")
     )

@@ -16,14 +16,30 @@ Both return ``v, comp`` with comp = min vertex id in the component
 (every vertex of the input present, including each component minimum).
 Convergence is detected by state-equality across a check window
 (fixpoint ⇒ equality is exact, see iterative.iterate).
+
+``connected_components`` runs RESIDENT whenever the edge table fits the
+broadcast ceiling (``regime.fits_broadcast``): the same large-star /
+small-star rounds in numpy on the collected edge positions, so the
+state, the stop round and the ``state_dir`` rounds are the distributed
+form's.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from trianglecount_spark.operators.iterative import IterationLog, iterate
+from trianglecount_spark.operators.iterative import (
+    IterationLog,
+    collect_edges,
+    iterate,
+    iterate_resident,
+    local_frame,
+    vertex_field,
+)
+from trianglecount_spark.operators.regime import fits_broadcast
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -56,8 +72,22 @@ def connected_components(
 ) -> tuple[DataFrame, IterationLog]:
     """Large-star/small-star. Input: undirected edge list (any direction;
     self-loops ignored). Iterated state: the shrinking parent-link edge
-    set, converging to stars (u → component min)."""
-    state = _sym(edges).where(F.col("src") != F.col("dst")).distinct()
+    set, converging to stars (u → component min). No rounds run (empty
+    log) when the graph has no edge between distinct vertices."""
+    if fits_broadcast(edges):
+        return _components_resident(edges, max_iter, check_every, state_dir, resume)
+    all_v = (
+        edges.select(F.col("src").alias("v"))
+        .unionByName(edges.select(F.col("dst").alias("v")))
+        .distinct()
+    )
+    state = (
+        _sym(edges).where(F.col("src") != F.col("dst")).distinct()
+        .localCheckpoint(eager=True)
+    )
+    if state.isEmpty():
+        # no rounds to run: every vertex is its own component
+        return all_v.select("v", F.col("v").alias("comp")), IterationLog()
 
     def large_star(e: DataFrame) -> DataFrame:
         # for each u over the symmetric neighborhood: m = min(N(u) ∪ {u});
@@ -100,16 +130,92 @@ def connected_components(
     # converged state: star edges (u → comp_min); add the roots themselves
     comp = final_edges.select(F.col("src").alias("v"), F.col("dst").alias("comp"))
     roots = final_edges.select(F.col("dst").alias("v"), F.col("dst").alias("comp"))
-    all_v = (
-        edges.select(F.col("src").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("v")))
-        .distinct()
-    )
     assigned = comp.unionByName(roots).groupBy("v").agg(F.min("comp").alias("comp"))
     result = all_v.join(assigned, "v", "left").select(
         "v", F.coalesce("comp", "v").alias("comp")
     )
     return result, log
+
+
+def _components_resident(
+    edges, max_iter, check_every, state_dir, resume
+) -> tuple[DataFrame, IterationLog]:
+    """``connected_components``' rounds on vertex positions: the state
+    is the sorted distinct edge set packed as ``src·n + dst``
+    (``ResidentGraph.symmetric_keys``), which makes ``distinct`` a
+    ``np.unique`` and the delta an array comparison."""
+    g = collect_edges(edges)
+    n, spark = g.n, edges.sparkSession
+
+    def distinct(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        return np.unique(a * n + b)
+
+    def mins(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        # per distinct src, min dst — the first of its run in a sorted key
+        first = np.ones(len(src), dtype=bool)
+        first[1:] = src[1:] != src[:-1]
+        m = np.full(n, n)
+        m[src[first]] = dst[first]
+        return src[first], m
+
+    def large_star(key: np.ndarray) -> np.ndarray:
+        a, b = np.divmod(key, n)
+        src, dst = np.divmod(distinct(np.concatenate([a, b]), np.concatenate([b, a])), n)
+        _, m = mins(src, dst)
+        m = np.minimum(m, np.arange(n))
+        up = dst > src
+        return distinct(dst[up], m[src[up]])
+
+    def small_star(key: np.ndarray) -> np.ndarray:
+        a, b = np.divmod(key, n)
+        hi, lo = np.maximum(a, b), np.minimum(a, b)
+        keep = hi != lo
+        src, dst = np.divmod(distinct(hi[keep], lo[keep]), n)
+        roots, m = mins(src, dst)
+        s = np.concatenate([dst, roots])
+        d = np.concatenate([m[src], m[roots]])
+        keep = s != d
+        return distinct(s[keep], d[keep])
+
+    vf = vertex_field(edges)
+    schema = StructType([vf, StructField("comp", vf.dataType, vf.nullable)])
+    edge_schema = StructType(
+        [StructField(c, vf.dataType, vf.nullable) for c in ("src", "dst")]
+    )
+
+    def to_frame(key: np.ndarray) -> DataFrame:
+        a, b = np.divmod(key, n)
+        return local_frame(spark, edge_schema, [g.vertices[a], g.vertices[b]])
+
+    def from_frame(df: DataFrame) -> np.ndarray:
+        t = df.select("src", "dst").toArrow()
+        return distinct(
+            g.positions(t.column("src").to_numpy()), g.positions(t.column("dst").to_numpy())
+        )
+
+    state = g.symmetric_keys()
+    log = IterationLog()
+    if len(state):
+        state, log = iterate_resident(
+            state,
+            lambda key, i: small_star(large_star(key)),
+            lambda prev, cur: 0.0 if np.array_equal(prev, cur) else 1.0,
+            max_iter=max_iter,
+            check_every=check_every,
+            state_dir=state_dir,
+            resume=resume,
+            spark=spark,
+            to_frame=to_frame,
+            from_frame=from_frame,
+        )
+    # comp = min over the star edges (u → root) and the roots themselves,
+    # else the vertex itself — the distributed form's final join
+    a, b = np.divmod(state, n)
+    comp = np.full(n, n)
+    np.minimum.at(comp, a, b)
+    np.minimum.at(comp, b, b)
+    comp = np.where(comp == n, np.arange(n), comp)
+    return local_frame(spark, schema, [g.vertices, g.vertices[comp]]), log
 
 
 def connected_components_minlabel(

@@ -17,7 +17,18 @@ process); PageRank / CC / LPA are driver-mandated extensions
 - per-check metrics: deltas / wall time / partition counts — and, with
   ``partition_metrics=True``, per-partition row counts + skew ratio —
   returned as an IterationLog (the per-partition lineage+metrics the
-  north_rule asks for); ``log.dump(path)`` writes the JSON.
+  north_rule asks for); ``log.dump(path)`` writes the JSON. Every entry
+  names the ``regime`` the round ran in.
+
+The RESIDENT regime is the reference's other half: a graph that fits
+one worker is not partitioned at all (the whole CSR stays on one
+device). ``collect_edges`` pulls an edge table that passed
+``regime.fits_broadcast`` onto the driver once (Spark collects every
+broadcast relation there anyway, so the same ceilings bound it), and
+``iterate_resident`` runs the operator's numpy step with ``iterate``'s
+check cadence, stop rule, log keys and ``state_dir`` round format — so
+a run resumes across regimes. A resident round is microseconds of
+numpy instead of one or more Spark jobs.
 """
 
 from __future__ import annotations
@@ -26,10 +37,15 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from trianglecount_spark.sources import fsio
 
 
 def _partition_rows(state: DataFrame) -> dict:
@@ -46,7 +62,10 @@ def _partition_rows(state: DataFrame) -> dict:
         .count()
         .collect()
     )
-    rows = {int(r["pid"]): int(r["count"]) for r in counts}
+    return _skew_summary({int(r["pid"]): int(r["count"]) for r in counts})
+
+
+def _skew_summary(rows: dict[int, int]) -> dict:
     n = len(rows)
     total = sum(rows.values())
     mx = max(rows.values(), default=0)
@@ -78,6 +97,32 @@ class IterationLog:
             json.dump(self.rounds, f, indent=1)
 
 
+def _last_complete_round(spark: SparkSession, state_dir: str) -> int | None:
+    """The highest ``round=N`` under ``state_dir`` that is resumable.
+
+    Hadoop-FS listing (sources/fsio.py), not os.listdir: state_dir may
+    be HDFS/S3 under spark-submit — resume must find its rounds on the
+    same filesystem the parquet state lives on. Only COMPLETE rounds
+    count: mode("overwrite") deletes the target before writing, so a
+    crash mid-checkpoint leaves a partial round=N dir without its
+    _SUCCESS marker — resume must fall back to the next-lower complete
+    round, not silently read half-written state parquet."""
+    done = [
+        n
+        for n in (
+            int(d.split("=")[1])
+            for d in fsio.list_names(spark, state_dir)
+            if d.startswith("round=")
+        )
+        if fsio.exists(spark, f"{state_dir}/round={n}/_SUCCESS")
+    ]
+    return max(done, default=None)
+
+
+def _is_check(i: int, check_every: int, max_iter: int) -> bool:
+    return (i + 1) % check_every == 0 or i == max_iter - 1
+
+
 def iterate(
     state: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
@@ -90,6 +135,7 @@ def iterate(
     log: IterationLog | None = None,
     materialize_every: int = 1,
     partition_metrics: bool = False,
+    regime: str = "shuffle",
 ) -> tuple[DataFrame, IterationLog]:
     """Run ``step(state, i) -> new_state`` (pure plan transform, NO
     actions) for up to ``max_iter`` rounds. Every ``check_every`` rounds:
@@ -100,34 +146,19 @@ def iterate(
     contraction-style algorithms (PageRank) this is conservative; for
     fixpoint algorithms (min-label, LPA, star-contraction) state equality
     across K rounds implies the fixpoint was reached.
+
+    ``regime`` (``"shuffle"`` or ``"broadcast"``: how ``step`` ships its
+    vertex-sized state) is recorded in every log entry.
     """
     log = log or IterationLog()
     start_round = 0
     spark = state.sparkSession
 
     if resume and state_dir:
-        # Hadoop-FS listing (sources/fsio.py), not os.listdir: state_dir
-        # may be HDFS/S3 under spark-submit — resume must find its
-        # rounds on the same filesystem the parquet state lives on
-        from trianglecount_spark.sources import fsio
-
-        # only COMPLETE rounds are resumable: mode("overwrite") deletes
-        # the target before writing, so a crash mid-checkpoint leaves a
-        # partial round=N dir without its _SUCCESS marker — resume must
-        # fall back to the next-lower complete round, not silently read
-        # half-written state parquet (r4 advisor)
-        done = sorted(
-            n
-            for n in (
-                int(d.split("=")[1])
-                for d in fsio.list_names(spark, state_dir)
-                if d.startswith("round=")
-            )
-            if fsio.exists(spark, f"{state_dir}/round={n}/_SUCCESS")
-        )
-        if done:
-            start_round = done[-1] + 1
-            state = spark.read.parquet(f"{state_dir}/round={done[-1]}")
+        last = _last_complete_round(spark, state_dir)
+        if last is not None:
+            start_round = last + 1
+            state = spark.read.parquet(f"{state_dir}/round={last}")
 
     state = state.localCheckpoint(eager=True)
     prev_checked = state
@@ -147,7 +178,7 @@ def iterate(
         # K=5). Keep K small (≤ ~5) — plan size still grows linearly and
         # Catalyst analysis/codegen goes superlinear well before K=10.
         # Old checkpoint blocks are GC'd by ContextCleaner.
-        is_check = (i + 1) % check_every == 0 or i == max_iter - 1
+        is_check = _is_check(i, check_every, max_iter)
         if (i + 1) % materialize_every == 0 or is_check:
             state = state.localCheckpoint(eager=True)
         if not is_check:
@@ -160,9 +191,147 @@ def iterate(
             delta=delta,
             seconds=round(time.time() - t0, 3),
             partitions=state.rdd.getNumPartitions(),
+            regime=regime,
         )
         if partition_metrics:
             entry.update(_partition_rows(state))
+        log.add(**entry)
+        t0 = time.time()
+        prev_checked = state
+        if delta <= tol:
+            break
+    return state, log
+
+
+# ---------------------------------------------------------------------------
+# resident regime
+# ---------------------------------------------------------------------------
+
+
+def vertex_field(edges: DataFrame) -> StructField:
+    """The ``v`` column the distributed forms return for ``edges``: the
+    common type of ``src`` and ``dst``, nullable if either is. Analysis
+    only, no job."""
+    return (
+        edges.select(F.col("src").alias("v"))
+        .unionByName(edges.select(F.col("dst").alias("v")))
+        .schema["v"]
+    )
+
+
+def local_frame(spark: SparkSession, schema: StructType, columns: list) -> DataFrame:
+    """Driver-side arrays as a DataFrame of exactly ``schema``: a local
+    relation built from Arrow — no job, no Python worker."""
+    table = pa.Table.from_arrays([pa.array(c) for c in columns], names=schema.names)
+    return spark.createDataFrame(table, schema)
+
+
+@dataclass
+class ResidentGraph:
+    """An edge table collected onto the driver: ``vertices`` holds the
+    sorted distinct endpoint ids (sorted as Spark orders them, so the
+    smallest position is the smallest id), ``src``/``dst`` each edge
+    row's endpoint positions in it, in input order, duplicates and
+    self-loops kept."""
+
+    vertices: np.ndarray
+    src: np.ndarray
+    dst: np.ndarray
+    columns: dict[str, np.ndarray]
+
+    @property
+    def n(self) -> int:
+        return len(self.vertices)
+
+    def symmetric_keys(self) -> np.ndarray:
+        """The symmetric simple edge set (self-loops dropped, both
+        directions, distinct) as sorted keys ``a·n + b`` over positions:
+        exact, since positions are < n, and ordered by ``a``, then
+        ``b``; ``np.divmod(keys, n)`` unpacks them."""
+        keep = self.src != self.dst
+        a = np.concatenate([self.src[keep], self.dst[keep]])
+        b = np.concatenate([self.dst[keep], self.src[keep]])
+        return np.unique(a * self.n + b)
+
+    def positions(self, ids: np.ndarray) -> np.ndarray:
+        """Positions of ``ids``, each of which must be a vertex."""
+        pos = np.searchsorted(self.vertices, ids)
+        if len(ids) and (
+            pos.max() >= self.n or not np.array_equal(self.vertices[pos], ids)
+        ):
+            raise ValueError("state ids are not vertices of this graph")
+        return pos
+
+
+def _column(table: pa.Table, name: str) -> np.ndarray:
+    col = table.column(name)
+    if col.null_count:
+        raise ValueError(f"column {name!r} has nulls")
+    return col.to_numpy()
+
+
+def collect_edges(edges: DataFrame, *extra: str) -> ResidentGraph:
+    """Collect ``src, dst`` (plus the ``extra`` columns) onto the driver
+    with one ``toArrow`` job. Callers have checked
+    ``regime.fits_broadcast(edges)``. Null endpoints raise: they are no
+    vertex the numpy rounds can order."""
+    table = edges.select("src", "dst", *extra).toArrow()
+    src, dst = _column(table, "src"), _column(table, "dst")
+    vertices, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    return ResidentGraph(
+        vertices=vertices,
+        src=inv[: len(src)].astype(np.int64),
+        dst=inv[len(src):].astype(np.int64),
+        columns={c: _column(table, c) for c in extra},
+    )
+
+
+def iterate_resident(
+    state: Any,
+    step: Callable[[Any, int], Any],
+    delta_fn: Callable[[Any, Any], float],
+    *,
+    max_iter: int,
+    check_every: int,
+    state_dir: str | None,
+    resume: bool,
+    spark: SparkSession,
+    to_frame: Callable[[Any], DataFrame],
+    from_frame: Callable[[DataFrame], Any],
+    tol: float = 0.0,
+    partition_metrics: bool = False,
+) -> tuple[Any, IterationLog]:
+    """``iterate`` for a driver-resident numpy state: the same check
+    cadence, ``tol`` stop rule, log keys and ``state_dir``/``resume``
+    rounds. ``to_frame``/``from_frame`` convert the state to and from
+    the distributed form's state DataFrame, so rounds written by either
+    loop resume in the other. The state is one partition: ``len(state)``
+    rows."""
+    log = IterationLog()
+    start_round = 0
+    if resume and state_dir:
+        last = _last_complete_round(spark, state_dir)
+        if last is not None:
+            start_round = last + 1
+            state = from_frame(spark.read.parquet(f"{state_dir}/round={last}"))
+    prev_checked = state
+    t0 = time.time()
+    for i in range(start_round, max_iter):
+        state = step(state, i)
+        if not _is_check(i, check_every, max_iter):
+            continue
+        if state_dir:
+            to_frame(state).write.mode("overwrite").parquet(f"{state_dir}/round={i}")
+        delta = float(delta_fn(prev_checked, state))
+        entry = dict(
+            round=i,
+            delta=delta,
+            seconds=round(time.time() - t0, 3),
+            partitions=1,
+            regime="resident",
+        )
+        if partition_metrics:
+            entry.update(_skew_summary({0: len(state)} if len(state) else {}))
         log.add(**entry)
         t0 = time.time()
         prev_checked = state

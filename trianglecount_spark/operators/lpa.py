@@ -19,15 +19,29 @@ frequency aggregate needs (subset rule), so a round's edge-sized work
 is a single co-partitioned stage: no per-round edge shuffle. Top-1 is
 window-free via max_by on the (freq, -label) pair — no row_number
 window, so no skew pile-up on a single partition.
+
+Resident regime (``broadcast_state="auto"`` on an edge table that fits
+the broadcast ceiling): the same synchronous rounds in numpy over the
+collected edge table, labels held as vertex positions (positions sort
+like ids, so "smallest label" is unchanged).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from trianglecount_spark.operators.iterative import IterationLog, iterate
-from trianglecount_spark.operators.regime import resolve_broadcast
+from trianglecount_spark.operators.iterative import (
+    IterationLog,
+    collect_edges,
+    iterate,
+    iterate_resident,
+    local_frame,
+    vertex_field,
+)
+from trianglecount_spark.operators.regime import iterative_regime
 
 
 def label_propagation(
@@ -45,9 +59,16 @@ def label_propagation(
     at call sites where the label state is known to fit an executor
     (≲10M vertices — the gate/bench graphs do, see plans/queries.py),
     where the forced broadcast makes each round's edge-side join
-    shuffle-free."""
-    broadcast_state = resolve_broadcast(broadcast_state, edges)
-    pin = F.broadcast if broadcast_state else (lambda df: df)
+    shuffle-free. ``"auto"`` runs the RESIDENT regime when the edge
+    table fits the broadcast ceiling and the shuffle plan otherwise
+    (``regime.iterative_regime``). An empty edge table gives an empty
+    result and log."""
+    regime = iterative_regime(broadcast_state, edges)
+    vf = vertex_field(edges)
+    schema = StructType([vf, StructField("label", vf.dataType, vf.nullable)])
+    if regime == "resident":
+        return _lpa_resident(edges, schema, max_iter, check_every, state_dir, resume)
+    pin = F.broadcast if regime == "broadcast" else (lambda df: df)
     sym = (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -61,7 +82,9 @@ def label_propagation(
         .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    init = all_v.select("v", F.col("v").alias("label"))
+    init = all_v.select("v", F.col("v").alias("label")).localCheckpoint(eager=True)
+    if init.isEmpty():
+        return local_frame(edges.sparkSession, schema, [[], []]), IterationLog()
 
     def step(labels: DataFrame, i: int) -> DataFrame:
         freq = (
@@ -90,7 +113,60 @@ def label_propagation(
     return iterate(
         init, step, delta_fn, max_iter=max_iter, tol=0.0,
         check_every=check_every, state_dir=state_dir, resume=resume,
+        regime=regime,
     )
+
+
+def _lpa_resident(
+    edges, schema, max_iter, check_every, state_dir, resume
+) -> tuple[DataFrame, IterationLog]:
+    """``label_propagation``'s rounds on vertex positions. Each round's
+    ``(dst, label)`` frequency table is an ``np.unique`` over keys
+    packed as ``dst·n + label``, like ``ResidentGraph.symmetric_keys``."""
+    g = collect_edges(edges)
+    n, spark = g.n, edges.sparkSession
+
+    def to_frame(lab: np.ndarray) -> DataFrame:
+        return local_frame(spark, schema, [g.vertices, g.vertices[lab]])
+
+    if n == 0:
+        return to_frame(np.zeros(0, dtype=np.int64)), IterationLog()
+    src, dst = np.divmod(g.symmetric_keys(), n)
+
+    def step(lab: np.ndarray, i: int) -> np.ndarray:
+        freq_key, freq = np.unique(dst * n + lab[src], return_counts=True)
+        v, label = np.divmod(freq_key, n)
+        # per v: the highest count; lexsort is stable, so ties keep the
+        # ascending label order of the unique keys — smallest label wins
+        order = np.lexsort((-freq, v))
+        v, label = v[order], label[order]
+        first = np.ones(len(v), dtype=bool)
+        first[1:] = v[1:] != v[:-1]
+        out = lab.copy()
+        out[v[first]] = label[first]
+        return out
+
+    def from_frame(df: DataFrame) -> np.ndarray:
+        t = df.select("v", "label").toArrow()
+        lab = np.arange(n)
+        lab[g.positions(t.column("v").to_numpy())] = g.positions(
+            t.column("label").to_numpy()
+        )
+        return lab
+
+    labels, log = iterate_resident(
+        np.arange(n),
+        step,
+        lambda prev, cur: np.count_nonzero(prev != cur),
+        max_iter=max_iter,
+        check_every=check_every,
+        state_dir=state_dir,
+        resume=resume,
+        spark=spark,
+        to_frame=to_frame,
+        from_frame=from_frame,
+    )
+    return to_frame(labels), log
 
 
 def label_spreading(

@@ -559,7 +559,10 @@ def bfs_distances(
         # equal counts ⇒ fixpoint
         return 0.0 if a == b else 1.0
 
-    return iterate(init, step, delta, max_iter=max_rounds, check_every=2)
+    return iterate(
+        init, step, delta, max_iter=max_rounds, check_every=2,
+        regime="broadcast" if broadcast_state else "shuffle",
+    )
 
 
 def sssp_distances(
@@ -622,7 +625,10 @@ def sssp_distances(
     def delta(prev: DataFrame, cur: DataFrame) -> float:
         return 1.0  # fixed-round contract — never converge early
 
-    return iterate(init, step, delta, max_iter=rounds, check_every=rounds)
+    return iterate(
+        init, step, delta, max_iter=rounds, check_every=rounds,
+        regime="broadcast" if broadcast_state else "shuffle",
+    )
 
 
 def k_core(

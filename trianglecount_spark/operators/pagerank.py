@@ -27,15 +27,28 @@ Physical shape per round:
 
 Skewed in-degree (hub pages) lands in the aggregation, not the join —
 partial aggregation absorbs it without salting.
+
+Resident regime (``broadcast_state="auto"`` on an edge table that fits
+the broadcast ceiling): the same algebra as numpy over the collected
+edge table — one ``bincount`` per round instead of one Spark job.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from trianglecount_spark.operators.iterative import IterationLog, iterate
-from trianglecount_spark.operators.regime import resolve_broadcast
+from trianglecount_spark.operators.iterative import (
+    IterationLog,
+    collect_edges,
+    iterate,
+    iterate_resident,
+    local_frame,
+    vertex_field,
+)
+from trianglecount_spark.operators.regime import iterative_regime
 
 
 def pagerank(
@@ -89,7 +102,32 @@ def pagerank(
     sum, so the per-edge fraction is one IEEE division — as
     deterministic as the unweighted 1/outdeg). Same plan shape: the
     normalized weight folds into the cached edge table once.
+
+    ``broadcast_state``: ``True`` broadcasts the rank vector onto the
+    edge table each round, ``False`` (default) shuffles it; ``"auto"``
+    runs the RESIDENT regime when the edge table fits the broadcast
+    ceiling (``regime.iterative_regime``) and the shuffle plan
+    otherwise. Same result, log keys and ``state_dir`` rounds in every
+    regime; an empty edge table gives an empty result and log.
     """
+    if materialize_every is None:
+        materialize_every = 1
+    if materialize_every > 1 and not dangling_free:
+        # the dangling form references tilde twice per round — lazy
+        # chaining doubles plan nodes per round (2^K growth)
+        raise ValueError("materialize_every > 1 requires dangling_free=True")
+    regime = iterative_regime(broadcast_state, edges)
+    schema = StructType([
+        vertex_field(edges),
+        # the rank expression is non-null in the dangling-free and
+        # teleport forms, nullable (a division) in the uniform closure
+        StructField("rank", DoubleType(), not dangling_free and teleport is None),
+    ])
+    if regime == "resident":
+        return _pagerank_resident(
+            edges, schema, alpha, tol, max_iter, check_every, state_dir, resume,
+            dangling_free, teleport, weight, partition_metrics,
+        )
     verts = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
@@ -97,6 +135,9 @@ def pagerank(
         .cache()
     )
     n = verts.count()
+    if n == 0:
+        verts.unpersist()
+        return local_frame(edges.sparkSession, schema, [[], []]), IterationLog()
     if teleport is not None:
         # s joined once onto the (cached) vertex table; absent rows get 0
         verts = (
@@ -116,10 +157,10 @@ def pagerank(
     # rank vector cannot broadcast — the default shuffle join partitions
     # ew on src and ships only the vertex-sized vector per round.
     # "auto" resolves the regime from the edge table's size probe
-    # (regime.resolve_broadcast, shared with the frontier ops); default
-    # stays False because the measured scaling cells
+    # (regime.iterative_regime) and runs resident when the table fits;
+    # default stays False because the measured scaling cells
     # (pagerank10/pagerank10bc) pin their regimes.
-    broadcast_state = resolve_broadcast(broadcast_state, edges)
+    broadcast_state = regime == "broadcast"
     pin = F.broadcast if broadcast_state else (lambda df: df)
     ew = (
         edges.join(outdeg, "src")
@@ -187,12 +228,6 @@ def pagerank(
             .collect()[0][0]
         )
 
-    if materialize_every is None:
-        materialize_every = 1
-    if materialize_every > 1 and not dangling_free:
-        # the dangling form references tilde twice per round — lazy
-        # chaining doubles plan nodes per round (2^K growth)
-        raise ValueError("materialize_every > 1 requires dangling_free=True")
     result, log = iterate(
         init,
         step,
@@ -204,5 +239,68 @@ def pagerank(
         resume=resume,
         materialize_every=materialize_every,
         partition_metrics=partition_metrics,
+        regime=regime,
     )
     return result.select("v", F.col("rank").cast("double")), log
+
+
+def _pagerank_resident(
+    edges, schema, alpha, tol, max_iter, check_every, state_dir, resume,
+    dangling_free, teleport, weight, partition_metrics,
+) -> tuple[DataFrame, IterationLog]:
+    """The resident regime of ``pagerank``: the distributed plan's
+    arithmetic — per-edge ``rank(u)·w(u,v)/W_out(u)`` summed on dst,
+    the dangling-free or missing-mass closure — on the collected edge
+    table, with ``iterate``'s cadence through ``iterate_resident``."""
+    g = collect_edges(edges, *([weight] if weight else []))
+    n, spark = g.n, edges.sparkSession
+
+    def to_frame(r: np.ndarray) -> DataFrame:
+        return local_frame(spark, schema, [g.vertices, r])
+
+    if n == 0:
+        return to_frame(np.zeros(0)), IterationLog()
+    per_edge = (
+        np.ones(len(g.src)) if weight is None else g.columns[weight].astype(np.float64)
+    )
+    w = per_edge / np.bincount(g.src, weights=per_edge, minlength=n)[g.src]
+    if teleport is None:
+        s = None
+        init = np.full(n, 1.0 / n)
+    else:
+        t = teleport.select("v", "s").dropna(subset=["v"]).toArrow()
+        ids = t.column("v").to_numpy()
+        pos = np.minimum(np.searchsorted(g.vertices, ids), n - 1)
+        hit = g.vertices[pos] == ids
+        s = np.zeros(n)
+        s[pos[hit]] = t.column("s").fill_null(0).to_numpy()[hit]
+        init = s
+
+    def step(r: np.ndarray, i: int) -> np.ndarray:
+        rt = alpha * np.bincount(g.dst, weights=r[g.src] * w, minlength=n)
+        if dangling_free:
+            return rt + ((1.0 - alpha) / n if s is None else (1.0 - alpha) * s)
+        missing = 1.0 - rt.sum()
+        return rt + (missing / n if s is None else missing * s)
+
+    def from_frame(df: DataFrame) -> np.ndarray:
+        t = df.select("v", "rank").toArrow()
+        r = np.zeros(n)
+        r[g.positions(t.column("v").to_numpy())] = t.column("rank").to_numpy()
+        return r
+
+    ranks, log = iterate_resident(
+        init,
+        step,
+        lambda prev, cur: np.abs(cur - prev).sum(),
+        max_iter=max_iter,
+        tol=tol,
+        check_every=check_every,
+        state_dir=state_dir,
+        resume=resume,
+        partition_metrics=partition_metrics,
+        spark=spark,
+        to_frame=to_frame,
+        from_frame=from_frame,
+    )
+    return to_frame(ranks), log

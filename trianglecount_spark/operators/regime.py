@@ -7,7 +7,9 @@ question the reference answers once: does the operand fit in one
 worker's memory (the whole CSR resident on-device), or must it be
 partitioned? Here "fits" means "can be broadcast", and the answer comes
 from ``fits_broadcast``; every regime flag goes through
-``resolve_broadcast``.
+``resolve_broadcast``. For the iterative operators a fitting graph is
+not partitioned at all: ``iterative_regime`` sends it to the resident
+regime (operators/iterative.py), the reference's on-device CSR.
 """
 
 from __future__ import annotations
@@ -89,3 +91,15 @@ def resolve_broadcast(flag: bool | str, proxy: DataFrame) -> bool:
     if flag == "auto":
         return fits_broadcast(proxy)
     return bool(flag)
+
+
+def iterative_regime(flag: bool | str, edges: DataFrame) -> str:
+    """The regime of an iterative operator (PageRank, LPA) with a
+    ``broadcast_state`` tri-state: ``"auto"`` is ``"resident"`` when the
+    edge table fits the ceiling — the whole graph iterates on the
+    driver, as the reference keeps a fitting CSR on one device — and
+    ``"shuffle"`` otherwise; ``True``/``False`` keep the distributed
+    ``"broadcast"``/``"shuffle"`` plans."""
+    if flag == "auto":
+        return "resident" if fits_broadcast(edges) else "shuffle"
+    return "broadcast" if resolve_broadcast(flag, edges) else "shuffle"

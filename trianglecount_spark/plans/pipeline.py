@@ -22,9 +22,10 @@ with the three properties the north rule names:
   (operators/iterative.py) — a killed 100-round job continues from its
   last check round, not from scratch.
 - PER-PARTITION LINEAGE + METRICS: each iterative stage's IterationLog
-  (round deltas, wall seconds, per-partition row counts + skew ratio)
-  and each stage's wall time / row count land in
-  ``out_dir/metrics.json``.
+  (round deltas, wall seconds, per-partition row counts + skew ratio,
+  and the regime each round ran in: ``resident`` while the graph fits
+  the broadcast ceiling, else ``shuffle``) and each stage's wall time /
+  row count land in ``out_dir/metrics.json``.
 - CLUSTER JOB FORM: stages exchange data through parquet, and ALL
   control artifacts — ``_SUCCESS`` probes, fingerprint markers,
   ``tc.json``/``metrics.json`` sidecars — go through the Hadoop
@@ -238,6 +239,7 @@ def run_pipeline(
             max_iter=pr_rounds,
             check_every=max(1, pr_rounds // 2),
             dangling_free=True,
+            broadcast_state="auto",
             state_dir=f"{out_dir}/pr_state",
             resume=resume_state,
             partition_metrics=True,
@@ -263,7 +265,7 @@ def run_pipeline(
     if resume and _done(spark, lpa_dir) and fp_fresh("lpa"):
         fin(skipped=True)
     else:
-        labels, log = label_propagation(sym, max_iter=lpa_rounds)
+        labels, log = label_propagation(sym, max_iter=lpa_rounds, broadcast_state="auto")
         labels.write.mode("overwrite").parquet(lpa_dir)
         fp_stamp("lpa")
         fin(skipped=False, rounds=log.rounds)

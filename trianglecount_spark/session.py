@@ -27,6 +27,16 @@ ENGINE_CONFS: dict[str, str] = {
     # tables at web scale must shuffle, AQE decides per-run.
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
     "spark.ui.enabled": "false",
+    # G1 regions of 16 MB, so Spark's 4 MB buffers (every broadcast piece,
+    # task binaries included) are ordinary young objects. Under the default
+    # region size (1 MB at a 2 GB heap, 8 MB at 24 GB) they are humongous:
+    # placed from the top of the heap and freed only at the next young GC,
+    # so how much of the heap a job touches depends on GC timing. Peak RSS
+    # of one perfbench web_pipeline job (2 GB heap, 4 vCPU) had a middle
+    # half of 0.50 GB run to run without this, 0.13 GB with it. Spark
+    # prepends these to extraJavaOptions, so a caller's flags still win.
+    "spark.driver.defaultJavaOptions": "-XX:G1HeapRegionSize=16m",
+    "spark.executor.defaultJavaOptions": "-XX:G1HeapRegionSize=16m",
 }
 
 
