@@ -5,7 +5,9 @@ local[$SPARK_GRAFT_CPUS]:
 
   tc_join      — triangle count, declarative join form (copurchase graph)
   tc_kernel    — triangle count, partitioned-CSR kernel form (same graph)
-  tc_arrays    — triangle count, per-edge array-intersection form
+  tc_arrays    — triangle count, arrays form with its engine-default
+                 regime: resident numpy CSR under the broadcast
+                 ceiling (every sf0.1 graph), array intersection above
   pagerank10   — 10 PageRank rounds on the symmetric copurchase graph
   components   — connected components (large-star/small-star)
   minhash_lsh  — MinHash-LSH near-dup candidates over documents
@@ -73,7 +75,11 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     if reps < 1:
         raise ValueError(f"SPARK_GRAFT_BENCH_REPS must be >= 1, got {reps}")
-    spark = get_spark(app_name="tc-bench", cores=cpus, shuffle_partitions=cpus)
+    # no console progress bars: the last line of stdout is the JSON result
+    spark = get_spark(
+        app_name="tc-bench", cores=cpus, shuffle_partitions=cpus,
+        extra_confs={"spark.ui.showConsoleProgress": "false"},
+    )
     jobs: list[tuple[str, object]] = []
     all_reps: dict[str, list[float]] = {}
     results: dict[str, object] = {}

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from trianglecount_spark.operators import regime
 from trianglecount_spark.session import get_spark
 
 
@@ -38,3 +39,49 @@ GOLDEN = {
         99,
     ),
 }
+
+
+# Adversarial graphs on which the resident and distributed regimes of an
+# operator must agree (tests/test_iterative.py, tests/test_triangles.py).
+CROSS_GRAPHS = {
+    # every GOLDEN fixture at once, as one disjoint union (ids offset
+    # by 1000 per fixture): one distributed run instead of twelve
+    "golden_union": (
+        [
+            (a + 1000 * k, b + 1000 * k)
+            for k, (raw, _) in enumerate(GOLDEN.values())
+            for a, b in raw
+        ],
+        "long",
+    ),
+    "hub": (GOLDEN["hub"][0], "long"),
+    "int_columns": (GOLDEN["bowtie"][0] + [(6, 7)], "int"),
+    "big_ids": (
+        [(2**31 - 1, 2**40), (2**40, 5), (5, 2**31 - 1), (2**40, 2**40 + 1), (7, 8)],
+        "long",
+    ),
+    "one_edge": ([(3, 9)], "long"),
+    # url-like keys: the resident form must order them as Spark does
+    "string_ids": (
+        [("b", "a"), ("a", "é"), ("é", "b"), ("zz", "z"), ("Z", "a")],
+        "string",
+    ),
+}
+
+
+def cross_edges(spark, name):
+    raw, typ = CROSS_GRAPHS[name]
+    return spark.createDataFrame(raw, f"src {typ}, dst {typ}")
+
+
+def both_regimes(monkeypatch, run):
+    """``run()`` as is — resident on these small graphs — then with the
+    broadcast ceilings shrunk below any table, so every ``"auto"``
+    regime, ``connected_components`` and the arrays triangle forms run
+    their distributed plans."""
+    resident = run()
+    with monkeypatch.context() as m:
+        m.setattr(regime, "BYTE_LIMIT", -1)
+        m.setattr(regime, "ROW_LIMIT", -1)
+        shuffle = run()
+    return resident, shuffle

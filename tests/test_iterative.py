@@ -3,7 +3,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.conftest import GOLDEN, edges_df
+from tests.conftest import CROSS_GRAPHS, GOLDEN, both_regimes, cross_edges, edges_df
 from trianglecount_spark.operators import regime
 from trianglecount_spark.operators.canonicalize import canonicalize_edges
 from trianglecount_spark.operators.components import (
@@ -195,7 +195,7 @@ def test_components_both_strategies(spark, name, monkeypatch):
     assert {r.v: r.comp for r in got_star.collect()} == want
     assert {r.v: r.comp for r in got_ml.collect()} == want
     # both regimes of the star-contraction form
-    (res, res_log), (shu, shu_log) = _both_regimes(
+    (res, res_log), (shu, shu_log) = both_regimes(
         monkeypatch, lambda: connected_components(e)
     )
     assert {r["regime"] for r in res_log.rounds} == {"resident"}
@@ -335,21 +335,23 @@ def test_label_spreading_two_clusters(spark):
     assert all(out[v + 10] == 9 for v in range(5))
 
 
+def test_label_spreading_string_labels(spark):
+    """String labels (and ids) spread, ties going to the smallest label:
+    vertex "m" hears "b" and "a" once each and takes "a"."""
+    from trianglecount_spark.operators.lpa import label_spreading
+
+    pairs = [("x", "m"), ("y", "m"), ("m", "z")]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src string, dst string"
+    )
+    seeds = spark.createDataFrame([("x", "b"), ("y", "a")], "v string, label string")
+    out = {r.v: r.label for r in label_spreading(edges, seeds, rounds=2).collect()}
+    assert out == {"x": "b", "y": "a", "m": "a", "z": "a"}
+
+
 # ---------------------------------------------------------------------------
 # resident vs distributed regimes
 # ---------------------------------------------------------------------------
-
-
-def _both_regimes(monkeypatch, run):
-    """``run()`` as is — resident on these small graphs — then with the
-    broadcast ceilings shrunk below any table, so every ``"auto"``
-    regime and ``connected_components`` run the shuffle plan."""
-    resident = run()
-    with monkeypatch.context() as m:
-        m.setattr(regime, "BYTE_LIMIT", -1)
-        m.setattr(regime, "ROW_LIMIT", -1)
-        shuffle = run()
-    return resident, shuffle
 
 
 def _assert_regimes_agree(resident, shuffle, atol=0.0):
@@ -368,61 +370,29 @@ def _assert_regimes_agree(resident, shuffle, atol=0.0):
         assert ga == gb
 
 
-CROSS_GRAPHS = {
-    # every GOLDEN fixture at once, as one disjoint union (ids offset
-    # by 1000 per fixture): one distributed run instead of twelve
-    "golden_union": (
-        [
-            (a + 1000 * k, b + 1000 * k)
-            for k, (raw, _) in enumerate(GOLDEN.values())
-            for a, b in raw
-        ],
-        "long",
-    ),
-    "hub": (GOLDEN["hub"][0], "long"),
-    "int_columns": (GOLDEN["bowtie"][0] + [(6, 7)], "int"),
-    "big_ids": (
-        [(2**31 - 1, 2**40), (2**40, 5), (5, 2**31 - 1), (2**40, 2**40 + 1), (7, 8)],
-        "long",
-    ),
-    "one_edge": ([(3, 9)], "long"),
-    # url-like keys: the resident form must order them as Spark does
-    "string_ids": (
-        [("b", "a"), ("a", "é"), ("é", "b"), ("zz", "z"), ("Z", "a")],
-        "string",
-    ),
-}
-
-
-# url-like keys only where the order of ids decides the result and the
-# distributed form takes them: components (the distributed LPA breaks
-# ties on the negated label, so it needs numeric ids)
+# url-like keys only where the order of ids decides the result:
+# components and LPA (PageRank needs numeric ids)
 NUMERIC_GRAPHS = sorted(n for n, (_, typ) in CROSS_GRAPHS.items() if typ != "string")
-
-
-def _cross_edges(spark, name):
-    raw, typ = CROSS_GRAPHS[name]
-    return spark.createDataFrame(raw, f"src {typ}, dst {typ}")
 
 
 @pytest.mark.parametrize("name", NUMERIC_GRAPHS)
 def test_pagerank_regimes_agree(spark, name, monkeypatch):
-    sym = canonicalize_edges(_cross_edges(spark, name))
-    _assert_regimes_agree(*_both_regimes(monkeypatch, lambda: pagerank(
+    sym = canonicalize_edges(cross_edges(spark, name))
+    _assert_regimes_agree(*both_regimes(monkeypatch, lambda: pagerank(
         sym, tol=1e-6, max_iter=8, check_every=4, broadcast_state="auto",
     )), atol=1e-12)
 
 
 @pytest.mark.parametrize("name", sorted(CROSS_GRAPHS))
 def test_components_regimes_agree(spark, name, monkeypatch):
-    e = _cross_edges(spark, name)
-    _assert_regimes_agree(*_both_regimes(monkeypatch, lambda: connected_components(e)))
+    e = cross_edges(spark, name)
+    _assert_regimes_agree(*both_regimes(monkeypatch, lambda: connected_components(e)))
 
 
-@pytest.mark.parametrize("name", NUMERIC_GRAPHS)
+@pytest.mark.parametrize("name", sorted(CROSS_GRAPHS))
 def test_lpa_regimes_agree(spark, name, monkeypatch):
-    e = _cross_edges(spark, name)
-    _assert_regimes_agree(*_both_regimes(monkeypatch, lambda: label_propagation(
+    e = cross_edges(spark, name)
+    _assert_regimes_agree(*both_regimes(monkeypatch, lambda: label_propagation(
         e, max_iter=8, check_every=2, broadcast_state="auto",
     )))
 
@@ -444,7 +414,7 @@ def test_pagerank_forms_regimes_agree(spark, form, monkeypatch):
     else:
         wg = sinks.selectExpr("src", "dst", "(src * 3 + dst) % 4 + 1 AS wt")
         run = lambda: pagerank(wg, weight="wt", **kw)  # noqa: E731
-    resident, shuffle = _both_regimes(monkeypatch, run)
+    resident, shuffle = both_regimes(monkeypatch, run)
     _assert_regimes_agree(resident, shuffle, atol=1e-12)
     if form == "dangling_free":
         # one resident partition holds every vertex
@@ -467,8 +437,8 @@ def test_iterative_empty_graph(spark, op, monkeypatch):
 
     empty = spark.createDataFrame([], "src long, dst long")
     one = edges_df(spark, [(1, 2)])
-    (a, log_a), (b, log_b) = _both_regimes(monkeypatch, lambda: run(empty))
-    (one_a, _), (one_b, _) = _both_regimes(monkeypatch, lambda: run(one))
+    (a, log_a), (b, log_b) = both_regimes(monkeypatch, lambda: run(empty))
+    (one_a, _), (one_b, _) = both_regimes(monkeypatch, lambda: run(one))
     assert a.count() == b.count() == 0
     assert log_a.rounds == log_b.rounds == []
     assert a.schema == b.schema == one_a.schema == one_b.schema

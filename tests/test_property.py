@@ -4,13 +4,18 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import both_regimes
 from trianglecount_spark.operators import (
     canonicalize_edges,
     orient,
     triangle_count_join,
     triangles_per_vertex_join,
 )
-from trianglecount_spark.operators.triangles import triangles_per_vertex_kernel
+from trianglecount_spark.operators.triangles import (
+    triangle_count_arrays,
+    triangles_per_vertex_arrays,
+    triangles_per_vertex_kernel,
+)
 
 
 def er_graph(n: int, p: float, seed: int):
@@ -31,7 +36,7 @@ def numpy_triangles(pairs):
 
 
 @pytest.mark.parametrize("seed,n,p", [(1, 30, 0.2), (2, 40, 0.15), (3, 25, 0.35)])
-def test_random_graph_all_strategies_agree(spark, seed, n, p):
+def test_random_graph_all_strategies_agree(spark, seed, n, p, monkeypatch):
     pairs = er_graph(n, p, seed)
     want = numpy_triangles(pairs)
     e = spark.createDataFrame(pairs, "src long, dst long")
@@ -48,6 +53,12 @@ def test_random_graph_all_strategies_agree(spark, seed, n, p):
         }
         assert pv == pv_ref, (k, thr)
     assert sum(pv_ref.values()) == want
+    # arrays form, resident and distributed regimes
+    for total, rows in both_regimes(monkeypatch, lambda: (
+        triangle_count_arrays(o), triangles_per_vertex_arrays(o).collect()
+    )):
+        assert total == want
+        assert {r.v: r.tri for r in rows} == pv_ref
 
 
 @pytest.mark.parametrize("seed,n,p", [(11, 30, 0.15), (12, 40, 0.1)])

@@ -1,8 +1,9 @@
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
-from tests.conftest import GOLDEN, edges_df
+from tests.conftest import CROSS_GRAPHS, GOLDEN, both_regimes, edges_df
 from trianglecount_spark.operators import (
     canonicalize_edges,
     orient,
@@ -10,6 +11,7 @@ from trianglecount_spark.operators import (
     triangle_count_kernel,
     triangles_per_vertex_join,
 )
+from trianglecount_spark.operators import triangles
 from trianglecount_spark.operators.triangles import (
     triangle_count_arrays,
     triangles_per_vertex_arrays,
@@ -61,17 +63,99 @@ def test_kernel_salting_path(spark):
 
 
 @pytest.mark.parametrize("name", sorted(GOLDEN))
-def test_arrays_form_totals(spark, name):
+def test_arrays_form_totals(spark, name, monkeypatch):
     _, want = GOLDEN[name]
-    assert triangle_count_arrays(_oriented(spark, name)) == want
+    o = _oriented(spark, name)
+    # resident (these graphs fit the ceiling), then the distributed plan
+    assert both_regimes(monkeypatch, lambda: triangle_count_arrays(o)) == (want, want)
 
 
-def test_arrays_per_vertex_matches_join(spark):
+def test_arrays_per_vertex_matches_join(spark, monkeypatch):
     for name in ("k4", "bowtie", "hub", "diamond"):
         o = _oriented(spark, name)
-        a = {r.v: r.tri for r in triangles_per_vertex_arrays(o).collect()}
+        a, dis = (
+            {r.v: r.tri for r in rows}
+            for rows in both_regimes(
+                monkeypatch, lambda: triangles_per_vertex_arrays(o).collect()  # noqa: B023
+            )
+        )
         b = {r.v: r.tri for r in triangles_per_vertex_join(o).collect()}
         assert a == b, name
+        assert dis == b, name
+
+
+# the iterative operators' adversarial graphs, plus the empty and a
+# triangle-free graph
+ARRAYS_GRAPHS = {
+    **CROSS_GRAPHS,
+    "empty": ([], "long"),
+    "triangle_free": (GOLDEN["bipartite33"][0] + GOLDEN["star5"][0], "long"),
+}
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.mark.parametrize("name", sorted(ARRAYS_GRAPHS))
+def test_arrays_regimes_agree(spark, name, monkeypatch):
+    """Resident = distributed = join: the total, the per-vertex rows
+    and the per-vertex schema."""
+    raw, typ = ARRAYS_GRAPHS[name]
+    e = spark.createDataFrame(raw, f"src {typ}, dst {typ}")
+    o = orient(canonicalize_edges(e)).cache()
+    (t_res, pv_res), (t_dis, pv_dis) = both_regimes(
+        monkeypatch, lambda: (triangle_count_arrays(o), triangles_per_vertex_arrays(o))
+    )
+    assert "LocalRelation" in _analyzed(pv_res)
+    assert "array_intersect" in _analyzed(pv_dis)
+    join = triangles_per_vertex_join(o)
+    assert pv_res.schema == pv_dis.schema
+    assert pv_res.schema["v"].dataType == join.schema["v"].dataType == e.schema["src"].dataType
+    res, dis, ref = (sorted(tuple(r) for r in df.collect()) for df in (pv_res, pv_dis, join))
+    assert res == dis == ref
+    assert all(tri > 0 for _, tri in res)
+    assert t_res == t_dis == sum(tri for _, tri in ref)
+    o.unpersist()
+
+
+def test_arrays_resident_chunks_across_threads(spark, monkeypatch):
+    """Chunks far smaller than the graph's wedge count, spread over the
+    thread pool, leave the resident result unchanged."""
+    raw = [ed for name in ("hub", "k5", "bowtie", "diamond") for ed in GOLDEN[name][0]]
+    o = orient(canonicalize_edges(edges_df(spark, raw))).cache()
+    want = {r.v: r.tri for r in triangles_per_vertex_join(o).collect()}
+    assert spark.sparkContext.defaultParallelism > 1
+    for chunk in (1, 7, 64):
+        monkeypatch.setattr(triangles, "_WEDGE_CHUNK", chunk)
+        assert triangle_count_arrays(o) == sum(want.values())
+        assert {r.v: r.tri for r in triangles_per_vertex_arrays(o).collect()} == want
+    o.unpersist()
+
+
+def test_count_closures_threads_invariant(monkeypatch):
+    """The shared expand → probe → bincount loop gives the same counts
+    on one thread and on several, at every chunk size."""
+    rng = np.random.default_rng(5)
+    n = 300
+    keys = np.unique(rng.integers(0, n, 4000) * n + rng.integers(0, n, 4000))
+    src, dst = (keys // n).astype(np.int32), (keys % n).astype(np.int32)
+    target = np.sort((src.astype(np.int64) << 32) | dst)
+    deg = np.bincount(src, minlength=n)
+    starts = np.cumsum(deg) - deg
+    args = (src, starts[dst], deg[dst], dst, target, n)
+    ref = triangles._count_closures(*args)
+    # brute force: closed wedges (u, v, w) anchored at u
+    edges = set(zip(src.tolist(), dst.tolist()))
+    adj = {u: [w for (a, w) in edges if a == u] for u in range(n)}
+    brute = np.zeros(n, np.int64)
+    for u, v in edges:
+        brute[u] += sum((u, w) in edges for w in adj[v])
+    assert np.array_equal(ref, brute) and ref.sum() > 0
+    for chunk in (1, 13, 1000):
+        monkeypatch.setattr(triangles, "_WEDGE_CHUNK", chunk)
+        for threads in (1, 4):
+            assert np.array_equal(triangles._count_closures(*args, threads=threads), ref)
 
 
 def test_per_vertex_anchor_attribution_tri(spark):

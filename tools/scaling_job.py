@@ -52,6 +52,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from trianglecount_spark.operators import regime  # noqa: E402
 from trianglecount_spark.operators.canonicalize import canonicalize_edges, orient  # noqa: E402
 from trianglecount_spark.operators.pagerank import pagerank  # noqa: E402
 from trianglecount_spark.operators.triangles import (  # noqa: E402
@@ -110,6 +111,20 @@ HARNESS_VERSIONS = {"tc_kernel": 7, "linkpred": 7, "webe2e": 11, "webe2esh": 11}
 HARNESS_VERSION = _DEFAULT_HARNESS  # imported by tools/scaling.py
 
 
+def distributed_count_arrays(oriented) -> int:
+    """``triangle_count_arrays`` in its distributed regime. The rows
+    measure the array-intersection plan at every size, so the broadcast
+    ceilings are shrunk below any graph around the call (as
+    tools/resident_crossover.py does); a fitting graph would otherwise
+    be counted resident on the driver."""
+    saved = regime.BYTE_LIMIT, regime.ROW_LIMIT
+    regime.BYTE_LIMIT, regime.ROW_LIMIT = -1, -1
+    try:
+        return triangle_count_arrays(oriented)
+    finally:
+        regime.BYTE_LIMIT, regime.ROW_LIMIT = saved
+
+
 def main() -> None:
     cpus = int(sys.argv[1])
     job = sys.argv[2]
@@ -146,6 +161,8 @@ def main() -> None:
         "cpus": cpus, "job": job, "edges": n_edges, "vertices": n_vertices,
         "harness": HARNESS_VERSIONS.get(job, _DEFAULT_HARNESS),
     }
+    if job == "tc_arrays" or job.startswith("webe2e"):
+        out["regime"] = "distributed"
 
     if job.startswith("webe2e"):
         # full north-star pipeline: pages(html) -> mined edges -> url
@@ -172,7 +189,7 @@ def main() -> None:
 
     def run_once() -> None:
         if job == "tc_arrays":
-            out["n_triangles"] = triangle_count_arrays(oriented)
+            out["n_triangles"] = distributed_count_arrays(oriented)
         elif job == "tc_join":
             # shuffle closure: the all-shuffle plan is the form whose
             # scaling the two-cluster criterion constrains (broadcast
@@ -236,7 +253,7 @@ def main() -> None:
             sym_w.count()
             ori_w = orient(sym_w).persist()
             ori_w.count()
-            out["n_triangles"] = triangle_count_arrays(ori_w)
+            out["n_triangles"] = distributed_count_arrays(ori_w)
             for h in handles + [sym_w, ori_w]:
                 h.unpersist()
         elif job == "pagerank10":

@@ -17,7 +17,7 @@ hash-partitioned on dst ONCE up front; the broadcast join preserves
 it, and HashPartitioning(dst) satisfies the (v, label) clustering the
 frequency aggregate needs (subset rule), so a round's edge-sized work
 is a single co-partitioned stage: no per-round edge shuffle. Top-1 is
-window-free via max_by on the (freq, -label) pair — no row_number
+window-free via min_by on the (-freq, label) pair — no row_number
 window, so no skew pile-up on a single partition.
 
 Resident regime (``broadcast_state="auto"`` on an edge table that fits
@@ -92,10 +92,11 @@ def label_propagation(
             .groupBy(F.col("dst").alias("v"), F.col("label"))
             .agg(F.count("*").alias("freq"))
         )
-        # top-1 by (freq desc, label asc) without a window: max_by over a
-        # sortable struct — (freq, -label) maximum = smallest label on ties.
+        # top-1 by (freq desc, label asc) without a window: min_by over a
+        # sortable struct — (-freq, label) minimum = smallest label on
+        # ties, for any orderable label type (strings included)
         best = freq.groupBy("v").agg(
-            F.max_by("label", F.struct(F.col("freq"), (-F.col("label")).alias("nl"))).alias(
+            F.min_by("label", F.struct((-F.col("freq")).alias("nf"), F.col("label"))).alias(
                 "new_label"
             )
         )
@@ -181,7 +182,7 @@ def label_spreading(
     every vertex reached by round ``rounds``.
 
     Per round: one shuffle join (current labels onto edge sources), one
-    (v, label) hash aggregate, one window-free top-1 via max_by — the
+    (v, label) hash aggregate, one window-free top-1 via min_by — the
     identical shape as synchronous LPA above, and deterministic for the
     same reason (synchronous rounds + total tie order)."""
     labels = seeds.select("v", "label").localCheckpoint(eager=True)
@@ -191,7 +192,7 @@ def label_spreading(
         ).select(F.col("dst").alias("v"), "label")
         cnt = nbr.groupBy("v", "label").agg(F.count("*").alias("c"))
         cand = cnt.groupBy("v").agg(
-            F.max_by("label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias(
+            F.min_by("label", F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias(
                 "label"
             )
         )

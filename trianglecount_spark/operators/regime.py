@@ -7,9 +7,10 @@ question the reference answers once: does the operand fit in one
 worker's memory (the whole CSR resident on-device), or must it be
 partitioned? Here "fits" means "can be broadcast", and the answer comes
 from ``fits_broadcast``; every regime flag goes through
-``resolve_broadcast``. For the iterative operators a fitting graph is
-not partitioned at all: ``iterative_regime`` sends it to the resident
-regime (operators/iterative.py), the reference's on-device CSR.
+``resolve_broadcast``. For the iterative operators and the arrays
+triangle count a fitting graph is not partitioned at all: it goes to
+the resident regime (operators/iterative.py, ``iterative_regime``;
+operators/triangles.py), the reference's on-device CSR.
 """
 
 from __future__ import annotations

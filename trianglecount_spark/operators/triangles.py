@@ -28,6 +28,14 @@ a→b, a→c, b→c, so it is found exactly once at its anchor a):
    the reference's shared-memory tiling loop for deg+ > 128,
    ShareKernelTCV62_update_v1.cu:100-173).
 
+The arrays form (``triangles_per_vertex_arrays`` / ``triangle_count_arrays``)
+carries the reference's regime rule inside it: a graph that fits one
+worker is not partitioned at all. When ``regime.fits_broadcast(oriented)``
+holds, the oriented edges are collected once (``iterative.collect_edges``)
+and counted in a driver-resident numpy CSR with the kernel's own chunked
+intersection loop, spread over threads — the whole CSR on one device.
+Past the ceiling the distributed arrays plan runs.
+
 Per-vertex output attributes each triangle to its anchor (minimum
 corner), matching the reference's per-vertex g_sum
 (ShareKernelTCV62_update_v1.cu:185).
@@ -35,13 +43,15 @@ corner), matching the reference's per-vertex g_sum
 
 from __future__ import annotations
 
-from typing import Iterable
+import os
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trianglecount_spark.operators.iterative import collect_edges, local_frame
 from trianglecount_spark.operators.regime import fits_broadcast, resolve_broadcast
 
 # ---------------------------------------------------------------------------
@@ -105,20 +115,7 @@ def triangle_count_join(oriented: DataFrame) -> int:
 # Strategy 1b: per-edge sorted-adjacency intersection (JVM arrays)
 # ---------------------------------------------------------------------------
 
-def triangles_per_vertex_arrays(oriented: DataFrame) -> DataFrame:
-    """Per-vertex counts via per-edge adjacency intersection: ``v, tri``.
-
-    The closest declarative analog of the reference kernel (C6 sorted
-    adjacency + T1 membership probes): build N+(u) once as a sorted
-    array, then for every oriented edge (u, v) count
-    |N+(u) ∩ N+(v)| with JVM ``array_intersect`` — each triangle found
-    exactly once at its anchor u (w ∈ N+(u) ∩ N+(v) ⟺ u→v, u→w, v→w).
-
-    vs the wedge join: no 49M-row wedge materialization — one groupBy
-    (adjacency build) + two joins whose payload is one array per row.
-    Work is Σ_(u,v)∈E (d⁺(u)+d⁺(v)) hash-set operations, the same
-    asymptotics as the reference's probe loop.
-    """
+def _per_vertex_arrays_plan(oriented: DataFrame) -> DataFrame:
     adj = oriented.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
     a_u = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("nu"))
     a_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nv"))
@@ -135,9 +132,60 @@ def triangles_per_vertex_arrays(oriented: DataFrame) -> DataFrame:
     )
 
 
+def _resident_counts(oriented: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """The resident regime: sorted vertex ids and each one's anchored
+    triangle count, from one ``toArrow()`` collect.
+
+    The oriented edges, sorted by (src, dst) position, are a CSR: the
+    ``dst`` column is the flat adjacency and ``np.bincount`` of ``src``
+    its row lengths (T7/C6). Every edge (u, v) seeds the wedges
+    (u, v, w), w ∈ N+(v); a wedge closes iff (u, w) is an edge, probed
+    as the key ``(u<<32)|w`` against the sorted edge keys (T1) —
+    positions are below 2^31 under the broadcast ceiling."""
+    g = collect_edges(oriented)
+    keys = np.sort((g.src << 32) | g.dst)
+    src = (keys >> 32).astype(np.int32)
+    dst = (keys & 0xFFFFFFFF).astype(np.int32)
+    deg = np.bincount(src, minlength=g.n)
+    starts = np.cumsum(deg) - deg
+    sc = oriented.sparkSession.sparkContext
+    threads = min(sc.defaultParallelism, os.cpu_count() or 1)
+    counts = _count_closures(src, starts[dst], deg[dst], dst, keys, g.n, threads)
+    return g.vertices, counts
+
+
+def triangles_per_vertex_arrays(oriented: DataFrame) -> DataFrame:
+    """Per-vertex counts via per-edge adjacency intersection: ``v, tri``.
+
+    The closest declarative analog of the reference kernel (C6 sorted
+    adjacency + T1 membership probes): build N+(u) once as a sorted
+    array, then for every oriented edge (u, v) count
+    |N+(u) ∩ N+(v)| with JVM ``array_intersect`` — each triangle found
+    exactly once at its anchor u (w ∈ N+(u) ∩ N+(v) ⟺ u→v, u→w, v→w).
+
+    vs the wedge join: no 49M-row wedge materialization — one groupBy
+    (adjacency build) + two joins whose payload is one array per row.
+    Work is Σ_(u,v)∈E (d⁺(u)+d⁺(v)) hash-set operations, the same
+    asymptotics as the reference's probe loop.
+
+    A graph under the broadcast ceiling (``regime.fits_broadcast``)
+    runs resident instead (``_resident_counts``); its rows are a local
+    relation with the distributed plan's schema, taken from analysis —
+    no job — and, as there, only vertices with ``tri > 0``.
+    """
+    plan = _per_vertex_arrays_plan(oriented)
+    if not fits_broadcast(oriented):
+        return plan
+    vertices, counts = _resident_counts(oriented)
+    nz = counts > 0
+    return local_frame(oriented.sparkSession, plan.schema, [vertices[nz], counts[nz]])
+
+
 def triangle_count_arrays(oriented: DataFrame) -> int:
+    if fits_broadcast(oriented):
+        return int(_resident_counts(oriented)[1].sum())
     row = (
-        triangles_per_vertex_arrays(oriented)
+        _per_vertex_arrays_plan(oriented)
         .agg(F.coalesce(F.sum("tri"), F.lit(0)).alias("t"))
         .collect()[0]
     )
@@ -159,11 +207,13 @@ _K_SEED_SALTED = 2   # salted hub anchor: full N+(u); the kernel expands
 #                      only the group's bucket slice (dst % n_salts == b)
 #                      but probes against the full array
 
-# wedges expanded per kernel pass — caps the int64 probe-key / gather
+# wedges in flight per _count_closures call (one kernel pass; split over
+# the threads of a resident count) — caps the int64 probe-key / gather
 # temporaries (~20 B/wedge) so peak kernel memory stays ~tens of MB per
 # worker regardless of group size (500k vs 2M measured within noise at
 # local[8]/8M edges — the cap is a memory-footprint bound, not a
-# throughput tunable)
+# throughput tunable; four resident threads on 1M-wedge chunks each were
+# measured 1.4x slower than on 250k, from the larger working set)
 _WEDGE_CHUNK = 1_000_000
 
 
@@ -180,6 +230,63 @@ def _gather_segments(starts: np.ndarray, lens: np.ndarray, flat: np.ndarray) -> 
     idx = np.arange(total, dtype=np.int64)
     idx += np.repeat(starts - offs, lens)
     return flat[idx]
+
+
+def _count_closures(
+    anchor: np.ndarray,
+    wstarts: np.ndarray,
+    wlens: np.ndarray,
+    flat: np.ndarray,
+    target_keys: np.ndarray,
+    n_anchors: int,
+    threads: int = 1,
+) -> np.ndarray:
+    """Closed wedges per anchor: the chunked expand → probe → bincount
+    loop shared by the kernel and the resident regime.
+
+    Seed row i (anchor index ``anchor[i]`` < ``n_anchors``) expands to
+    the wedges w ∈ ``flat[wstarts[i] : wstarts[i] + wlens[i]]`` (T2);
+    a wedge closes iff ``(anchor << 32) | w`` is in the sorted
+    ``target_keys`` (T1); closures sum per anchor by bincount (T4).
+    Rows are cut into chunks of about ``_WEDGE_CHUNK / threads``
+    wedges, so the wedge-scale temporaries in flight stay bounded by
+    ``_WEDGE_CHUNK`` regardless of graph size or thread count. With
+    ``threads`` > 1 the chunks run on a thread pool (numpy releases the
+    GIL in these passes); the sums are added in order on the calling
+    thread."""
+    counts = np.zeros(n_anchors, dtype=np.int64)
+    cum = np.cumsum(wlens)
+    total_w = int(cum[-1]) if len(cum) else 0
+    if total_w == 0:
+        return counts
+    step = max(_WEDGE_CHUNK // threads, 1)
+    cuts = np.searchsorted(cum, np.arange(1, -(-total_w // step)) * step) + 1
+    bounds = np.unique(np.concatenate([[0], np.minimum(cuts, len(wlens)), [len(wlens)]]))
+    anchor_keys = anchor.astype(np.int64) << 32
+    # a sentinel above every key: each probe lands on a valid slot
+    targets = np.append(target_keys, np.iinfo(np.int64).max)
+
+    def chunk(lo: int, hi: int) -> tuple[int, np.ndarray]:
+        probe_keys = np.repeat(anchor_keys[lo:hi], wlens[lo:hi])
+        probe_keys |= _gather_segments(wstarts[lo:hi], wlens[lo:hi], flat)
+        hit_pos = np.searchsorted(targets, probe_keys)
+        hits = probe_keys[targets[hit_pos] == probe_keys] >> 32
+        if not len(hits):
+            return 0, hits
+        base = int(hits.min())
+        return base, np.bincount(hits - base)
+
+    def accumulate(mapper) -> None:
+        # parts are added as they arrive, so at most a few are held
+        for base, part in mapper(chunk, bounds[:-1], bounds[1:]):
+            counts[base:base + len(part)] += part
+
+    if threads > 1 and len(bounds) > 2:
+        with ThreadPoolExecutor(threads) as pool:
+            accumulate(pool.map)
+    else:
+        accumulate(map)
+    return counts
 
 
 def _count_partition_arrow(table, n_salts: int):
@@ -266,13 +373,15 @@ def _count_partition_arrow(table, n_salts: int):
     svs = vs_h[order_h]
     h_rows_sorted = halo_rows[order_h]
 
-    # seed expansion: per-element (u, v) pairs from the packed seeds
-    su = v32[seed_rows]
+    # seed expansion: per-element (u, v) pairs from the packed seeds;
+    # anchors are numbered by their index in the group's sorted anchor
+    # ids, which is the space the probe keys and per-anchor sums use
+    anchor_ids, su_idx = np.unique(v32[seed_rows], return_inverse=True)
     s_lens = lens[seed_rows]
     sv_flat = _gather_segments(starts[seed_rows], s_lens, flat32)
     if not len(sv_flat):
         return empty
-    su_rep = np.repeat(su, s_lens)
+    su_rep = np.repeat(su_idx.astype(np.int32), s_lens)
 
     # anchor target set T(u) = ALL (anchor, neighbor) seed pairs — the
     # seed rows carry full N+(u) in every group kind, so this is exact
@@ -299,37 +408,9 @@ def _count_partition_arrow(table, n_salts: int):
     wlens = np.where(has_adj, lens[hrow], 0)
     wstarts = starts[hrow]
 
-    # chunked wedge expansion + closure probe (T1): bounded temporary
-    # footprint regardless of group size; per-anchor partial sums (T4)
-    # accumulate by bincount into the group's anchor table
-    anchor_ids = np.unique(su)
-    counts = np.zeros(len(anchor_ids), dtype=np.int64)
-    cum = np.cumsum(wlens)
-    total_w = int(cum[-1]) if len(cum) else 0
-    if total_w == 0:
-        return empty
-    n_chunks = -(-total_w // _WEDGE_CHUNK)
-    cuts = np.searchsorted(cum, np.arange(1, n_chunks + 1) * _WEDGE_CHUNK) + 1
-    cuts[-1] = len(wlens)
-    prev = 0
-    for cut in cuts:
-        cut = int(cut)
-        if cut <= prev:
-            continue
-        sl = slice(prev, cut)
-        prev = cut
-        w = _gather_segments(wstarts[sl], wlens[sl], flat32)
-        if not len(w):
-            continue
-        a = np.repeat(su_rep[sl], wlens[sl])
-        probe_keys = (a.astype(np.int64) << 32) | w
-        hit_pos = np.searchsorted(target_keys, probe_keys)
-        hit_pos[hit_pos == len(target_keys)] = 0
-        hits = target_keys[hit_pos] == probe_keys
-        if hits.any():
-            apos = np.searchsorted(anchor_ids, a[hits])
-            counts += np.bincount(apos, minlength=len(anchor_ids))
-
+    # chunked wedge expansion + closure probe (T1) + per-anchor partial
+    # sums (T4): bounded temporary footprint regardless of group size
+    counts = _count_closures(su_rep, wstarts, wlens, flat32, target_keys, len(anchor_ids))
     nz = counts > 0
     out_ids = anchor_ids[nz]
     out_v = uni[out_ids] if uni is not None else out_ids.astype(np.int64)
