@@ -3,7 +3,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.conftest import CROSS_GRAPHS, GOLDEN, both_regimes, edges_df
+from tests.conftest import CROSS_GRAPHS, GOLDEN, both_regimes, cross_edges, edges_df
 from trianglecount_spark.operators import (
     canonicalize_edges,
     orient,
@@ -222,3 +222,20 @@ def test_weighted_triangle_total_goldens(spark):
     )
     r3 = weighted_triangle_total(raw3).first()
     assert (r3.n_triangles, r3.weight_total) == (1, 1)
+
+
+@pytest.mark.parametrize("name", sorted(CROSS_GRAPHS))
+def test_kernel_parity_cross_graphs(spark, name):
+    """The kernel, plain and salted, equals the join form on every
+    adversarial graph; ids it cannot pack (strings) raise a clear
+    error instead of a count."""
+    o = orient(canonicalize_edges(cross_edges(spark, name))).cache()
+    want = sorted(tuple(r) for r in triangles_per_vertex_join(o).collect())
+    for kw in ({}, {"salt_threshold": 1, "n_salts": 4}):
+        if CROSS_GRAPHS[name][1] == "string":
+            with pytest.raises(TypeError, match="integral vertex ids"):
+                triangles_per_vertex_kernel(o, n_parts=4, **kw)
+            continue
+        got = sorted(tuple(r) for r in triangles_per_vertex_kernel(o, n_parts=4, **kw).collect())
+        assert got == want, kw
+    o.unpersist()

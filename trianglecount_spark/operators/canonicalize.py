@@ -10,15 +10,101 @@ Reference semantics (KishantLab/TriangleCount):
   subgraph_preprocess.py:176-196; degrees are always GLOBAL undirected
   degrees, tie-breaks use global ids).
 
-All of it is expressed as declarative DataFrame plans so Catalyst handles
-pushdown, partial aggregation, and join strategy. At 100 TB the degree
-table is V rows (billions) — it shuffles; never assume it broadcasts.
+The plan is the contract. Each of ``canonicalize_edges``,
+``canonicalize_edges_packed`` and ``orient`` returns a lazy DataFrame
+plan, so Catalyst handles pushdown, partial aggregation and join
+strategy; at 100 TB the degree table is V rows (billions) — it
+shuffles; never assume it broadcasts.
+
+The attached graph is a driver-side evaluation of that plan. Each
+function also attaches a memoized builder of the ``ResidentGraph`` of
+its rows to the frame it returns (``iterative.attach_graph``). The
+first resident consumer (``regime.fits_resident``, then
+``iterative.collect_edges``) builds it when the symmetric table fits
+the ceilings — twice the raw input's size estimate under the byte
+ceiling, twice its collected rows under the row ceiling: one collect
+of the raw edges, the symmetrize + dedupe as one ``np.unique`` and the
+degrees as one ``np.bincount`` — the reference's preprocessing on the
+device that then holds the CSR (``remove_self_loop``,
+``to_bidirected``, the count-then-fill orientation kernel). A fitting
+job so collects its raw edges once and runs no canonicalize or orient
+shuffle. A builder never runs a ``count()``: past the ceilings, or
+with an estimate it cannot trust, it declines without a job and the
+frame's own probe decides, as without it. A distributed consumer
+(``regime.fits_broadcast``) never builds the graph and runs the plan.
+No function here launches a job when called.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, IntegralType, StringType
+
+from trianglecount_spark.operators import regime
+from trianglecount_spark.operators.iterative import (
+    NullColumnError,
+    ResidentGraph,
+    attach_graph,
+    attached_graph,
+    collect_edges,
+    has_attached_graph,
+)
+
+# exclusive upper bound on ids the packed form accepts: two 31-bit ids
+# pack into one non-negative int64 (src << 32) | dst
+_PACK_LIMIT = 1 << 31
+
+
+def _numpy_orders(*types: DataType) -> bool:
+    """True iff ids of these column types compare, sort and dedupe in
+    numpy exactly as in Spark: all integral, or all binary-collated
+    strings (code-point order is UTF-8 byte order)."""
+    return all(isinstance(t, IntegralType) for t in types) or all(
+        isinstance(t, StringType) and t.collation == "UTF8_BINARY" for t in types
+    )
+
+
+def _canonical_graph(pairs: DataFrame, packed: bool) -> ResidentGraph | None:
+    """The resident evaluation of the canonicalize plans over
+    ``pairs`` (``src, dst``), or None when the symmetric table would
+    not fit the ceilings. The output is up to twice the input, so it
+    runs only when twice Catalyst's estimate of ``pairs`` is under the
+    byte ceiling — never a ``count()``: an unknown or large estimate
+    declines without a job and the frame's own probe decides. Then one
+    ``toArrow()``; rows with a null endpoint and self-loops dropped as
+    the plan's ``src != dst`` (and the not-null filters Catalyst infers
+    from it) drops them; None, before any dedupe, when twice the rows
+    left exceed the row ceiling; else the symmetric distinct edge set
+    from ``ResidentGraph.symmetric_keys``. ``packed`` applies the
+    packed form's contract to the rows left after the null filter,
+    self-loops included: an id outside [0, 2^31) raises, as the plan's
+    ``raise_error`` does."""
+    est = regime.estimated_bytes(pairs)
+    if est is None or 2 * est > regime.BYTE_LIMIT:
+        return None
+    t = pairs.toArrow().drop_null()
+    s, d = t.column("src"), t.column("dst")
+    if packed:
+        s64, d64 = pc.cast(s, "int64"), pc.cast(d, "int64")
+        bad = pc.or_(
+            pc.or_(pc.less(s64, 0), pc.greater_equal(s64, _PACK_LIMIT)),
+            pc.or_(pc.less(d64, 0), pc.greater_equal(d64, _PACK_LIMIT)),
+        )
+        if pc.any(bad).as_py():
+            i = pc.index(bad, True).as_py()
+            raise ValueError(
+                f"canonicalize_edges_packed: edge ({s[i]}, {d[i]}) has an id "
+                "outside [0, 2^31); use canonicalize_edges"
+            )
+    t = t.filter(pc.not_equal(s, d))
+    if 2 * t.num_rows > regime.ROW_LIMIT:
+        return None
+    g = ResidentGraph.from_ids(t.column("src").to_numpy(), t.column("dst").to_numpy(), {})
+    src, dst = np.divmod(g.symmetric_keys(), g.n)
+    return ResidentGraph(g.vertices, src, dst, {})
 
 
 def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -35,15 +121,12 @@ def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col("src") != F.col("dst")
     )
-    return (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .dropDuplicates(["src", "dst"])
-    )
-
-
-# exclusive upper bound on ids the packed form accepts: two 31-bit ids
-# pack into one non-negative int64 (src << 32) | dst
-_PACK_LIMIT = 1 << 31
+    sym = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).dropDuplicates(["src", "dst"])
+    if _numpy_orders(*(f.dataType for f in e.schema)):
+        attach_graph(sym, lambda: _canonical_graph(e, packed=False))
+    return sym
 
 
 def canonicalize_edges_packed(
@@ -62,8 +145,9 @@ def canonicalize_edges_packed(
     dense from 0; the kernel applies the same int32 downcast,
     triangles.py). The contract is checked in-plan, on the rows the
     distinct reads anyway: an id outside it fails the job through
-    ``raise_error`` instead of packing to a wrong key. Output columns
-    carry the same types as ``canonicalize_edges``'s.
+    ``raise_error`` instead of packing to a wrong key (the attached
+    graph raises the same way). Output columns carry the same types as
+    ``canonicalize_edges``'s.
     """
     # the pair form's union widens both output columns to the common
     # type of the two inputs; coalesce resolves the same type
@@ -91,10 +175,14 @@ def canonicalize_edges_packed(
     ).unionByName(
         e.select((F.shiftleft(F.col("dst"), 32) + F.col("src")).alias("pk"))
     )
-    return packed.distinct().select(
+    sym = packed.distinct().select(
         F.shiftright("pk", 32).cast(id_type).alias("src"),
         (F.col("pk") % F.lit(1 << 32)).cast(id_type).alias("dst"),
     )
+    pairs = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if all(isinstance(f.dataType, IntegralType) for f in pairs.schema):
+        attach_graph(sym, lambda: _canonical_graph(pairs, packed=True))
+    return sym
 
 
 def degrees(sym_edges: DataFrame) -> DataFrame:
@@ -118,12 +206,16 @@ def orient(sym_edges: DataFrame, deg: DataFrame | None = None) -> DataFrame:
     then dst side) + a codegen'd filter. No prefix-sum / CSR build is
     needed at the logical level — positional layout is a kernel-local
     concern (see triangles.triangle_count_kernel).
+
+    Without an explicit ``deg`` the frame carries the resident
+    evaluation (``_oriented_graph``); with one, only the plan.
     """
+    resident = deg is None
     if deg is None:
         deg = degrees(sym_edges)
     d_src = deg.select(F.col("v").alias("src"), F.col("deg").alias("deg_src"))
     d_dst = deg.select(F.col("v").alias("dst"), F.col("deg").alias("deg_dst"))
-    return (
+    oriented = (
         sym_edges.join(d_src, "src")
         .join(d_dst, "dst")
         .where(
@@ -132,6 +224,36 @@ def orient(sym_edges: DataFrame, deg: DataFrame | None = None) -> DataFrame:
         )
         .select("src", "dst")
     )
+    if resident and _numpy_orders(*(f.dataType for f in oriented.schema)):
+        attach_graph(oriented, lambda: _oriented_graph(sym_edges))
+    return oriented
+
+
+def _oriented_graph(sym_edges: DataFrame) -> ResidentGraph | None:
+    """The resident evaluation of ``orient(sym_edges)``, from the graph
+    of ``sym_edges``: the one it carries (for a canonical table, a memo
+    hit), or for a frame with none, one collect when Catalyst's
+    estimate of it is under the byte ceiling. None when that graph
+    declines or the estimate is unknown or large (no job: the frame's
+    own probe decides), or when ``sym_edges`` has null endpoints (never
+    a canonical table; the plan decides). Degrees by ``np.bincount`` of
+    ``dst`` — one per row, as ``degrees`` counts — and the orientation
+    rule on positions, which follow id order. ``deg(src) > 0`` mirrors
+    the plan's inner join for input that is not symmetric."""
+    if has_attached_graph(sym_edges):
+        g = attached_graph(sym_edges)
+    elif regime.fits_estimate(sym_edges):
+        try:
+            g = collect_edges(sym_edges)
+        except NullColumnError:
+            return None
+    else:
+        return None
+    if g is None:
+        return None
+    deg = np.bincount(g.dst, minlength=g.n)
+    ds, dd = deg[g.src], deg[g.dst]
+    return g.subgraph((ds > 0) & ((ds < dd) | ((ds == dd) & (g.dst < g.src))))
 
 
 def vertex_dictionary(keys: DataFrame, key_col: str = "url") -> DataFrame:

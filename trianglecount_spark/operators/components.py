@@ -18,7 +18,7 @@ Convergence is detected by state-equality across a check window
 (fixpoint ⇒ equality is exact, see iterative.iterate).
 
 ``connected_components`` runs RESIDENT whenever the edge table fits the
-broadcast ceiling (``regime.fits_broadcast``): the same large-star /
+broadcast ceiling (``regime.fits_resident``): the same large-star /
 small-star rounds in numpy on the collected edge positions, so the
 state, the stop round and the ``state_dir`` rounds are the distributed
 form's.
@@ -39,7 +39,7 @@ from trianglecount_spark.operators.iterative import (
     local_frame,
     vertex_field,
 )
-from trianglecount_spark.operators.regime import fits_broadcast
+from trianglecount_spark.operators.regime import fits_resident
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -74,7 +74,7 @@ def connected_components(
     self-loops ignored). Iterated state: the shrinking parent-link edge
     set, converging to stars (u → component min). No rounds run (empty
     log) when the graph has no edge between distinct vertices."""
-    if fits_broadcast(edges):
+    if fits_resident(edges):
         return _components_resident(edges, max_iter, check_every, state_dir, resume)
     all_v = (
         edges.select(F.col("src").alias("v"))

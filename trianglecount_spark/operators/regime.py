@@ -10,12 +10,22 @@ from ``fits_broadcast``; every regime flag goes through
 ``resolve_broadcast``. For the iterative operators and the arrays
 triangle count a fitting graph is not partitioned at all: it goes to
 the resident regime (operators/iterative.py, ``iterative_regime``;
-operators/triangles.py), the reference's on-device CSR.
+operators/triangles.py), the reference's on-device CSR, built once per
+job from the raw edges (operators/canonicalize.py); those consumers ask
+``fits_resident``, which builds the graph a frame carries, while
+``fits_broadcast`` never builds one. Resident was measured faster than
+the distributed plans at every size run, up to 16M raw edges (31.9M
+symmetric rows, just under ``ROW_LIMIT``; tools/resident_crossover.py,
+README "Measured regime rules"), so the ceilings below stand as the
+crossover. Larger raw inputs are unmeasured: there the builders
+decline and the frame's own probe decides.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from trianglecount_spark.operators.iterative import attached_graph, built_graph
 
 # Broadcast ceilings: 32M packed edges ≈ 512 MB serialized — the
 # practical single-executor broadcast ceiling. Tests shrink them to
@@ -59,6 +69,13 @@ def estimated_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def fits_estimate(df: DataFrame) -> bool:
+    """True iff Catalyst's size estimate of ``df`` is under the byte
+    ceiling — no job."""
+    est = estimated_bytes(df)
+    return est is not None and est <= BYTE_LIMIT
+
+
 def fits_broadcast(df: DataFrame) -> bool:
     """True iff ``df`` fits the broadcast ceiling.
 
@@ -66,12 +83,33 @@ def fits_broadcast(df: DataFrame) -> bool:
     without CBO table stats Catalyst only ever overestimates join
     lineage (measured 55 GB claimed for a 4 MB self-join projection),
     so a small estimate is reliable. An unknown or over-ceiling
-    estimate is settled by one ``count()`` against the row ceiling — a
-    map-side partial agg, noise next to either regime it guards."""
-    est = estimated_bytes(df)
-    if est is not None and est <= BYTE_LIMIT:
+    estimate is settled by the frame's resident graph when one is
+    already built (``iterative.attach_graph``; its row count against
+    ``ROW_LIMIT``, no job), else by one ``count()`` against the row
+    ceiling — a map-side partial agg, noise next to either regime it
+    guards. Nothing is collected here: a distributed consumer pays
+    only this probe."""
+    if fits_estimate(df):
         return True
-    return df.count() <= ROW_LIMIT
+    g = built_graph(df)
+    if g is not None:
+        return len(g.src) <= ROW_LIMIT
+    # no count passes a negative ceiling (how the distributed plans are
+    # forced on small graphs): skip the job
+    return ROW_LIMIT >= 0 and df.count() <= ROW_LIMIT
+
+
+def fits_resident(df: DataFrame) -> bool:
+    """``fits_broadcast`` for a consumer that collects ``df`` next
+    (``iterative.collect_edges``): the graph ``df`` carries is built
+    first — its builder decides from estimates alone, so this launches
+    no job beyond its one collect — and a graph within ``ROW_LIMIT``
+    fits; a frame with no graph, or whose builder declined, goes to
+    ``fits_broadcast``."""
+    g = attached_graph(df)
+    if g is not None and len(g.src) <= ROW_LIMIT:
+        return True
+    return fits_broadcast(df)
 
 
 def resolve_broadcast(flag: bool | str, proxy: DataFrame) -> bool:
@@ -102,5 +140,5 @@ def iterative_regime(flag: bool | str, edges: DataFrame) -> str:
     ``"shuffle"`` otherwise; ``True``/``False`` keep the distributed
     ``"broadcast"``/``"shuffle"`` plans."""
     if flag == "auto":
-        return "resident" if fits_broadcast(edges) else "shuffle"
+        return "resident" if fits_resident(edges) else "shuffle"
     return "broadcast" if resolve_broadcast(flag, edges) else "shuffle"

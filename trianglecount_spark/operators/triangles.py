@@ -30,7 +30,7 @@ a→b, a→c, b→c, so it is found exactly once at its anchor a):
 
 The arrays form (``triangles_per_vertex_arrays`` / ``triangle_count_arrays``)
 carries the reference's regime rule inside it: a graph that fits one
-worker is not partitioned at all. When ``regime.fits_broadcast(oriented)``
+worker is not partitioned at all. When ``regime.fits_resident(oriented)``
 holds, the oriented edges are collected once (``iterative.collect_edges``)
 and counted in a driver-resident numpy CSR with the kernel's own chunked
 intersection loop, spread over threads — the whole CSR on one device.
@@ -50,9 +50,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from trianglecount_spark.operators.iterative import collect_edges, local_frame
-from trianglecount_spark.operators.regime import fits_broadcast, resolve_broadcast
+from trianglecount_spark.operators.regime import (
+    fits_broadcast,
+    fits_resident,
+    resolve_broadcast,
+)
 
 # ---------------------------------------------------------------------------
 # Strategy 1: declarative join form
@@ -168,13 +173,13 @@ def triangles_per_vertex_arrays(oriented: DataFrame) -> DataFrame:
     Work is Σ_(u,v)∈E (d⁺(u)+d⁺(v)) hash-set operations, the same
     asymptotics as the reference's probe loop.
 
-    A graph under the broadcast ceiling (``regime.fits_broadcast``)
+    A graph under the broadcast ceiling (``regime.fits_resident``)
     runs resident instead (``_resident_counts``); its rows are a local
     relation with the distributed plan's schema, taken from analysis —
     no job — and, as there, only vertices with ``tri > 0``.
     """
     plan = _per_vertex_arrays_plan(oriented)
-    if not fits_broadcast(oriented):
+    if not fits_resident(oriented):
         return plan
     vertices, counts = _resident_counts(oriented)
     nz = counts > 0
@@ -182,7 +187,7 @@ def triangles_per_vertex_arrays(oriented: DataFrame) -> DataFrame:
 
 
 def triangle_count_arrays(oriented: DataFrame) -> int:
-    if fits_broadcast(oriented):
+    if fits_resident(oriented):
         return int(_resident_counts(oriented)[1].sum())
     row = (
         _per_vertex_arrays_plan(oriented)
@@ -474,7 +479,16 @@ def triangles_per_vertex_kernel(
     job's dominant bytes) shrinks with the edge cut. Vertices absent
     from ``parts`` fall back to the hash rule; the count is invariant
     to ANY assignment (asserted by the oracle-gated query).
+
+    Vertex ids must be integral (the kernel packs them into int64 probe
+    keys); other id types raise ``TypeError``.
     """
+    for f in oriented.select("src", "dst").schema:
+        if not isinstance(f.dataType, IntegralType):
+            raise TypeError(
+                f"triangles_per_vertex_kernel needs integral vertex ids, got "
+                f"{f.name} {f.dataType.simpleString()}; use triangles_per_vertex_join"
+            )
     if n_parts is None:
         n_parts = oriented.sparkSession.sparkContext.defaultParallelism
 

@@ -114,8 +114,10 @@ def run_pipeline(
         orient,
     )
     from trianglecount_spark.operators.components import connected_components
+    from trianglecount_spark.operators.iterative import collect_edges
     from trianglecount_spark.operators.lpa import label_propagation
     from trianglecount_spark.operators.pagerank import pagerank
+    from trianglecount_spark.operators.regime import fits_resident
     from trianglecount_spark.operators.triangles import triangle_count_arrays
 
     fsio.mkdirs(spark, out_dir)
@@ -196,8 +198,6 @@ def run_pipeline(
         else canonicalize_edges
     )
     sym = canon(edges).persist()
-    n_edges = sym.count() // 2
-    metrics["n_und_edges"] = n_edges
 
     # ---- stage: triangle count --------------------------------------
     fin = stage("tc")
@@ -213,6 +213,12 @@ def run_pipeline(
         )
         fp_stamp("tc")
         fin(skipped=False)
+    # a fitting graph is counted from its resident graph — built by the
+    # stage above unless it was skipped — so the canonicalize plan
+    # never runs
+    metrics["n_und_edges"] = (
+        len(collect_edges(sym).src) if fits_resident(sym) else sym.count()
+    ) // 2
 
     # ---- stage: pagerank (mid-iteration resumable) -------------------
     fin = stage("pagerank")

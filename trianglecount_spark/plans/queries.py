@@ -23,7 +23,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trianglecount_spark.operators.canonicalize import canonicalize_edges, degrees, orient
+from trianglecount_spark.operators.canonicalize import (
+    canonicalize_edges,
+    canonicalize_edges_packed,
+    degrees,
+    orient,
+)
 from trianglecount_spark.operators.components import connected_components
 from trianglecount_spark.operators.lpa import label_propagation
 from trianglecount_spark.operators.pagerank import pagerank
@@ -186,6 +191,11 @@ sh AS (
 
 def q_copurchase_edges(spark, sf_dir):
     return copurchase_sym(spark, sf_dir)
+
+
+def q_copurchase_edges_packed(spark, sf_dir):
+    # part keys are dense from 1: inside the packed form's [0, 2^31)
+    return canonicalize_edges_packed(copurchase_raw(spark, sf_dir))
 
 
 def q_degrees(spark, sf_dir):
@@ -3631,6 +3641,7 @@ def _hits_sql(rounds: int) -> str:
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "copurchase_edges": q_copurchase_edges,
+        "copurchase_edges_packed": q_copurchase_edges_packed,
         "degrees": q_degrees,
         "degree_histogram": q_degree_histogram,
         "degree_powerlaw": q_degree_powerlaw,
@@ -4773,6 +4784,7 @@ def oracle() -> dict[str, str]:
         pii_red_sql = f"regexp_replace({pii_red_sql}, '{pat}', '{repl}', 'g')"
     return {
         "copurchase_edges": _CP + "SELECT src, dst FROM und",
+        "copurchase_edges_packed": _CP + "SELECT src, dst FROM und",
         "degrees": _CP + "SELECT v, deg FROM deg",
         "degree_histogram": _CP
         + "SELECT deg, count(*) AS n_vertices FROM deg GROUP BY deg",
