@@ -8,7 +8,8 @@ local[$SPARK_GRAFT_CPUS]:
   tc_arrays    — triangle count, arrays form with its engine-default
                  regime: resident numpy CSR under the broadcast
                  ceiling (every sf0.1 graph), array intersection above
-  pagerank10   — 10 PageRank rounds on the symmetric copurchase graph
+  pagerank10   — 10 PageRank rounds on the symmetric copurchase graph,
+                 engine-default regime (resident under the ceiling)
   components   — connected components (large-star/small-star)
   minhash_lsh  — MinHash-LSH near-dup candidates over documents
   emb_knn      — exact cosine top-5 over embeddings (matmul scan kernel)
@@ -24,7 +25,7 @@ local[$SPARK_GRAFT_CPUS]:
                  plan shape of the 10^12-url regime, where the url
                  dictionary can never broadcast (scaling-criterion twin)
 
-tc_arrays and components read the cached table through a fresh
+tc_arrays, pagerank10 and components read the cached table through a fresh
 projection on every rep: a frame keeps the resident graph built from
 it (operators/iterative.py, ``attach_graph``), so reusing one frame
 would time the collect once and a dictionary lookup thereafter.
@@ -89,6 +90,7 @@ def main() -> None:
     all_reps: dict[str, list[float]] = {}
     results: dict[str, object] = {}
     derived: dict[str, object] = {}
+    regimes: dict[str, str] = {}
 
     def bench(name: str, fn) -> None:
         jobs.append((name, fn))
@@ -122,19 +124,15 @@ def main() -> None:
     n_iter = 10
 
     def run_pagerank():
-        # materialize_every=4: sf0.1/local[32] is the overhead-bound
-        # regime where lazy 4-round chains are ~2x faster (see
-        # operators/pagerank.py — at 10x the edges per core the eager
-        # default wins instead, which is what tools/scaling.py measures)
-        ranks, _log = pagerank(
-            sym,
+        # the engine-default regime, recorded under derived.regimes
+        ranks, log = pagerank(
+            sym.select("src", "dst"),
             tol=0.0,
             max_iter=n_iter,
             check_every=n_iter,
             dangling_free=True,
-            materialize_every=4,
-            broadcast_state=True,
         )
+        regimes["pagerank10"] = log.rounds[-1]["regime"]
         return ranks.count()
 
     bench("pagerank10", run_pagerank)
@@ -284,6 +282,7 @@ def main() -> None:
     derived["web_triangles"] = results["web_e2e"]
     derived["n_triangles"] = n_tri
     derived["n_und_edges"] = n_und_edges
+    derived["regimes"] = regimes
     # r3/r4 comparability: "value" now sums 12 queries (the two
     # criterion-regime rows were added in r5); this is the old 10-query
     # total for round-over-round comparison

@@ -77,11 +77,27 @@ def cross_edges(spark, name):
 def both_regimes(monkeypatch, run):
     """``run()`` as is — resident on these small graphs — then with the
     broadcast ceilings shrunk below any table, so every ``"auto"``
-    regime, ``connected_components`` and the arrays triangle forms run
-    their distributed plans."""
+    regime, PageRank, LPA, ``connected_components`` and the arrays
+    triangle forms run their shuffle plans."""
     resident = run()
     with monkeypatch.context() as m:
         m.setattr(regime, "BYTE_LIMIT", -1)
         m.setattr(regime, "ROW_LIMIT", -1)
         shuffle = run()
     return resident, shuffle
+
+
+def broadcast_regime(monkeypatch, run, edges):
+    """``run()`` with the byte ceiling shrunk below any table and the row
+    ceiling at the vertex count of ``edges``: an edge table with more
+    rows than vertices no longer fits while its vertex table does, so
+    PageRank's ``"auto"`` broadcasts its vertex-sized state. None when
+    ``edges`` has no more rows than vertices (the run would stay
+    resident)."""
+    n = edges.select("src").union(edges.select("dst")).distinct().count()
+    if edges.count() <= n:
+        return None
+    with monkeypatch.context() as m:
+        m.setattr(regime, "BYTE_LIMIT", -1)
+        m.setattr(regime, "ROW_LIMIT", n)
+        return run()

@@ -243,9 +243,9 @@ def test_one_collect_per_job(spark, tmp_path):
     try:
         sym = canonicalize_edges(raw).persist()
         tri = triangle_count_arrays(orient(sym))
-        ranks, pr_log = pagerank(sym, max_iter=4, check_every=2, broadcast_state="auto")
+        ranks, pr_log = pagerank(sym, max_iter=4, check_every=2)
         comp, cc_log = connected_components(sym)
-        labels, lpa_log = label_propagation(sym, max_iter=4, broadcast_state="auto")
+        labels, lpa_log = label_propagation(sym, max_iter=4)
         jobs = list(sc.statusTracker().getJobIdsForGroup("one-collect"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -219,6 +219,22 @@ def test_pipeline_records_iterative_regimes(spark, tmp_path, monkeypatch):
     assert all(abs(res["pagerank"][v] - shu["pagerank"][v]) < 1e-12 for v in res["pagerank"])
 
 
+def test_driver_heap_defaults_to_half_the_host(monkeypatch):
+    """Half of MemTotal, capped at 24g; SPARK_GRAFT_DRIVER_MEM wins."""
+    from trianglecount_spark.session import default_driver_memory, driver_heap_mb
+
+    gib_kb = 1024 * 1024
+    assert driver_heap_mb(16479424) == 8046  # a 16 GB host
+    assert driver_heap_mb(16 * gib_kb) == 8 * 1024
+    assert driver_heap_mb(48 * gib_kb) == 24 * 1024
+    assert driver_heap_mb(125 * gib_kb) == 24 * 1024  # stays 24g
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    mb = int(default_driver_memory().removesuffix("m"))
+    assert 1 <= mb <= 24 * 1024
+
+
 def test_scaling_pair_table_skips_harness_mismatch():
     """A lo/hi pair measured under different harness versions is not a
     speedup: pair_table leaves it out of the table and the efficiencies

@@ -3,13 +3,17 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.conftest import CROSS_GRAPHS, GOLDEN, both_regimes, cross_edges, edges_df
+from tests.conftest import (
+    CROSS_GRAPHS,
+    GOLDEN,
+    both_regimes,
+    broadcast_regime,
+    cross_edges,
+    edges_df,
+)
 from trianglecount_spark.operators import regime
 from trianglecount_spark.operators.canonicalize import canonicalize_edges
-from trianglecount_spark.operators.components import (
-    connected_components,
-    connected_components_minlabel,
-)
+from trianglecount_spark.operators.components import connected_components
 from trianglecount_spark.operators.lpa import label_propagation
 from trianglecount_spark.operators.pagerank import pagerank
 
@@ -142,7 +146,7 @@ def test_pagerank_general_path_no_per_round_collect(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "collect", counting)
     raw = [(0, 1), (1, 2), (3, 2), (3, 4), (4, 0)]
-    pagerank(edges_df(spark, raw), tol=0.0, max_iter=6, check_every=6)
+    pagerank(edges_df(spark, raw), tol=0.0, max_iter=6, check_every=6, broadcast_state=False)
     assert calls["n"] == 1, f"expected only the delta_fn collect, saw {calls['n']}"
 
 
@@ -160,40 +164,11 @@ def test_pagerank_dangling_free_matches_default(spark):
         assert abs(ga[v] - gb[v]) < 1e-12, (v, ga[v], gb[v])
 
 
-def test_pagerank_materialize_cadence_invariant(spark):
-    # lazy K-round chains (materialize_every > 1) are a physical-plan
-    # change only: the arithmetic graph is identical, so ranks must match
-    # the eager per-round form exactly, including at a cadence that does
-    # not divide max_iter
-    raw, _ = GOLDEN["hub"]
-    sym = canonicalize_edges(edges_df(spark, raw))
-    base, _ = pagerank(
-        sym, tol=0.0, max_iter=7, check_every=7, dangling_free=True,
-        materialize_every=1,
-    )
-    gb = {r.v: r.rank for r in base.collect()}
-    for k in (3, 4):
-        got, _ = pagerank(
-            sym, tol=0.0, max_iter=7, check_every=7, dangling_free=True,
-            materialize_every=k,
-        )
-        gk = {r.v: r.rank for r in got.collect()}
-        assert set(gk) == set(gb)
-        # same arithmetic graph; only summation order inside partial
-        # aggs can differ between the physical plans
-        for v in gb:
-            assert abs(gk[v] - gb[v]) < 1e-12, (k, v)
-
-
 @pytest.mark.parametrize("name", ["two_tris", "path6", "hub"])
 def test_components_both_strategies(spark, name, monkeypatch):
     raw, _ = GOLDEN[name]
     e = edges_df(spark, raw).where("src != dst")
     want = numpy_components(raw)
-    got_star, _ = connected_components(e)
-    got_ml, _ = connected_components_minlabel(e, check_every=4)
-    assert {r.v: r.comp for r in got_star.collect()} == want
-    assert {r.v: r.comp for r in got_ml.collect()} == want
     # both regimes of the star-contraction form
     (res, res_log), (shu, shu_log) = both_regimes(
         monkeypatch, lambda: connected_components(e)
@@ -212,15 +187,17 @@ def test_components_two_tris_exact(spark):
 
 
 @pytest.mark.parametrize("name", ["two_tris", "k4"])
-def test_lpa_matches_numpy(spark, name):
+def test_lpa_matches_numpy(spark, name, monkeypatch):
     raw, _ = GOLDEN[name]
     e = edges_df(spark, raw)
-    got, _ = label_propagation(e, max_iter=12)
     want = numpy_lpa(raw, max_iter=12)
-    assert {r.v: r.label for r in got.collect()} == want
-    resident, log = label_propagation(e, max_iter=12, broadcast_state="auto")
-    assert {r["regime"] for r in log.rounds} == {"resident"}
-    assert {r.v: r.label for r in resident.collect()} == want
+    (res, res_log), (shu, shu_log) = both_regimes(
+        monkeypatch, lambda: label_propagation(e, max_iter=12)
+    )
+    assert {r["regime"] for r in res_log.rounds} == {"resident"}
+    assert {r["regime"] for r in shu_log.rounds} == {"shuffle"}
+    assert {r.v: r.label for r in res.collect()} == want
+    assert {r.v: r.label for r in shu.collect()} == want
 
 
 def test_pagerank_resume(spark, tmp_path):
@@ -271,7 +248,10 @@ def test_pagerank_partition_metrics(spark):
     # record the per-partition row histogram and a skew ratio.
     raw, _ = GOLDEN["bowtie"]
     sym = canonicalize_edges(edges_df(spark, raw))
-    _, log = pagerank(sym, tol=0.0, max_iter=4, check_every=4, partition_metrics=True)
+    _, log = pagerank(
+        sym, tol=0.0, max_iter=4, check_every=4, partition_metrics=True,
+        broadcast_state=False,
+    )
     entry = log.rounds[-1]
     assert entry["rows_total"] == sym.select("src").distinct().count()
     assert entry["rows_max_partition"] >= 1
@@ -354,12 +334,13 @@ def test_label_spreading_string_labels(spark):
 # ---------------------------------------------------------------------------
 
 
-def _assert_regimes_agree(resident, shuffle, atol=0.0):
-    (a, log_a), (b, log_b) = resident, shuffle
+def _assert_regimes_agree(resident, other, atol=0.0, other_regime="shuffle"):
+    """``other`` (run in ``other_regime``) gives ``resident``'s result."""
+    (a, log_a), (b, log_b) = resident, other
     assert a.schema == b.schema
     assert log_a.rounds and log_b.rounds
     assert {r["regime"] for r in log_a.rounds} == {"resident"}
-    assert {r["regime"] for r in log_b.rounds} == {"shuffle"}
+    assert {r["regime"] for r in log_b.rounds} == {other_regime}
     assert [r["round"] for r in log_a.rounds] == [r["round"] for r in log_b.rounds]
     ga = {r[0]: r[1] for r in a.collect()}
     gb = {r[0]: r[1] for r in b.collect()}
@@ -370,6 +351,18 @@ def _assert_regimes_agree(resident, shuffle, atol=0.0):
         assert ga == gb
 
 
+def _assert_pagerank_regimes_agree(monkeypatch, run, edges):
+    """resident = broadcast = shuffle for ``run``, a PageRank over
+    ``edges``; the broadcast run only where ``edges`` can force it.
+    Returns the resident run and whether the broadcast one ran."""
+    resident, shuffle = both_regimes(monkeypatch, run)
+    _assert_regimes_agree(resident, shuffle, atol=1e-12)
+    broadcast = broadcast_regime(monkeypatch, run, edges)
+    if broadcast is not None:
+        _assert_regimes_agree(resident, broadcast, atol=1e-12, other_regime="broadcast")
+    return resident, broadcast is not None
+
+
 # url-like keys only where the order of ids decides the result:
 # components and LPA (PageRank needs numeric ids)
 NUMERIC_GRAPHS = sorted(n for n, (_, typ) in CROSS_GRAPHS.items() if typ != "string")
@@ -378,9 +371,10 @@ NUMERIC_GRAPHS = sorted(n for n, (_, typ) in CROSS_GRAPHS.items() if typ != "str
 @pytest.mark.parametrize("name", NUMERIC_GRAPHS)
 def test_pagerank_regimes_agree(spark, name, monkeypatch):
     sym = canonicalize_edges(cross_edges(spark, name))
-    _assert_regimes_agree(*both_regimes(monkeypatch, lambda: pagerank(
-        sym, tol=1e-6, max_iter=8, check_every=4, broadcast_state="auto",
-    )), atol=1e-12)
+    run = lambda: pagerank(sym, tol=1e-6, max_iter=8, check_every=4)  # noqa: E731
+    _, broadcast_ran = _assert_pagerank_regimes_agree(monkeypatch, run, sym)
+    # one_edge: 2 symmetric rows over 2 vertices
+    assert broadcast_ran == (name != "one_edge")
 
 
 @pytest.mark.parametrize("name", sorted(CROSS_GRAPHS))
@@ -393,29 +387,39 @@ def test_components_regimes_agree(spark, name, monkeypatch):
 def test_lpa_regimes_agree(spark, name, monkeypatch):
     e = cross_edges(spark, name)
     _assert_regimes_agree(*both_regimes(monkeypatch, lambda: label_propagation(
-        e, max_iter=8, check_every=2, broadcast_state="auto",
+        e, max_iter=8, check_every=2,
     )))
 
 
 @pytest.mark.parametrize("form", ["uniform", "dangling_free", "teleport", "weight"])
 def test_pagerank_forms_regimes_agree(spark, form, monkeypatch):
     """Directed sinks for the missing-mass closure, the symmetric hub for
-    the dangling-free share; personalized and weighted forms too."""
-    sinks = edges_df(spark, [(0, 1), (1, 2), (3, 2), (3, 4), (4, 0), (0, 5)])
-    kw = dict(tol=1e-9, max_iter=12, check_every=4, broadcast_state="auto")
+    the dangling-free share; personalized and weighted forms too. The
+    6-edge ``sinks`` graph has as many vertices as edges, so the
+    directed forms also run on ``dense`` (more edges than vertices, 2
+    and 5 still sinks), which can force the broadcast regime."""
+    sinks_raw = [(0, 1), (1, 2), (3, 2), (3, 4), (4, 0), (0, 5)]
+    graphs = [
+        edges_df(spark, sinks_raw),
+        edges_df(spark, sinks_raw + [(1, 3), (4, 1), (3, 0)]),  # "dense"
+    ]
+    kw = dict(tol=1e-9, max_iter=12, check_every=4)
     if form == "uniform":
-        run = lambda: pagerank(sinks, **kw)  # noqa: E731
+        run = lambda e: pagerank(e, **kw)  # noqa: E731
     elif form == "dangling_free":
-        hub = canonicalize_edges(edges_df(spark, GOLDEN["hub"][0]))
-        run = lambda: pagerank(hub, dangling_free=True, partition_metrics=True, **kw)  # noqa: E731
+        graphs = [canonicalize_edges(edges_df(spark, GOLDEN["hub"][0]))]
+        run = lambda e: pagerank(e, dangling_free=True, partition_metrics=True, **kw)  # noqa: E731
     elif form == "teleport":
         tele = spark.createDataFrame([(0, 0.5), (2, 0.25), (5, 0.25), (77, 0.0)], "v long, s double")
-        run = lambda: pagerank(sinks, teleport=tele, **kw)  # noqa: E731
+        run = lambda e: pagerank(e, teleport=tele, **kw)  # noqa: E731
     else:
-        wg = sinks.selectExpr("src", "dst", "(src * 3 + dst) % 4 + 1 AS wt")
-        run = lambda: pagerank(wg, weight="wt", **kw)  # noqa: E731
-    resident, shuffle = both_regimes(monkeypatch, run)
-    _assert_regimes_agree(resident, shuffle, atol=1e-12)
+        graphs = [e.selectExpr("src", "dst", "(src * 3 + dst) % 4 + 1 AS wt") for e in graphs]
+        run = lambda e: pagerank(e, weight="wt", **kw)  # noqa: E731
+    broadcast_ran = []
+    for e in graphs:
+        resident, ran = _assert_pagerank_regimes_agree(monkeypatch, lambda: run(e), e)
+        broadcast_ran.append(ran)
+    assert broadcast_ran == ([True] if form == "dangling_free" else [False, True])
     if form == "dangling_free":
         # one resident partition holds every vertex
         entry = resident[1].rounds[-1]
@@ -430,10 +434,10 @@ def test_iterative_empty_graph(spark, op, monkeypatch):
     divide by the zero vertex count)."""
     def run(e):
         if op == "pagerank":
-            return pagerank(e, max_iter=4, broadcast_state="auto")
+            return pagerank(e, max_iter=4)
         if op == "components":
             return connected_components(e)
-        return label_propagation(e, max_iter=4, broadcast_state="auto")
+        return label_propagation(e, max_iter=4)
 
     empty = spark.createDataFrame([], "src long, dst long")
     one = edges_df(spark, [(1, 2)])
@@ -446,10 +450,10 @@ def test_iterative_empty_graph(spark, op, monkeypatch):
 
 def _run_op(op, e, **kw):
     if op == "pagerank":
-        return pagerank(e, tol=1e-10, check_every=4, broadcast_state="auto", **kw)
+        return pagerank(e, tol=1e-10, check_every=4, **kw)
     if op == "components":
         return connected_components(e, check_every=2, **kw)
-    return label_propagation(e, check_every=4, broadcast_state="auto", **kw)
+    return label_propagation(e, check_every=4, **kw)
 
 
 @pytest.mark.parametrize("op", ["pagerank", "components", "lpa"])

@@ -747,7 +747,6 @@ def test_broadcast_tristate_typo_raises(spark):
     import trianglecount_spark.operators.metrics as M
     from trianglecount_spark.operators import regime
     from trianglecount_spark.operators.canonicalize import orient
-    from trianglecount_spark.operators.lpa import label_propagation
     from trianglecount_spark.operators.pagerank import pagerank
     from trianglecount_spark.operators.triangles import triangles_join
 
@@ -762,8 +761,6 @@ def test_broadcast_tristate_typo_raises(spark):
         )
     with pytest.raises(ValueError, match="auto"):
         pagerank(sym, max_iter=2, broadcast_state="yes")
-    with pytest.raises(ValueError, match="auto"):
-        label_propagation(sym, max_iter=2, broadcast_state="Auto")
     with pytest.raises(ValueError, match="auto"):
         M.bfs_distances(sym, 0, max_rounds=2, broadcast_state="broadcast")
 

@@ -24,11 +24,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from trianglecount_spark.operators.canonicalize import canonicalize_edges, orient  # noqa: E402
 from trianglecount_spark.operators.triangles import triangles_per_vertex_kernel  # noqa: E402
-from trianglecount_spark.session import get_spark  # noqa: E402
+from trianglecount_spark.session import default_driver_memory, get_spark  # noqa: E402
 from trianglecount_spark.sources.synth import powerlaw_edges  # noqa: E402
 
 SHUFFLE_PARTITIONS = 64
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+DRIVER_MEM = default_driver_memory()
 
 
 def main() -> None:

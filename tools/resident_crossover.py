@@ -3,10 +3,9 @@ operators and of the graph build, measured.
 
 PageRank (10 dangling-free rounds), connected components, LPA (10
 rounds), the arrays triangle count and the whole build each run in
-both regimes on one warm JVM: the resident regime through
-``broadcast_state="auto"`` (``connected_components``,
-``triangle_count_arrays`` and the canonicalize/orient graph pick it
-themselves) and the distributed regime — the shuffle plan, for
+both regimes on one warm JVM: the resident regime, which each operator
+and the canonicalize/orient graph pick themselves under the default
+ceilings, and the distributed regime — the shuffle plan, for
 triangles the array-intersection plan — with the broadcast ceilings
 shrunk below the graph, which is what the operators do past the
 ceiling. Every cell is one untimed warmup, then ``reps`` timed runs
@@ -125,11 +124,10 @@ def main() -> None:
 
     ops = {
         "pagerank": lambda: pagerank(
-            fresh(sym), tol=0.0, max_iter=10, check_every=10, dangling_free=True,
-            broadcast_state="auto",
+            fresh(sym), tol=0.0, max_iter=10, check_every=10, dangling_free=True
         ),
         "components": lambda: connected_components(fresh(sym)),
-        "lpa": lambda: label_propagation(fresh(sym), max_iter=10, broadcast_state="auto"),
+        "lpa": lambda: label_propagation(fresh(sym), max_iter=10),
         "triangles": lambda: triangle_count_arrays(fresh(oriented)),
         "build": build("build"),
         "over": build("over"),

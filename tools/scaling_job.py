@@ -60,11 +60,11 @@ from trianglecount_spark.operators.triangles import (  # noqa: E402
     triangles_join,
     triangles_per_vertex_kernel,
 )
-from trianglecount_spark.session import get_spark  # noqa: E402
+from trianglecount_spark.session import default_driver_memory, get_spark  # noqa: E402
 from trianglecount_spark.sources.synth import powerlaw_edges  # noqa: E402
 
 SHUFFLE_PARTITIONS = 64
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+DRIVER_MEM = default_driver_memory()
 # Bump when the measurement protocol changes (JVM flags, tmpfs shuffle,
 # reps discipline, kernel implementation): cached cells from a different
 # harness version are discarded by tools/scaling.py rather than merged.
@@ -257,17 +257,20 @@ def main() -> None:
             for h in handles + [sym_w, ori_w]:
                 h.unpersist()
         elif job == "pagerank10":
-            # the symmetric input is dangling-free: one job per round
-            ranks, _ = pagerank(
-                sym, tol=0.0, max_iter=10, check_every=10, dangling_free=True
+            # the all-shuffle criterion row: the symmetric input is
+            # dangling-free, so one job per round
+            ranks, log = pagerank(
+                sym, tol=0.0, max_iter=10, check_every=10, dangling_free=True,
+                broadcast_state=False,
             )
             ranks.count()
+            out["regime"] = log.rounds[-1]["regime"]
         elif job == "pagerank10bc":
             # broadcast-state regime (r2 operators): the |V|-row rank
             # state broadcasts onto the pinned edge table each round —
             # shuffle-free on the edge side; the rank state fits an
             # executor at these sizes (2M vertices)
-            ranks, _ = pagerank(
+            ranks, log = pagerank(
                 sym,
                 tol=0.0,
                 max_iter=10,
@@ -276,6 +279,7 @@ def main() -> None:
                 broadcast_state=True,
             )
             ranks.count()
+            out["regime"] = log.rounds[-1]["regime"]
         else:
             raise SystemExit(f"unknown job {job}")
 

@@ -33,9 +33,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from trianglecount_spark.session import default_driver_memory, get_spark  # noqa: E402
+
 N_PAGES, N_SITES = 2_400_000, 80_000
 SHUFFLE_PARTITIONS = 64
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+DRIVER_MEM = default_driver_memory()
 
 
 def main() -> None:
@@ -48,7 +50,6 @@ def main() -> None:
     )
     from trianglecount_spark.functions.extract import extract_links
     from trianglecount_spark.operators.triangles import triangle_count_arrays
-    from trianglecount_spark.session import get_spark
     from trianglecount_spark.sources.pages import make_pages
 
     spark = get_spark(

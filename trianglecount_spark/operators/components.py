@@ -1,18 +1,13 @@
 """Connected components ([EXT], BASELINE.json north_rule).
 
-Two strategies:
+``connected_components`` alternates large-star / small-star (Kiveris
+et al., "Connected Components in MapReduce and Beyond", SoCC'14):
+O(log n) rounds on any graph; each round is two join+agg passes that
+*shrink* the edge set toward star graphs rooted at component minima.
+No diameter dependence — the 100 TB path for web graphs whose
+components can be deep.
 
-- ``connected_components`` — alternating large-star / small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14): O(log n) rounds on any graph; each round is two join+agg
-  passes that *shrink* the edge set toward star graphs rooted at
-  component minima. No diameter dependence — the 100 TB path for web
-  graphs whose components can be deep.
-
-- ``connected_components_minlabel`` — synchronous min-label propagation,
-  O(diameter) rounds; kept as a cross-check and for shallow graphs.
-
-Both return ``v, comp`` with comp = min vertex id in the component
+It returns ``v, comp`` with comp = min vertex id in the component
 (every vertex of the input present, including each component minimum).
 Convergence is detected by state-equality across a check window
 (fixpoint ⇒ equality is exact, see iterative.iterate).
@@ -217,31 +212,3 @@ def _components_resident(
     comp = np.where(comp == n, np.arange(n), comp)
     return local_frame(spark, schema, [g.vertices, g.vertices[comp]]), log
 
-
-def connected_components_minlabel(
-    edges: DataFrame,
-    max_iter: int = 100,
-    check_every: int = 4,
-) -> tuple[DataFrame, IterationLog]:
-    """Synchronous min-label propagation to fixpoint (O(diameter))."""
-    sym = _sym(edges).where(F.col("src") != F.col("dst")).distinct().cache()
-    all_v = (
-        edges.select(F.col("src").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    init = all_v.select("v", F.col("v").alias("comp"))
-
-    def step(labels: DataFrame, i: int) -> DataFrame:
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("v", "src"), "src")
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        return labels.join(nbr_min, "v", "left").select(
-            "v", F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp")
-        )
-
-    return iterate(
-        init, step, _sig_delta, max_iter=max_iter, tol=0.0, check_every=check_every
-    )

@@ -5,13 +5,13 @@ process); PageRank / CC / LPA are driver-mandated extensions
 (BASELINE.json north_rule) and share the same needs:
 
 - lineage truncation: each round's plan references the previous round's;
-  ``localCheckpoint`` on check rounds cuts it (on a real cluster use
+  a ``localCheckpoint`` per round cuts it (on a real cluster use
   ``setCheckpointDir`` + reliable ``checkpoint`` for fault tolerance).
-- few actions: between check rounds the plans chain LAZILY — no job is
-  launched at all. One materialization + one convergence aggregate per
-  ``check_every`` rounds, instead of 2-3 collects per round. At a
-  thousand executors, driver round-trips are the scalability ceiling of
-  any iterative algorithm; this keeps them at 2/K rounds.
+- few actions: that checkpoint is a round's only job; the convergence
+  aggregate runs once per ``check_every`` rounds, instead of 2-3
+  collects per round. At a thousand executors, driver round-trips are
+  the scalability ceiling of any iterative algorithm; this keeps them
+  at one per ``check_every`` rounds.
 - resumability: optionally persist state to ``state_dir/round=NNN``
   parquet; ``resume`` picks up the latest.
 - per-check metrics: deltas / wall time / partition counts — and, with
@@ -143,13 +143,12 @@ def iterate(
     state_dir: str | None = None,
     resume: bool = False,
     log: IterationLog | None = None,
-    materialize_every: int = 1,
     partition_metrics: bool = False,
     regime: str = "shuffle",
 ) -> tuple[DataFrame, IterationLog]:
     """Run ``step(state, i) -> new_state`` (pure plan transform, NO
-    actions) for up to ``max_iter`` rounds. Every ``check_every`` rounds:
-    localCheckpoint the state (the only job launch), evaluate
+    actions) for up to ``max_iter`` rounds, localCheckpointing each
+    round's state (its only job). Every ``check_every`` rounds evaluate
     ``delta_fn(prev_checked_state, state)`` and stop if ``delta <= tol``.
 
     Note the convergence test spans ``check_every`` rounds — for
@@ -174,24 +173,13 @@ def iterate(
     prev_checked = state
     t0 = time.time()
     for i in range(start_round, max_iter):
-        state = step(state, i)
-        # Materialization cadence. Default (1) is the eager per-round
-        # GraphX/GraphFrames design: a step that references its input
-        # more than once (PageRank's dangling-mass form; star-
-        # contraction's mins + join) would otherwise recompute the chain
-        # per reference — lazy chaining across K rounds is 2^K
-        # recomputation at runtime and 2^K plan nodes for Catalyst.
-        # SINGLE-reference steps (dangling-free PageRank: one join + one
-        # agg per round) may set materialize_every > 1: K rounds chain
-        # lazily into ONE job of K sequential shuffle stages, amortizing
-        # job-launch + checkpoint overhead (measured 2.1x at sf0.1,
-        # K=5). Keep K small (≤ ~5) — plan size still grows linearly and
-        # Catalyst analysis/codegen goes superlinear well before K=10.
-        # Old checkpoint blocks are GC'd by ContextCleaner.
-        is_check = _is_check(i, check_every, max_iter)
-        if (i + 1) % materialize_every == 0 or is_check:
-            state = state.localCheckpoint(eager=True)
-        if not is_check:
+        # every round is materialized (the GraphX per-round cadence): a
+        # step that references its input more than once (PageRank's
+        # dangling-mass form; star-contraction's mins + join) would
+        # otherwise recompute the lazy chain once per reference. Old
+        # checkpoint blocks are GC'd by ContextCleaner.
+        state = step(state, i).localCheckpoint(eager=True)
+        if not _is_check(i, check_every, max_iter):
             continue
         if state_dir:
             state.write.mode("overwrite").parquet(f"{state_dir}/round={i}")

@@ -7,23 +7,20 @@ ties broken by the SMALLEST label; stops when no label changes or after
 output on every run and any partitioning (the property the correctness
 gate needs; asynchronous LPA is run-order dependent).
 
-Physical shape per round: the label state is VERTEX-sized while the
-work table is EDGE-sized, so the state ships to the edges — a shuffle
-join by default, a forced broadcast with ``broadcast_state=True``
-(opt-in, right up to ~10M vertices; beyond that — the 10^12-url
-regime — the forced broadcast would hard-fail, which is why False is
-the default, matching ``pagerank``). The symmetric edge table is
-hash-partitioned on dst ONCE up front; the broadcast join preserves
-it, and HashPartitioning(dst) satisfies the (v, label) clustering the
-frequency aggregate needs (subset rule), so a round's edge-sized work
-is a single co-partitioned stage: no per-round edge shuffle. Top-1 is
-window-free via min_by on the (-freq, label) pair — no row_number
-window, so no skew pile-up on a single partition.
+Two regimes, chosen the way ``connected_components`` chooses:
 
-Resident regime (``broadcast_state="auto"`` on an edge table that fits
-the broadcast ceiling): the same synchronous rounds in numpy over the
-collected edge table, labels held as vertex positions (positions sort
-like ids, so "smallest label" is unchanged).
+- resident, whenever the edge table fits the broadcast ceiling
+  (``regime.fits_resident``): the same synchronous rounds in numpy over
+  the collected edge table, labels held as vertex positions (positions
+  sort like ids, so "smallest label" is unchanged);
+- shuffle otherwise. The label state is VERTEX-sized while the work
+  table is EDGE-sized, so the state ships to the edges: the symmetric
+  edge table is hash-partitioned on src ONCE up front and cached, and
+  each round shuffles only the label vector onto it. Top-1 is
+  window-free via min_by on the (-freq, label) pair — no row_number
+  window, so no skew pile-up on a single partition.
+
+No broadcast-state plan: no measured cell prefers one for LPA.
 """
 
 from __future__ import annotations
@@ -41,7 +38,7 @@ from trianglecount_spark.operators.iterative import (
     local_frame,
     vertex_field,
 )
-from trianglecount_spark.operators.regime import iterative_regime
+from trianglecount_spark.operators.regime import fits_resident
 
 
 def label_propagation(
@@ -50,31 +47,20 @@ def label_propagation(
     check_every: int = 4,
     state_dir: str | None = None,
     resume: bool = False,
-    broadcast_state: bool | str = False,
 ) -> tuple[DataFrame, IterationLog]:
-    """LPA over an undirected edge list. Returns (``v, label``, log).
-
-    ``broadcast_state`` defaults False (shuffle join — safe at any
-    vertex count), matching ``pagerank``'s conservative default; opt in
-    at call sites where the label state is known to fit an executor
-    (≲10M vertices — the gate/bench graphs do, see plans/queries.py),
-    where the forced broadcast makes each round's edge-side join
-    shuffle-free. ``"auto"`` runs the RESIDENT regime when the edge
-    table fits the broadcast ceiling and the shuffle plan otherwise
-    (``regime.iterative_regime``). An empty edge table gives an empty
-    result and log."""
-    regime = iterative_regime(broadcast_state, edges)
+    """LPA over an undirected edge list. Returns (``v, label``, log);
+    the regime is resident or shuffle (module docstring). An empty edge
+    table gives an empty result and log."""
     vf = vertex_field(edges)
     schema = StructType([vf, StructField("label", vf.dataType, vf.nullable)])
-    if regime == "resident":
+    if fits_resident(edges):
         return _lpa_resident(edges, schema, max_iter, check_every, state_dir, resume)
-    pin = F.broadcast if regime == "broadcast" else (lambda df: df)
     sym = (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition("dst")
+        .repartition("src")
         .cache()
     )
     all_v = (
@@ -88,7 +74,7 @@ def label_propagation(
 
     def step(labels: DataFrame, i: int) -> DataFrame:
         freq = (
-            sym.join(pin(labels.withColumnRenamed("v", "src")), "src")
+            sym.join(labels.withColumnRenamed("v", "src"), "src")
             .groupBy(F.col("dst").alias("v"), F.col("label"))
             .agg(F.count("*").alias("freq"))
         )
@@ -114,7 +100,6 @@ def label_propagation(
     return iterate(
         init, step, delta_fn, max_iter=max_iter, tol=0.0,
         check_every=check_every, state_dir=state_dir, resume=resume,
-        regime=regime,
     )
 
 

@@ -28,9 +28,20 @@ Physical shape per round:
 Skewed in-degree (hub pages) lands in the aggregation, not the join —
 partial aggregation absorbs it without salting.
 
-Resident regime (``broadcast_state="auto"`` on an edge table that fits
-the broadcast ceiling): the same algebra as numpy over the collected
-edge table — one ``bincount`` per round instead of one Spark job.
+Three regimes, chosen by ``broadcast_state="auto"`` (the default) in
+this order:
+  1. resident, while the edge table fits the broadcast ceiling
+     (``regime.fits_resident``): the same algebra as numpy over the
+     collected edge table — one ``bincount`` per round instead of one
+     Spark job;
+  2. broadcast, while the vertex table fits it
+     (``regime.resolve_broadcast`` on the cached vertex table): the rank
+     vector broadcasts onto an edge table partitioned on dst, so a
+     round's edge-sized work runs with no shuffle — measured 2.3x faster
+     than the shuffle plan at 32M raw edges / 2M vertices (README
+     "Measured regime rules", pagerank10bc);
+  3. shuffle: the rank vector shuffles onto an edge table partitioned on
+     src — the plan for vertex state that cannot broadcast.
 """
 
 from __future__ import annotations
@@ -48,7 +59,11 @@ from trianglecount_spark.operators.iterative import (
     local_frame,
     vertex_field,
 )
-from trianglecount_spark.operators.regime import iterative_regime
+from trianglecount_spark.operators.regime import (
+    check_flag,
+    fits_resident,
+    resolve_broadcast,
+)
 
 
 def pagerank(
@@ -62,8 +77,7 @@ def pagerank(
     dangling_free: bool = False,
     teleport: DataFrame | None = None,
     weight: str | None = None,
-    broadcast_state: bool | str = False,
-    materialize_every: int | None = None,
+    broadcast_state: bool | str = "auto",
     partition_metrics: bool = False,
 ) -> tuple[DataFrame, IterationLog]:
     """PageRank over a *directed* edge table ``src, dst``.
@@ -86,44 +100,26 @@ def pagerank(
     is unchanged, ``r'(v) = r~(v) + (1 − Σ r~)·s(v)``, still one job per
     round. The uniform default is exactly ``teleport = 1/N``.
 
-    ``materialize_every`` (requires ``dangling_free``, whose step
-    references the rank vector ONCE per round so lazy chains stay
-    linear): checkpoint every K rounds instead of every round — K rounds
-    become ONE job of K sequential shuffle stages, amortizing job-launch
-    + checkpoint overhead. Regime-dependent: measured 2.1x faster at
-    sf0.1 / local[32] (1.2M edges — overhead-bound), but 3x SLOWER at
-    32M edges / local[2] (shuffle state for K un-GC'd rounds accumulates
-    in memory-backed storage and thrashes). Default 1 = the eager
-    GraphX-style cadence; opt in only where per-round overhead, not
-    memory, is the binding constraint.
-
     ``weight`` names an integer edge-weight column: contributions become
     ``rank(u)·w(u,v)/W_out(u)`` (W_out = Σ out-weights, an exact integer
     sum, so the per-edge fraction is one IEEE division — as
     deterministic as the unweighted 1/outdeg). Same plan shape: the
     normalized weight folds into the cached edge table once.
 
-    ``broadcast_state``: ``True`` broadcasts the rank vector onto the
-    edge table each round, ``False`` (default) shuffles it; ``"auto"``
-    runs the RESIDENT regime when the edge table fits the broadcast
-    ceiling (``regime.iterative_regime``) and the shuffle plan
-    otherwise. Same result, log keys and ``state_dir`` rounds in every
-    regime; an empty edge table gives an empty result and log.
+    ``broadcast_state``: ``"auto"`` (default) picks the resident,
+    broadcast or shuffle regime (module docstring); ``True`` and
+    ``False`` force the broadcast and shuffle plans. Same result, log
+    keys and ``state_dir`` rounds in every regime; an empty edge table
+    gives an empty result and log.
     """
-    if materialize_every is None:
-        materialize_every = 1
-    if materialize_every > 1 and not dangling_free:
-        # the dangling form references tilde twice per round — lazy
-        # chaining doubles plan nodes per round (2^K growth)
-        raise ValueError("materialize_every > 1 requires dangling_free=True")
-    regime = iterative_regime(broadcast_state, edges)
+    resident = check_flag(broadcast_state) == "auto" and fits_resident(edges)
     schema = StructType([
         vertex_field(edges),
         # the rank expression is non-null in the dangling-free and
         # teleport forms, nullable (a division) in the uniform closure
         StructField("rank", DoubleType(), not dangling_free and teleport is None),
     ])
-    if regime == "resident":
+    if resident:
         return _pagerank_resident(
             edges, schema, alpha, tol, max_iter, check_every, state_dir, resume,
             dangling_free, teleport, weight, partition_metrics,
@@ -138,6 +134,9 @@ def pagerank(
     if n == 0:
         verts.unpersist()
         return local_frame(edges.sparkSession, schema, [[], []]), IterationLog()
+    # the probe reads the cached table's size: no job unless its
+    # estimate is over the ceiling, then one count of the cache
+    broadcast = resolve_broadcast(broadcast_state, verts)
     if teleport is not None:
         # s joined once onto the (cached) vertex table; absent rows get 0
         verts = (
@@ -149,23 +148,17 @@ def pagerank(
     agg_out = F.count("*") if weight is None else F.sum(weight)
     outdeg = edges.groupBy("src").agg(agg_out.alias("outdeg"))
     per_edge = F.lit(1.0) if weight is None else F.col(weight).cast("double")
-    # broadcast_state=True: the vertex-sized rank vector broadcasts onto
-    # the edge table each round, so the contribution join needs no edge
+    # broadcast: the vertex-sized rank vector broadcasts onto the edge
+    # table each round, so the contribution join needs no edge
     # partitioning — pre-partition ew on DST instead, and the groupBy(dst)
     # aggregate reuses it: a round's edge-sized work runs with NO shuffle.
-    # Right up to ~10M vertices (the bench/gate regime); at 10^12 urls the
-    # rank vector cannot broadcast — the default shuffle join partitions
-    # ew on src and ships only the vertex-sized vector per round.
-    # "auto" resolves the regime from the edge table's size probe
-    # (regime.iterative_regime) and runs resident when the table fits;
-    # default stays False because the measured scaling cells
-    # (pagerank10/pagerank10bc) pin their regimes.
-    broadcast_state = regime == "broadcast"
-    pin = F.broadcast if broadcast_state else (lambda df: df)
+    # Shuffle (vertex state over the ceiling — 10^12 urls): the join
+    # partitions ew on src and ships only the vertex-sized vector per round.
+    pin = F.broadcast if broadcast else (lambda df: df)
     ew = (
         edges.join(outdeg, "src")
         .select("src", "dst", (per_edge / F.col("outdeg")).alias("w"))
-        .repartition("dst" if broadcast_state else "src")
+        .repartition("dst" if broadcast else "src")
         .cache()
     )
     ew.count()
@@ -237,9 +230,8 @@ def pagerank(
         check_every=check_every,
         state_dir=state_dir,
         resume=resume,
-        materialize_every=materialize_every,
         partition_metrics=partition_metrics,
-        regime=regime,
+        regime="broadcast" if broadcast else "shuffle",
     )
     return result.select("v", F.col("rank").cast("double")), log
 

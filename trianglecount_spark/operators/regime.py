@@ -9,16 +9,19 @@ partitioned? Here "fits" means "can be broadcast", and the answer comes
 from ``fits_broadcast``; every regime flag goes through
 ``resolve_broadcast``. For the iterative operators and the arrays
 triangle count a fitting graph is not partitioned at all: it goes to
-the resident regime (operators/iterative.py, ``iterative_regime``;
-operators/triangles.py), the reference's on-device CSR, built once per
-job from the raw edges (operators/canonicalize.py); those consumers ask
-``fits_resident``, which builds the graph a frame carries, while
-``fits_broadcast`` never builds one. Resident was measured faster than
-the distributed plans at every size run, up to 16M raw edges (31.9M
-symmetric rows, just under ``ROW_LIMIT``; tools/resident_crossover.py,
-README "Measured regime rules"), so the ceilings below stand as the
-crossover. Larger raw inputs are unmeasured: there the builders
-decline and the frame's own probe decides.
+the resident regime (operators/iterative.py; operators/triangles.py),
+the reference's on-device CSR, built once per job from the raw edges
+(operators/canonicalize.py); those consumers ask ``fits_resident``,
+which builds the graph a frame carries, while ``fits_broadcast`` never
+builds one. PageRank alone keeps a third regime between them: an edge
+table over the ceiling whose vertex table fits broadcasts the rank
+vector (``resolve_broadcast`` on that vertex table). Resident was
+measured faster than the distributed plans at every size run, up to
+16M raw edges (31.9M symmetric rows, just under ``ROW_LIMIT``;
+tools/resident_crossover.py, README "Measured regime rules"), so the
+ceilings below stand as the crossover. Larger raw inputs are
+unmeasured: there the builders decline and the frame's own probe
+decides.
 """
 
 from __future__ import annotations
@@ -112,6 +115,17 @@ def fits_resident(df: DataFrame) -> bool:
     return fits_broadcast(df)
 
 
+def check_flag(flag: bool | str) -> bool | str:
+    """``flag`` itself if it is ``True``, ``False`` or ``"auto"``; any
+    other value raises: a typo like ``'Auto'`` or ``'none'`` is a
+    truthy string and must not silently pick a regime."""
+    if flag not in (True, False, "auto"):
+        raise ValueError(
+            f"broadcast regime flag must be True, False or 'auto', got {flag!r}"
+        )
+    return flag
+
+
 def resolve_broadcast(flag: bool | str, proxy: DataFrame) -> bool:
     """Resolve a regime tri-state (``closure``, ``broadcast_state``,
     ``broadcast_adjacency``) to a bool: ``True``/``False`` pass through
@@ -119,26 +133,11 @@ def resolve_broadcast(flag: bool | str, proxy: DataFrame) -> bool:
     Callers pass the EDGE table as the proxy for vertex-sized state (a
     sound upper bound: the state never exceeds one row per edge
     endpoint), so an oversized input degrades to the always-correct
-    shuffle regime instead of failing at the broadcast.
+    shuffle regime instead of failing at the broadcast. ``pagerank``,
+    which caches and counts its vertex table anyway, passes that.
 
-    Anything else raises: a typo like ``'Auto'`` or ``'none'`` is a
-    truthy string and must not silently pick a regime."""
-    if flag not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast regime flag must be True, False or 'auto', got {flag!r}"
-        )
-    if flag == "auto":
+    Anything else raises (``check_flag``)."""
+    if check_flag(flag) == "auto":
         return fits_broadcast(proxy)
     return bool(flag)
 
-
-def iterative_regime(flag: bool | str, edges: DataFrame) -> str:
-    """The regime of an iterative operator (PageRank, LPA) with a
-    ``broadcast_state`` tri-state: ``"auto"`` is ``"resident"`` when the
-    edge table fits the ceiling — the whole graph iterates on the
-    driver, as the reference keeps a fitting CSR on one device — and
-    ``"shuffle"`` otherwise; ``True``/``False`` keep the distributed
-    ``"broadcast"``/``"shuffle"`` plans."""
-    if flag == "auto":
-        return "resident" if fits_resident(edges) else "shuffle"
-    return "broadcast" if resolve_broadcast(flag, edges) else "shuffle"

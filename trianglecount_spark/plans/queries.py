@@ -462,8 +462,7 @@ def q_ppr_copurchase(spark, sf_dir):
     ns = seeds.count()
     n = verts.count()
     tele = seeds.select("v", F.lit(1.0 / ns).alias("s"))
-    ranks, _ = pagerank(sym, tol=0.0, max_iter=10, check_every=10, teleport=tele,
-                       broadcast_state=True)
+    ranks, _ = pagerank(sym, tol=0.0, max_iter=10, check_every=10, teleport=tele)
     return ranks.select(
         "v", F.round(F.col("rank") * F.lit(float(n)), 4).alias("rank_n")
     )
@@ -1020,12 +1019,9 @@ def q_pagerank_copurchase(spark, sf_dir):
     n = sym.select(F.col("src").alias("v")).distinct().count()
     # symmetric graph => every vertex has out-edges: the dangling-free
     # share is the CONSTANT (1-alpha)/N (the oracle's float-sum closure
-    # equals it to ~1e-16, far below the 4-decimal rounding), and the
-    # single-reference step lets 5 rounds compose into one job — the
-    # overhead-bound-regime cadence (see pagerank() on when NOT to)
+    # equals it to ~1e-16, far below the 4-decimal rounding)
     ranks, _ = pagerank(
-        sym, tol=0.0, max_iter=30, check_every=30,
-        dangling_free=True, materialize_every=5, broadcast_state=True,
+        sym, tol=0.0, max_iter=30, check_every=30, dangling_free=True
     )
     return ranks.select(
         "v", F.round(F.col("rank") * F.lit(float(n)), 4).alias("rank_n")
@@ -1046,9 +1042,7 @@ def q_lpa_copurchase(spark, sf_dir):
     chained CTEs — exact label-for-label comparison. (The engine may
     early-stop at a fixpoint; a fixpoint is stable under further rounds,
     so both sides agree.)"""
-    labels, _ = label_propagation(
-        copurchase_sym(spark, sf_dir), max_iter=10, broadcast_state=True
-    )
+    labels, _ = label_propagation(copurchase_sym(spark, sf_dir), max_iter=10)
     return labels
 
 
@@ -1174,7 +1168,7 @@ def q_modularity_lpa(spark, sf_dir):
     two shuffle label joins on the edge table (labels are |V|-sized —
     never broadcast at crawl scale) + one hash agg per side."""
     sym = copurchase_sym(spark, sf_dir)
-    labels, _ = label_propagation(sym, max_iter=2, broadcast_state=True)
+    labels, _ = label_propagation(sym, max_iter=2)
     m2 = sym.count()  # 2m: each undirected edge appears twice
     deg = sym.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("deg"))
     dc = (
@@ -1220,11 +1214,9 @@ def q_pagerank_exact10(spark, sf_dir):
     sym = copurchase_sym(spark, sf_dir)
     n = sym.select(F.col("src").alias("v")).distinct().count()
     # symmetric => dangling-free constant share (matches the oracle's
-    # float-sum closure to ~1e-16, far below the 4-decimal rounding);
-    # 5-round chains for the overhead-bound gate/bench regime
+    # float-sum closure to ~1e-16, far below the 4-decimal rounding)
     ranks, _ = pagerank(
-        sym, tol=0.0, max_iter=10, check_every=10,
-        dangling_free=True, materialize_every=5, broadcast_state=True,
+        sym, tol=0.0, max_iter=10, check_every=10, dangling_free=True
     )
     return ranks.select(
         "v", F.round(F.col("rank") * F.lit(float(n)), 4).alias("rank_n")
@@ -1251,9 +1243,7 @@ def q_lpa_nation(spark, sf_dir):
     """Synchronous LPA, exactly oracle-checked: on a clique the
     deterministic (freq desc, label asc) rule converges every member to
     the clique minimum — same closed form as CC."""
-    labels, _ = label_propagation(
-        nation_clique_edges(spark, sf_dir), max_iter=10, broadcast_state=True
-    )
+    labels, _ = label_propagation(nation_clique_edges(spark, sf_dir), max_iter=10)
     return labels
 
 
@@ -2609,7 +2599,7 @@ def q_web_pagerank(spark, sf_dir):
     e, _verts = edges_from_pages(web_pages_from_documents(spark, sf_dir))
     sym = canonicalize_edges(e)
     n = sym.select(F.col("src").alias("v")).distinct().count()
-    ranks, _log = pagerank(sym, tol=0.0, max_iter=10, check_every=10, broadcast_state=True)
+    ranks, _log = pagerank(sym, tol=0.0, max_iter=10, check_every=10)
     return ranks.select(
         "v", F.round(F.col("rank") * F.lit(float(n)), 4).alias("rank_n")
     )
@@ -3016,8 +3006,7 @@ def q_web_pagerank_weighted(spark, sf_dir):
         .distinct()
         .count()
     )
-    ranks, _log = pagerank(wg, tol=0.0, max_iter=10, check_every=10, weight="wt",
-                        broadcast_state=True)
+    ranks, _log = pagerank(wg, tol=0.0, max_iter=10, check_every=10, weight="wt")
     return ranks.select(
         F.col("v").alias("url"),
         F.round(F.col("rank") * F.lit(float(n)), 4).alias("rank_n"),
@@ -3253,8 +3242,7 @@ def q_web_host_pagerank(spark, sf_dir):
         .distinct()
         .count()
     )
-    ranks, _log = pagerank(wg, tol=0.0, max_iter=10, check_every=10, weight="wt",
-                        broadcast_state=True)
+    ranks, _log = pagerank(wg, tol=0.0, max_iter=10, check_every=10, weight="wt")
     return ranks.select(
         F.col("v").alias("host"),
         F.round(F.col("rank") * F.lit(float(n)), 4).alias("rank_n"),

@@ -40,8 +40,36 @@ ENGINE_CONFS: dict[str, str] = {
 }
 
 
+# The driver heap never defaults above this (the 125 GiB scaling host's
+# setting).
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def driver_heap_mb(mem_total_kb: int) -> int:
+    """The default driver heap for a host with ``mem_total_kb`` of
+    physical memory: half of it, capped at ``MAX_DRIVER_MEM_MB``. A
+    heap larger than the host (24g on 16 GB) lets the JVM grow until
+    the kernel's OOM killer ends it."""
+    return min(MAX_DRIVER_MEM_MB, mem_total_kb // 2048)
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else ``driver_heap_mb`` of
+    this host's ``MemTotal`` (the cap where there is no
+    ``/proc/meminfo``)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except OSError:
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{driver_heap_mb(kb)}m"
 
 
 def get_spark(
@@ -74,7 +102,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
     )
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
