@@ -21,9 +21,11 @@ local[$SPARK_GRAFT_CPUS]:
                  kernel's driver CSR collect is a serial Amdahl term)
   web_e2e      — flagship: pages(html) → mined edges → url dictionary →
                  canonicalize → orient → triangle count
-  web_e2esh    — the same pipeline with broadcast joins disabled: the
-                 plan shape of the 10^12-url regime, where the url
-                 dictionary can never broadcast (scaling-criterion twin)
+  web_e2esh    — the same pipeline with broadcast joins disabled and the
+                 broadcast ceilings at -1: the plan shape of the
+                 10^12-url regime, where the url dictionary can never
+                 broadcast and the triangle count runs the distributed
+                 arrays plan (scaling-criterion twin)
 
 tc_arrays, pagerank10 and components read the cached table through a fresh
 projection on every rep: a frame keeps the resident graph built from
@@ -53,6 +55,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from trianglecount_spark.operators import regime  # noqa: E402
 from trianglecount_spark.operators.components import connected_components  # noqa: E402
 from trianglecount_spark.operators.dedup import lsh_candidates, minhash_signatures, shingles  # noqa: E402
 from trianglecount_spark.operators.knn import cosine_topk_bruteforce  # noqa: E402
@@ -171,11 +174,10 @@ def main() -> None:
     # sf0.01, the driver-gate scale) — the wedge work being timed is
     # identical (the min_common filter runs after aggregation), and a
     # non-empty output keeps the derived pair count meaningful.
-    # broadcast_adjacency defaults to "auto" (r4): the regime probe
-    # resolves to the kernel here (capped adjacency ~19 MB at sf0.1,
-    # far under the ceiling) — the bench times the auto-selected plan,
-    # which is the same kernel plan r3 pinned by flag plus the probe's
-    # count fallback (subsecond on the materialized input).
+    # The engine's regime probe picks the kernel here (capped adjacency
+    # ~19 MB at sf0.1, far under the ceiling) — the bench times the
+    # selected plan plus the probe's count fallback (subsecond on the
+    # materialized input).
     bench(
         "linkpred",
         lambda: link_prediction_jaccard(
@@ -187,14 +189,15 @@ def main() -> None:
     # driver-side collects — the plan whose N→4N scaling the
     # two-cluster criterion constrains (BENCH/BASELINE.md row
     # "linkpredsh"); archived here so the driver's BENCH series shows
-    # the criterion regime, not only the absolute-fastest kernel
-    bench(
-        "linkpredsh",
-        lambda: link_prediction_jaccard(
-            sym, min_common=8, max_center_degree=150,
-            broadcast_adjacency=False,
-        ).count(),
-    )
+    # the criterion regime, not only the absolute-fastest kernel. The
+    # broadcast ceilings at -1 pin it, with no probe job.
+    def run_linkpred_shuffle():
+        with regime.ceilings(-1, -1):
+            return link_prediction_jaccard(
+                sym, min_common=8, max_center_degree=150
+            ).count()
+
+    bench("linkpredsh", run_linkpred_shuffle)
 
     from trianglecount_spark.functions.extract import edges_from_pages
     from trianglecount_spark.operators.canonicalize import (
@@ -205,11 +208,12 @@ def main() -> None:
 
     def run_web():
         # arrays strategy — the measured-fastest TC form at every
-        # single-box size (BENCH/BASELINE.md crossover table).
-        # Per-stage materialization (persist sym + oriented), matching
-        # tools/scaling_job.py v7 and plans/pipeline.py: orient
-        # references sym twice and the arrays TC references oriented
-        # twice — without the persists the mapping joins and the
+        # single-box size (BENCH/BASELINE.md crossover table), in its
+        # engine-default regime: resident from the mined edges under the
+        # ceiling, which never runs the persisted plans. Past it (and in
+        # web_e2esh) the persists matter, as in plans/pipeline.py:
+        # orient references sym twice and the arrays TC references
+        # oriented twice — without them the mapping joins and the
         # canonicalize distinct re-execute 2-4x through unpersisted
         # lineage, timing recomputation instead of the pipeline.
         handles = []
@@ -220,9 +224,7 @@ def main() -> None:
         # dense from 0 and far below 2^31 here (plans/pipeline.py
         # gates on the vertex count at crawl scale)
         sym_w = canonicalize_edges_packed(we).persist()
-        sym_w.count()
         ori_w = orient(sym_w).persist()
-        ori_w.count()
         n = triangle_count_arrays(ori_w)
         for h in handles + [sym_w, ori_w]:
             h.unpersist()
@@ -233,12 +235,15 @@ def main() -> None:
     def run_web_shuffle():
         # the 10^12-url plan shape (scaling_job.py "webe2esh"): with
         # broadcast joins disabled the url-dictionary mapping joins and
-        # the TC adjacency joins run as shuffles at ANY dictionary size.
-        # Same stages, same result; conf restored after the run.
+        # the TC adjacency joins run as shuffles at ANY dictionary size,
+        # and with the broadcast ceilings at -1 the triangle count runs
+        # the distributed arrays plan instead of the resident one.
+        # Same stages, same result; conf and ceilings restored after.
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            return run_web()
+            with regime.ceilings(-1, -1):
+                return run_web()
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

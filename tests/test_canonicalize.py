@@ -4,7 +4,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import CROSS_GRAPHS, GOLDEN, both_regimes, edges_df
-from trianglecount_spark.operators import canonicalize_edges, degrees, orient, vertex_dictionary
+from trianglecount_spark.operators import (
+    canonicalize_edges,
+    degrees,
+    orient,
+    vertex_dictionary_scalable,
+)
 
 
 def test_canonicalize_selfloop_dup(spark):
@@ -53,8 +58,8 @@ def test_vertex_dictionary_deterministic(spark):
         [("https://b.example/",), ("https://a.example/",), ("https://b.example/",)],
         "url string",
     )
-    d1 = {r.url: r.vid for r in vertex_dictionary(df).collect()}
-    d2 = {r.url: r.vid for r in vertex_dictionary(df).collect()}
+    d1 = {r.url: r.vid for r in vertex_dictionary_scalable(df).collect()}
+    d2 = {r.url: r.vid for r in vertex_dictionary_scalable(df).collect()}
     assert d1 == d2 == {"https://a.example/": 0, "https://b.example/": 1}
 
 

@@ -259,6 +259,21 @@ def test_pagerank_partition_metrics(spark):
     assert sum(entry["rows_per_partition"]) == entry["rows_total"]
 
 
+def test_iteration_log_dump_follows_the_uri(spark, tmp_path):
+    """``IterationLog.dump`` writes on the filesystem its path names: a
+    ``file://`` URI lands at that path (as an ``hdfs://`` one lands on
+    HDFS), not under a ``file:`` folder of the working directory."""
+    import json
+
+    from trianglecount_spark.operators.iterative import IterationLog
+
+    log = IterationLog()
+    log.add(round=1, regime="resident", delta=0.5)
+    path = tmp_path / "out" / "ranks_metrics.json"
+    log.dump(spark, path.as_uri())
+    assert json.loads(path.read_text()) == log.rounds
+
+
 def test_pagerank_weighted_matches_numpy(spark):
     import numpy as np
     from pyspark.sql import functions as F

@@ -58,12 +58,14 @@ def test_bfs_distances_goldens(spark):
     assert got2 == {0: 0, 1: 1}
 
 
-def test_frontier_ops_shuffle_fallback_parity(spark):
-    """broadcast_state=False (the 10^12-vertex regime where a forced
-    broadcast would hard-fail) returns results identical to the
-    broadcast default for BFS, SSSP, and shortest-path counting."""
+def test_frontier_ops_shuffle_fallback_parity(spark, monkeypatch):
+    """The shuffle plan (the 10^12-vertex regime where a broadcast
+    would hard-fail), forced by shrinking the broadcast ceilings,
+    returns results identical to the broadcast plan this small graph
+    gets for BFS, SSSP, and shortest-path counting."""
     from pyspark.sql import functions as F
 
+    from tests.conftest import both_regimes
     from trianglecount_spark.operators.metrics import (
         bfs_distances,
         shortest_path_counts,
@@ -71,24 +73,31 @@ def test_frontier_ops_shuffle_fallback_parity(spark):
     )
 
     sym = _sym(spark, [(0, 1), (1, 2), (2, 3), (3, 4), (0, 3), (1, 4)])
-    b1, _ = bfs_distances(sym, 0, max_rounds=8)
-    b2, _ = bfs_distances(sym, 0, max_rounds=8, broadcast_state=False)
-    assert {(r.v, r.dist) for r in b1.collect()} == {
-        (r.v, r.dist) for r in b2.collect()
-    }
+
+    def bfs():
+        dist, log = bfs_distances(sym, 0, max_rounds=8)
+        return {(r.v, r.dist) for r in dist.collect()}, log.rounds[-1]["regime"]
+
+    b1, b2 = both_regimes(monkeypatch, bfs)
+    assert b1 == (b2[0], "broadcast") and b2[1] == "shuffle"
 
     we = sym.withColumn("w", F.col("src") % 3 + 1)
-    s1, _ = sssp_distances(we, 0, rounds=5)
-    s2, _ = sssp_distances(we, 0, rounds=5, broadcast_state=False)
-    assert {(r.v, r.d) for r in s1.collect()} == {
-        (r.v, r.d) for r in s2.collect()
-    }
 
-    c1 = shortest_path_counts(sym, 0, rounds=4)
-    c2 = shortest_path_counts(sym, 0, rounds=4, broadcast_state=False)
-    assert {(r.v, r.dist, r.sigma) for r in c1.collect()} == {
-        (r.v, r.dist, r.sigma) for r in c2.collect()
-    }
+    def sssp():
+        dist, log = sssp_distances(we, 0, rounds=5)
+        return {(r.v, r.d) for r in dist.collect()}, log.rounds[-1]["regime"]
+
+    s1, s2 = both_regimes(monkeypatch, sssp)
+    assert s1 == (s2[0], "broadcast") and s2[1] == "shuffle"
+
+    c1, c2 = both_regimes(
+        monkeypatch,
+        lambda: {
+            (r.v, r.dist, r.sigma)
+            for r in shortest_path_counts(sym, 0, rounds=4).collect()
+        },
+    )
+    assert c1 == c2
 
 
 def test_personalized_pagerank_allclose_numpy(spark):
@@ -644,10 +653,10 @@ def test_core_numbers_matches_peeling(spark):
 
 
 def test_pair_counts_auto_regime_selection(spark, monkeypatch):
-    """r3 verdict #1: broadcast_adjacency='auto' (the new default) must
-    pick the broadcast-CSR kernel (a MapInArrow node) exactly when BOTH
-    regime bounds hold — hub cap set AND capped adjacency under the
-    byte ceiling — and the all-shuffle plan otherwise."""
+    """r3 verdict #1: the engine must pick the broadcast-CSR kernel (a
+    MapInArrow node) exactly when BOTH regime bounds hold — hub cap set
+    AND capped adjacency under the byte ceiling — and the all-shuffle
+    plan otherwise."""
     import trianglecount_spark.operators.metrics as M
     from trianglecount_spark.operators import regime
 
@@ -671,37 +680,19 @@ def test_pair_counts_auto_regime_selection(spark, monkeypatch):
     big = M.link_prediction_jaccard(sym, min_common=1, max_center_degree=8)
     assert "MapInArrow" not in plan(big)
     monkeypatch.undo()
-    # the three plans agree on values (kernel vs shuffle bit-parity)
+    # the kernel and the capped shuffle plan agree on values (kernel vs
+    # shuffle bit-parity)
     rows = lambda df: {  # noqa: E731
         (r.u, r.w, r.common, round(r.jaccard, 12)) for r in df.collect()
     }
-    assert rows(kern) == rows(big) == rows(
-        M.link_prediction_jaccard(
-            sym, min_common=1, max_center_degree=8, broadcast_adjacency=False
-        )
-    )
-
-
-def test_pair_counts_uncapped_kernel_raises(spark):
-    """r3 verdict #3: the memory-unsafe explicit combination —
-    broadcast_adjacency=True with no hub cap — fails loudly instead of
-    thrashing worker heaps."""
-    import pytest
-
-    from trianglecount_spark.operators.metrics import link_prediction_jaccard
-
-    sym = _sym(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])
-    with pytest.raises(ValueError, match="memory-unsafe"):
-        link_prediction_jaccard(
-            sym, min_common=1, broadcast_adjacency=True
-        ).collect()
+    assert rows(kern) == rows(big)
 
 
 def test_frontier_auto_resolves_by_size(spark, monkeypatch):
-    """'auto' broadcast_state degrades to the shuffle regime when the
+    """The frontier ops degrade to the shuffle regime when the
     edge-table size estimate exceeds the ceiling, with identical
-    results either way — and triangles_join's closure='auto' follows
-    the same rule."""
+    results either way — and triangles_join's closure follows the same
+    rule."""
     import trianglecount_spark.operators.metrics as M
     from trianglecount_spark.operators import regime
     from trianglecount_spark.operators.canonicalize import orient
@@ -725,13 +716,14 @@ def test_frontier_auto_resolves_by_size(spark, monkeypatch):
     monkeypatch.setattr(regime, "BYTE_LIMIT", 1)
     monkeypatch.setattr(regime, "ROW_LIMIT", 1)
     assert regime.resolve_broadcast("auto", sym) is False
-    # end-to-end under the shrunken ceiling: auto now runs the shuffle
-    # regime and must agree with the explicit broadcast run
+    # end-to-end under the shrunken ceiling: the shuffle regime runs and
+    # must agree with the broadcast run under the default ceilings
     d_auto, _ = M.bfs_distances(sym, 0, max_rounds=6)
     t_auto = triangles_join(o)
     assert not closure_hinted(t_auto)
     monkeypatch.undo()
-    d_bc, _ = M.bfs_distances(sym, 0, max_rounds=6, broadcast_state=True)
+    d_bc, log_bc = M.bfs_distances(sym, 0, max_rounds=6)
+    assert log_bc.rounds[-1]["regime"] == "broadcast"
     assert {(r.v, r.dist) for r in d_auto.collect()} == {
         (r.v, r.dist) for r in d_bc.collect()
     }
@@ -744,25 +736,30 @@ def test_broadcast_tristate_typo_raises(spark):
     silently force the memory-unsafe broadcast regime."""
     import pytest
 
-    import trianglecount_spark.operators.metrics as M
     from trianglecount_spark.operators import regime
-    from trianglecount_spark.operators.canonicalize import orient
     from trianglecount_spark.operators.pagerank import pagerank
-    from trianglecount_spark.operators.triangles import triangles_join
 
     sym = _sym(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])
     with pytest.raises(ValueError, match="auto"):
         regime.resolve_broadcast("Auto", sym)
     with pytest.raises(ValueError, match="auto"):
-        triangles_join(orient(sym), closure="Auto")
-    with pytest.raises(ValueError, match="auto"):
-        M.link_prediction_jaccard(
-            sym, min_common=1, max_center_degree=8, broadcast_adjacency="none"
-        )
-    with pytest.raises(ValueError, match="auto"):
         pagerank(sym, max_iter=2, broadcast_state="yes")
-    with pytest.raises(ValueError, match="auto"):
-        M.bfs_distances(sym, 0, max_rounds=2, broadcast_state="broadcast")
+
+
+def test_ceilings_set_and_restore():
+    """``regime.ceilings`` sets both ceilings for its block and restores
+    them on exit, also when the block raises."""
+    import pytest
+
+    from trianglecount_spark.operators import regime
+
+    before = regime.BYTE_LIMIT, regime.ROW_LIMIT
+    with regime.ceilings(-1, 7):
+        assert (regime.BYTE_LIMIT, regime.ROW_LIMIT) == (-1, 7)
+    assert (regime.BYTE_LIMIT, regime.ROW_LIMIT) == before
+    with pytest.raises(RuntimeError), regime.ceilings(-1, -1):
+        raise RuntimeError
+    assert (regime.BYTE_LIMIT, regime.ROW_LIMIT) == before
 
 
 def test_estimated_bytes_file_scan_deser_factor(spark, tmp_path):

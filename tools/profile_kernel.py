@@ -22,13 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from scaling_job import SHUFFLE_PARTITIONS, fresh_jvm_session  # noqa: E402
 from trianglecount_spark.operators.canonicalize import canonicalize_edges, orient  # noqa: E402
 from trianglecount_spark.operators.triangles import triangles_per_vertex_kernel  # noqa: E402
-from trianglecount_spark.session import default_driver_memory, get_spark  # noqa: E402
 from trianglecount_spark.sources.synth import powerlaw_edges  # noqa: E402
-
-SHUFFLE_PARTITIONS = 64
-DRIVER_MEM = default_driver_memory()
 
 
 def main() -> None:
@@ -36,21 +33,13 @@ def main() -> None:
     n_edges = int(sys.argv[2]) if len(sys.argv) > 2 else 8_000_000
     n_vertices = int(sys.argv[3]) if len(sys.argv) > 3 else 100_000
     n_parts = int(sys.argv[4]) if len(sys.argv) > 4 else SHUFFLE_PARTITIONS
-    local_dir = f"/dev/shm/spark-prof-{cpus}"
     evt_dir = f"/tmp/spark-events-{cpus}-{n_parts}"
     shutil.rmtree(evt_dir, ignore_errors=True)
     os.makedirs(evt_dir, exist_ok=True)
-    spark = get_spark(
-        app_name=f"profile-kernel-{cpus}",
-        cores=cpus,
-        shuffle_partitions=SHUFFLE_PARTITIONS,
-        driver_memory=DRIVER_MEM,
-        extra_confs={
-            "spark.driver.extraJavaOptions": (
-                f"-XX:ActiveProcessorCount={cpus} -Xms{DRIVER_MEM} "
-                "-XX:+AlwaysPreTouch -XX:+UseTransparentHugePages"
-            ),
-            "spark.local.dir": local_dir,
+    with fresh_jvm_session(
+        f"profile-kernel-{cpus}",
+        cpus,
+        {
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": evt_dir,
             "spark.ui.showConsoleProgress": "false",
@@ -59,8 +48,7 @@ def main() -> None:
                 "SPARK_GRAFT_ADVISORY", "64m"
             ),
         },
-    )
-    try:
+    ) as spark:
         sym = canonicalize_edges(powerlaw_edges(spark, n_edges, n_vertices)).cache()
         sym.count()
         oriented = orient(sym).cache()
@@ -76,64 +64,62 @@ def main() -> None:
 
         run()  # warmup
         wall = run()
-        spark.stop()
 
-        stages: dict[int, dict] = {}
-        names: dict[int, str] = {}
-        submitted: dict[int, float] = {}
-        paths = [p for p in glob.glob(f"{evt_dir}/**/*", recursive=True)
-                 if os.path.isfile(p) and "appstatus" not in p]
-        for path in paths:
-            with open(path) as fh:
-                for line in fh:
-                    try:
-                        ev = json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
-                    if ev.get("Event") == "SparkListenerStageSubmitted":
-                        si = ev["Stage Info"]
-                        names[si["Stage ID"]] = si["Stage Name"].split("\n")[0]
-                        submitted[si["Stage ID"]] = si.get("Submission Time", 0)
-                    elif ev.get("Event") == "SparkListenerTaskEnd":
-                        sid = ev["Stage ID"]
-                        ti = ev["Task Info"]
-                        dur = (ti["Finish Time"] - ti["Launch Time"]) / 1000.0
-                        st = stages.setdefault(sid, {"n": 0, "sum": 0.0, "max": 0.0,
-                                                     "shuf_w": 0, "shuf_r": 0,
-                                                     "cpu": 0.0, "gc": 0.0})
-                        st["n"] += 1
-                        st["sum"] += dur
-                        st["max"] = max(st["max"], dur)
-                        m = ev.get("Task Metrics") or {}
-                        st["cpu"] += m.get("Executor CPU Time", 0) / 1e9
-                        st["gc"] += m.get("JVM GC Time", 0) / 1e3
-                        sw = (m.get("Shuffle Write Metrics") or {}).get(
-                            "Shuffle Bytes Written", 0)
-                        sr = (m.get("Shuffle Read Metrics") or {}).get(
-                            "Remote Bytes Read", 0) + (
-                            m.get("Shuffle Read Metrics") or {}).get(
-                            "Local Bytes Read", 0)
-                        st["shuf_w"] += sw
-                        st["shuf_r"] += sr
+    # the event log is complete once the session has stopped
+    stages: dict[int, dict] = {}
+    names: dict[int, str] = {}
+    submitted: dict[int, float] = {}
+    paths = [p for p in glob.glob(f"{evt_dir}/**/*", recursive=True)
+             if os.path.isfile(p) and "appstatus" not in p]
+    for path in paths:
+        with open(path) as fh:
+            for line in fh:
+                try:
+                    ev = json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+                if ev.get("Event") == "SparkListenerStageSubmitted":
+                    si = ev["Stage Info"]
+                    names[si["Stage ID"]] = si["Stage Name"].split("\n")[0]
+                    submitted[si["Stage ID"]] = si.get("Submission Time", 0)
+                elif ev.get("Event") == "SparkListenerTaskEnd":
+                    sid = ev["Stage ID"]
+                    ti = ev["Task Info"]
+                    dur = (ti["Finish Time"] - ti["Launch Time"]) / 1000.0
+                    st = stages.setdefault(sid, {"n": 0, "sum": 0.0, "max": 0.0,
+                                                 "shuf_w": 0, "shuf_r": 0,
+                                                 "cpu": 0.0, "gc": 0.0})
+                    st["n"] += 1
+                    st["sum"] += dur
+                    st["max"] = max(st["max"], dur)
+                    m = ev.get("Task Metrics") or {}
+                    st["cpu"] += m.get("Executor CPU Time", 0) / 1e9
+                    st["gc"] += m.get("JVM GC Time", 0) / 1e3
+                    sw = (m.get("Shuffle Write Metrics") or {}).get(
+                        "Shuffle Bytes Written", 0)
+                    sr = (m.get("Shuffle Read Metrics") or {}).get(
+                        "Remote Bytes Read", 0) + (
+                        m.get("Shuffle Read Metrics") or {}).get(
+                        "Local Bytes Read", 0)
+                    st["shuf_w"] += sw
+                    st["shuf_r"] += sr
 
-        # keep only the second (timed) run's stages: order by submission,
-        # report the last half of nontrivial stages
-        print(f"\n=== cpus={cpus} n_parts={n_parts} wall={wall:.2f}s ===")
-        print(f"{'stage':>5} {'tasks':>5} {'sum_s':>8} {'cpu_s':>7} {'gc_s':>6} "
-              f"{'mean_s':>7} {'max_s':>7} "
-              f"{'max/mean':>8} {'shW_MB':>8} {'shR_MB':>8}  name")
-        for sid in sorted(stages, key=lambda s: submitted.get(s, 0)):
-            st = stages[sid]
-            if st["sum"] < 0.3:
-                continue
-            mean = st["sum"] / st["n"]
-            print(f"{sid:>5} {st['n']:>5} {st['sum']:>8.2f} {st['cpu']:>7.2f} "
-                  f"{st['gc']:>6.2f} {mean:>7.2f} "
-                  f"{st['max']:>7.2f} {st['max'] / mean:>8.2f} "
-                  f"{st['shuf_w'] / 1e6:>8.1f} {st['shuf_r'] / 1e6:>8.1f}  "
-                  f"{names.get(sid, '?')[:60]}")
-    finally:
-        shutil.rmtree(local_dir, ignore_errors=True)
+    # keep only the second (timed) run's stages: order by submission,
+    # report the last half of nontrivial stages
+    print(f"\n=== cpus={cpus} n_parts={n_parts} wall={wall:.2f}s ===")
+    print(f"{'stage':>5} {'tasks':>5} {'sum_s':>8} {'cpu_s':>7} {'gc_s':>6} "
+          f"{'mean_s':>7} {'max_s':>7} "
+          f"{'max/mean':>8} {'shW_MB':>8} {'shR_MB':>8}  name")
+    for sid in sorted(stages, key=lambda s: submitted.get(s, 0)):
+        st = stages[sid]
+        if st["sum"] < 0.3:
+            continue
+        mean = st["sum"] / st["n"]
+        print(f"{sid:>5} {st['n']:>5} {st['sum']:>8.2f} {st['cpu']:>7.2f} "
+              f"{st['gc']:>6.2f} {mean:>7.2f} "
+              f"{st['max']:>7.2f} {st['max'] / mean:>8.2f} "
+              f"{st['shuf_w'] / 1e6:>8.1f} {st['shuf_r'] / 1e6:>8.1f}  "
+              f"{names.get(sid, '?')[:60]}")
 
 
 if __name__ == "__main__":

@@ -132,34 +132,32 @@ def main() -> None:
         "build": build("build"),
         "over": build("over"),
     }
-    defaults = regime.BYTE_LIMIT, regime.ROW_LIMIT
     # the "auto" regime's ceilings per op: the defaults, or for "over"
     # positive ceilings below the graph — no estimate passes, and the
     # row ceiling is a quarter of the raw rows
-    auto = {name: defaults for name in ops}
+    auto = {name: (regime.BYTE_LIMIT, regime.ROW_LIMIT) for name in ops}
     auto["over"] = (1, raw_edges // 4)
     totals = set()
 
     def timed(name, shuffle: bool, rep: int) -> tuple[float, int]:
         """Seconds and Spark jobs of one run."""
-        regime.BYTE_LIMIT, regime.ROW_LIMIT = (-1, -1) if shuffle else auto[name]
         group = f"{name}-{shuffle}-{rep}"
         sc.setJobGroup(group, name)
         try:
-            t0 = time.perf_counter()
-            out = ops[name]()
-            if isinstance(out, int):  # a triangle total
-                totals.add(out)
-            else:
-                out, log = out
-                out.count()
-                assert log.rounds[-1]["regime"] == ("shuffle" if shuffle else "resident")
-            return (
-                time.perf_counter() - t0,
-                len(sc.statusTracker().getJobIdsForGroup(group)),
-            )
+            with regime.ceilings(*((-1, -1) if shuffle else auto[name])):
+                t0 = time.perf_counter()
+                out = ops[name]()
+                if isinstance(out, int):  # a triangle total
+                    totals.add(out)
+                else:
+                    out, log = out
+                    out.count()
+                    assert log.rounds[-1]["regime"] == ("shuffle" if shuffle else "resident")
+                return (
+                    time.perf_counter() - t0,
+                    len(sc.statusTracker().getJobIdsForGroup(group)),
+                )
         finally:
-            regime.BYTE_LIMIT, regime.ROW_LIMIT = defaults
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     cells, jobs, rss = {}, {}, {}

@@ -47,6 +47,7 @@ import os
 import shutil
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -111,29 +112,19 @@ HARNESS_VERSIONS = {"tc_kernel": 7, "linkpred": 7, "webe2e": 11, "webe2esh": 11}
 HARNESS_VERSION = _DEFAULT_HARNESS  # imported by tools/scaling.py
 
 
-def distributed_count_arrays(oriented) -> int:
-    """``triangle_count_arrays`` in its distributed regime. The rows
-    measure the array-intersection plan at every size, so the broadcast
-    ceilings are shrunk below any graph around the call (as
-    tools/resident_crossover.py does); a fitting graph would otherwise
-    be counted resident on the driver."""
-    saved = regime.BYTE_LIMIT, regime.ROW_LIMIT
-    regime.BYTE_LIMIT, regime.ROW_LIMIT = -1, -1
-    try:
-        return triangle_count_arrays(oriented)
-    finally:
-        regime.BYTE_LIMIT, regime.ROW_LIMIT = saved
-
-
-def main() -> None:
-    cpus = int(sys.argv[1])
-    job = sys.argv[2]
-    n_edges = int(sys.argv[3])
-    n_vertices = int(sys.argv[4])
-    reps = int(sys.argv[5]) if len(sys.argv) > 5 else 3
-    local_dir = f"/dev/shm/spark-scaling-{job}-{cpus}"
+@contextmanager
+def fresh_jvm_session(app_name: str, cpus: int, extra_confs: dict | None = None):
+    """The measurement session of the module docstring, shared by the
+    fresh-JVM tools (tools/profile_kernel.py, tools/web_piecewise.py):
+    ``local[cpus]`` with ``-XX:ActiveProcessorCount``, a pre-touched
+    ``-Xms`` heap on transparent huge pages, a tmpfs ``spark.local.dir``
+    and ``SHUFFLE_PARTITIONS`` at every level. The session is stopped
+    and the tmpfs shuffle dir removed on exit, also when the job fails
+    or times out: spill left in /dev/shm would distort later
+    measurements."""
+    local_dir = f"/dev/shm/spark-{app_name}"
     spark = get_spark(
-        app_name=f"scaling-{job}-{cpus}",
+        app_name=app_name,
         cores=cpus,
         shuffle_partitions=SHUFFLE_PARTITIONS,
         driver_memory=DRIVER_MEM,
@@ -143,6 +134,26 @@ def main() -> None:
                 "-XX:+AlwaysPreTouch -XX:+UseTransparentHugePages"
             ),
             "spark.local.dir": local_dir,
+            **(extra_confs or {}),
+        },
+    )
+    try:
+        yield spark
+    finally:
+        spark.stop()
+        shutil.rmtree(local_dir, ignore_errors=True)
+
+
+def main() -> None:
+    cpus = int(sys.argv[1])
+    job = sys.argv[2]
+    n_edges = int(sys.argv[3])
+    n_vertices = int(sys.argv[4])
+    reps = int(sys.argv[5]) if len(sys.argv) > 5 else 3
+    with fresh_jvm_session(
+        f"scaling-{job}-{cpus}",
+        cpus,
+        {
             # webe2esh: the all-shuffle pipeline regime — disable
             # broadcast joins so the url-dictionary mapping joins and
             # the TC adjacency joins run as shuffles at ANY dictionary
@@ -156,7 +167,11 @@ def main() -> None:
             **({"spark.sql.autoBroadcastJoinThreshold": "-1"}
                if job == "webe2esh" else {}),
         },
-    )
+    ) as spark:
+        run_job(spark, cpus, job, n_edges, n_vertices, reps)
+
+
+def run_job(spark, cpus: int, job: str, n_edges: int, n_vertices: int, reps: int) -> None:
     out = {
         "cpus": cpus, "job": job, "edges": n_edges, "vertices": n_vertices,
         "harness": HARNESS_VERSIONS.get(job, _DEFAULT_HARNESS),
@@ -188,13 +203,18 @@ def main() -> None:
             sym.unpersist()
 
     def run_once() -> None:
+        # Plans are pinned through the broadcast ceilings
+        # (``regime.ceilings``): at -1 every decision takes its
+        # distributed plan, with no probe job. The rows measure the
+        # array-intersection plan and the all-shuffle join at every
+        # size; a fitting graph would otherwise be counted resident
+        # and the join's closure broadcast (a serial driver-side step).
         if job == "tc_arrays":
-            out["n_triangles"] = distributed_count_arrays(oriented)
+            with regime.ceilings(-1, -1):
+                out["n_triangles"] = triangle_count_arrays(oriented)
         elif job == "tc_join":
-            # shuffle closure: the all-shuffle plan is the form whose
-            # scaling the two-cluster criterion constrains (broadcast
-            # build is a serial driver-side step)
-            out["n_triangles"] = triangles_join(oriented, closure=False).count()
+            with regime.ceilings(-1, -1):
+                out["n_triangles"] = triangles_join(oriented).count()
         elif job == "tc_kernel":
             # n_parts = the shuffle-partition count: halo arrays replicate
             # once per demanding group, so finer groups multiply shuffle
@@ -222,18 +242,21 @@ def main() -> None:
             # two-cluster-size criterion and the kernel is reported as
             # the absolute regime. τ caps the power-law hubs (Σ C(d,2)
             # is quadratic in hub degree); the capped score is the
-            # registered-query contract.
+            # registered-query contract. The kernel runs under ceilings
+            # above every size estimate, so its probe settles from the
+            # estimate with no job.
             from trianglecount_spark.operators.metrics import (
                 link_prediction_jaccard,
             )
 
-            out["n_pairs"] = link_prediction_jaccard(
-                sym,
-                min_common=4,
-                max_center_degree=64,
-                broadcast_adjacency=(job == "linkpred"),
-                kernel_parts=SHUFFLE_PARTITIONS,
-            ).count()
+            pinned = (1 << 63, 1 << 63) if job == "linkpred" else (-1, -1)
+            with regime.ceilings(*pinned):
+                out["n_pairs"] = link_prediction_jaccard(
+                    sym,
+                    min_common=4,
+                    max_center_degree=64,
+                    kernel_parts=SHUFFLE_PARTITIONS,
+                ).count()
         elif job.startswith("webe2e"):
             from trianglecount_spark.functions.extract import edges_from_pages
             from trianglecount_spark.operators.canonicalize import (
@@ -253,7 +276,8 @@ def main() -> None:
             sym_w.count()
             ori_w = orient(sym_w).persist()
             ori_w.count()
-            out["n_triangles"] = distributed_count_arrays(ori_w)
+            with regime.ceilings(-1, -1):
+                out["n_triangles"] = triangle_count_arrays(ori_w)
             for h in handles + [sym_w, ori_w]:
                 h.unpersist()
         elif job == "pagerank10":
@@ -283,37 +307,31 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown job {job}")
 
-    try:
-        # pagerank's 10 rounds amortize their own JIT warmup; a 2-round
-        # mini-run still pre-compiles the per-round plan shapes
-        if job.startswith("pagerank10"):
-            w, _ = pagerank(
-                sym,
-                tol=0.0,
-                max_iter=2,
-                check_every=2,
-                dangling_free=True,
-                broadcast_state=(job == "pagerank10bc"),
-            )
-            w.count()
-            reps = min(reps, 2)
-        else:
-            run_once()
+    # pagerank's 10 rounds amortize their own JIT warmup; a 2-round
+    # mini-run still pre-compiles the per-round plan shapes
+    if job.startswith("pagerank10"):
+        w, _ = pagerank(
+            sym,
+            tol=0.0,
+            max_iter=2,
+            check_every=2,
+            dangling_free=True,
+            broadcast_state=(job == "pagerank10bc"),
+        )
+        w.count()
+        reps = min(reps, 2)
+    else:
+        run_once()
 
-        times = []
-        for _ in range(reps):
-            t0 = time.time()
-            run_once()
-            times.append(round(time.time() - t0, 3))
-        out["reps"] = times
-        out["seconds"] = min(times)
+    times = []
+    for _ in range(reps):
+        t0 = time.time()
+        run_once()
+        times.append(round(time.time() - t0, 3))
+    out["reps"] = times
+    out["seconds"] = min(times)
 
-        print(json.dumps(out))
-        spark.stop()
-    finally:
-        # always reclaim the tmpfs shuffle dir — a crashed/timed-out job
-        # must not leave spill in /dev/shm distorting later measurements
-        shutil.rmtree(local_dir, ignore_errors=True)
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

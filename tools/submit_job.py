@@ -94,7 +94,6 @@ def main() -> None:
     sym = canonicalize_edges(raw).cache()
     if args.algo in ("tc", "tc-kernel"):
         oriented = orient(sym).cache()
-        oriented.count()
         pv = (
             triangles_per_vertex_arrays(oriented)
             if args.algo == "tc"
@@ -122,7 +121,7 @@ def main() -> None:
         )
         labels.write.mode("overwrite").parquet(args.output)
     if log is not None:
-        log.dump(args.output.rstrip("/") + "_metrics.json")
+        log.dump(spark, args.output.rstrip("/") + "_metrics.json")
 
 
 if __name__ == "__main__":

@@ -3,10 +3,11 @@
 Isolates which stage binds the end-to-end webe2esh scaling row in
 BENCH/BASELINE.md: each stage is timed behind a persist+count barrier
 on its input (so a stage's cell times ONLY its own work), in a fresh
-JVM per (cpus, rep) with the identical measurement discipline as
-tools/scaling_job.py (ActiveProcessorCount, pre-touched heap, tmpfs
-shuffle, 64 shuffle partitions at every level, broadcast joins
-disabled — the webe2esh all-shuffle regime).
+JVM per cpus level, in tools/scaling_job.py's measurement session
+(ActiveProcessorCount, pre-touched heap, tmpfs shuffle, 64 shuffle
+partitions at every level) with broadcast joins disabled and the
+broadcast ceilings at -1 (``regime.ceilings``) — the webe2esh
+all-shuffle regime, so no stage runs resident.
 
 Stages:
   extract   href mining (Arrow mapInPandas) -> raw link table
@@ -33,39 +34,34 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from trianglecount_spark.session import default_driver_memory, get_spark  # noqa: E402
+from scaling_job import SHUFFLE_PARTITIONS, fresh_jvm_session  # noqa: E402
+from trianglecount_spark.functions.extract import extract_links  # noqa: E402
+from trianglecount_spark.operators import regime  # noqa: E402
+from trianglecount_spark.operators.canonicalize import (  # noqa: E402
+    canonicalize_edges_packed,
+    orient,
+    vertex_dictionary_scalable,
+)
+from trianglecount_spark.operators.triangles import triangle_count_arrays  # noqa: E402
+from trianglecount_spark.sources.pages import make_pages  # noqa: E402
 
 N_PAGES, N_SITES = 2_400_000, 80_000
-SHUFFLE_PARTITIONS = 64
-DRIVER_MEM = default_driver_memory()
 
 
 def main() -> None:
     cpus = int(sys.argv[1])
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    from trianglecount_spark.operators.canonicalize import (
-        canonicalize_edges_packed,
-        orient,
-        vertex_dictionary_scalable,
-    )
-    from trianglecount_spark.functions.extract import extract_links
-    from trianglecount_spark.operators.triangles import triangle_count_arrays
-    from trianglecount_spark.sources.pages import make_pages
+    with fresh_jvm_session(
+        f"web-piecewise-{cpus}",
+        cpus,
+        {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+    ) as spark, regime.ceilings(-1, -1):
+        best = run_stages(spark, reps)
+    print(json.dumps({"cpus": cpus, "pages": N_PAGES, "best": best}))
 
-    spark = get_spark(
-        app_name=f"web-piecewise-{cpus}",
-        cores=cpus,
-        shuffle_partitions=SHUFFLE_PARTITIONS,
-        driver_memory=DRIVER_MEM,
-        extra_confs={
-            "spark.driver.extraJavaOptions": (
-                f"-XX:ActiveProcessorCount={cpus} -Xms{DRIVER_MEM} "
-                "-XX:+AlwaysPreTouch -XX:+UseTransparentHugePages"
-            ),
-            "spark.local.dir": f"/dev/shm/spark-piecewise-{cpus}",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
-    )
+
+def run_stages(spark, reps: int) -> dict[str, float]:
+    """Best-of-``reps`` seconds per stage (after one untimed warmup)."""
     pages = make_pages(
         spark, n_pages=N_PAGES, n_sites=N_SITES, n_partitions=SHUFFLE_PARTITIONS
     ).cache()
@@ -124,7 +120,7 @@ def main() -> None:
         if _rep > 0:
             for k, v in cells.items():
                 best[k] = min(best.get(k, 1e18), v)
-    print(json.dumps({"cpus": cpus, "pages": N_PAGES, "best": best}))
+    return best
 
 
 if __name__ == "__main__":

@@ -2,7 +2,6 @@ from trianglecount_spark.operators.canonicalize import (
     canonicalize_edges,
     degrees,
     orient,
-    vertex_dictionary,
     vertex_dictionary_scalable,
 )
 from trianglecount_spark.operators.triangles import (
@@ -16,7 +15,6 @@ __all__ = [
     "canonicalize_edges",
     "degrees",
     "orient",
-    "vertex_dictionary",
     "vertex_dictionary_scalable",
     "triangle_count_arrays",
     "triangle_count_join",

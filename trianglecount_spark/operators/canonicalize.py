@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, IntegralType, StringType
 
@@ -256,33 +256,15 @@ def _oriented_graph(sym_edges: DataFrame) -> ResidentGraph | None:
     return g.subgraph((ds > 0) & ((ds < dd) | ((ds == dd) & (g.dst < g.src))))
 
 
-def vertex_dictionary(keys: DataFrame, key_col: str = "url") -> DataFrame:
-    """Deterministic key→long id dictionary: ``<key_col>, vid``.
-
-    Uses ``row_number`` over a total sort of the distinct keys —
-    deterministic under task retries, unlike
-    ``monotonically_increasing_id``. ids are contiguous 0..N-1 (the
-    reference's DGL relabeling, SURVEY.md §1.1 step 4).
-
-    Scale note: a single global row_number window serializes through one
-    task. For 10^12 keys use the two-phase variant: sort → per-partition
-    row_number + partition-offset cumsum (zipWithIndex-style). The
-    two-phase form is what ``vertex_dictionary_scalable`` implements.
-    """
-    w = Window.orderBy(F.col(key_col))
-    return keys.select(key_col).distinct().select(
-        F.col(key_col), (F.row_number().over(w) - F.lit(1)).cast("long").alias("vid")
-    )
-
-
 def vertex_dictionary_scalable(keys: DataFrame, key_col: str = "url") -> DataFrame:
     """Two-phase deterministic id assignment that never funnels through a
     single task: range-partition by key, number within partitions, then
     add per-partition offsets (computed from partition sizes, a tiny
     driver-side cumsum).
 
-    The output mapping is exactly key → global sorted rank (identical to
-    ``vertex_dictionary``): range boundaries only decide WHERE a key is
+    The output mapping is exactly key → global sorted rank, ids
+    contiguous 0..N-1 (the reference's DGL relabeling, SURVEY.md §1.1
+    step 4): range boundaries only decide WHERE a key is
     numbered, never its final id, so the result is deterministic under
     retries and independent of the sampled range split.
 

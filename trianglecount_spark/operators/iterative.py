@@ -17,7 +17,8 @@ process); PageRank / CC / LPA are driver-mandated extensions
 - per-check metrics: deltas / wall time / partition counts — and, with
   ``partition_metrics=True``, per-partition row counts + skew ratio —
   returned as an IterationLog (the per-partition lineage+metrics the
-  north_rule asks for); ``log.dump(path)`` writes the JSON. Every entry
+  north_rule asks for); ``log.dump(spark, path)`` writes the JSON on
+  the path's filesystem (sources/fsio.py). Every entry
   names the ``regime`` the round ran in.
 
 The RESIDENT regime is the reference's other half: a graph that fits
@@ -43,7 +44,6 @@ distributed consumer never collects.
 from __future__ import annotations
 
 import json
-import os
 import time
 import weakref
 from dataclasses import dataclass, field
@@ -101,10 +101,10 @@ class IterationLog:
     def add(self, **kw) -> None:
         self.rounds.append(kw)
 
-    def dump(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(self.rounds, f, indent=1)
+    def dump(self, spark: SparkSession, path: str) -> None:
+        """The rounds as JSON at ``path`` — any Hadoop URI (``hdfs:``,
+        ``s3a:``, ``file:``), next to the output it describes."""
+        fsio.write_text(spark, path, json.dumps(self.rounds, indent=1))
 
 
 def _last_complete_round(spark: SparkSession, state_dir: str) -> int | None:

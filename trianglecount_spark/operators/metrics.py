@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from trianglecount_spark.operators.canonicalize import degrees, orient
 from trianglecount_spark.operators.iterative import IterationLog, iterate
-from trianglecount_spark.operators.regime import resolve_broadcast
+from trianglecount_spark.operators.regime import fits_broadcast
 from trianglecount_spark.operators.triangles import triangles_join
 
 
@@ -146,7 +146,6 @@ def _pair_counts(
     deg: DataFrame,
     min_common: int,
     max_center_degree: int | None,
-    broadcast_adjacency: bool | str,
     with_ra: bool = True,
     kernel_parts: int | None = None,
 ) -> DataFrame:
@@ -156,25 +155,20 @@ def _pair_counts(
     deg(center), the resource-allocation numerator — computing both in
     one pass costs one extra int64 column).
 
-    ``broadcast_adjacency="auto"`` (the r4 default at the public API)
-    CHECKS the two kernel regime bounds at plan time instead of
-    trusting the call site: the kernel is selected iff the hub cap is
-    set (bound 2 — per-task pair memory C(τ,2)·centers/task) AND the
-    capped-center adjacency fits the broadcast ceiling (bound 1 —
-    driver CSR + broadcast, ``regime.fits_broadcast``); anything else
-    routes to the always-correct shuffle form. Explicit
-    ``True``/``False`` remain as overrides, except that the
-    memory-unsafe combination ``True`` with ``max_center_degree=None``
-    now raises: uncapped hub graphs violate bound 2 by construction
-    (measured 37-143 s swings from Python-heap thrash; the JVM shuffle
-    agg handles the same stream spill-managed) — there is no input on
-    which that pairing is the right plan.
+    The two kernel regime bounds are checked at plan time: the kernel
+    runs iff the hub cap is set (bound 2 — per-task pair memory
+    C(τ,2)·centers/task) AND the capped-center adjacency fits the
+    broadcast ceiling (bound 1 — driver CSR + broadcast,
+    ``regime.fits_broadcast``); anything else routes to the
+    always-correct shuffle form. Uncapped hub graphs violate bound 2 by
+    construction (measured 37-143 s swings from Python-heap thrash; the
+    JVM shuffle agg handles the same stream spill-managed).
 
     Two physical regimes, both exact and bit-identical:
 
-    ``broadcast_adjacency=False`` (default — the all-shuffle plan):
-    wedge self-join on the center, then ``repartition('u')`` BEFORE the
-    pair aggregation. The repartition matters: HashPartitioning on
+    The all-shuffle plan: wedge self-join on the center, then
+    ``repartition('u')`` BEFORE the pair aggregation. The repartition
+    matters: HashPartitioning on
     ``u`` satisfies the groupBy(u, w) clustering requirement (u is a
     subset of the group key), so the agg runs as ONE hash aggregate per
     partition instead of partial→shuffle→final over a ~100M-distinct-
@@ -183,54 +177,41 @@ def _pair_counts(
     pairs, local[32]: plain groupBy 167 s → repartition-first 42 s).
     Works at any scale — nothing is collected or broadcast.
 
-    ``broadcast_adjacency=True`` (the shared-graph kernel, the same
-    regime family as the reference's shared-memory tiling,
-    ShareKernelTCV62_update_v1.cu:100-173): the capped-center adjacency
-    is collected to a driver CSR (three int64 arrays, O(E_capped) ≈
-    24 B/directed edge — 19 MB at sf0.1) and broadcast; the only
-    shuffle is a repartition of the E-row ``(v, u)`` edge stream by
-    ``u``. Each task expands its rows' strict-suffix neighbor pairs
-    vectorized in numpy and aggregates them locally (one flat-integer
-    sort over packed ``(u_rank << 32) | w_rank`` keys — see the kernel
-    comment): because ALL rows of a given u sit in one partition, the
-    per-(u, w) counts are complete in-task and the ``min_common``
-    filter drops ~100% of the pair stream BEFORE anything is emitted —
-    no 120M-row shuffle, no JVM hash table at all (measured at sf0.1,
-    jaccard pair-count pass: 12-24 s single-shot — pure numpy is
-    ~1.4 s/task; the spread is Python-worker + broadcast-deser +
+    The shared-graph kernel (the same regime family as the reference's
+    shared-memory tiling, ShareKernelTCV62_update_v1.cu:100-173): the
+    capped-center adjacency is collected to a driver CSR (three int64
+    arrays, O(E_capped) ≈ 24 B/directed edge — 19 MB at sf0.1) and
+    broadcast; the only shuffle is a repartition of the E-row ``(v, u)``
+    edge stream by ``u``. Each task expands its rows' strict-suffix
+    neighbor pairs vectorized in numpy and aggregates them locally (one
+    flat-integer sort over packed ``(u_rank << 32) | w_rank`` keys — see
+    the kernel comment): because ALL rows of a given u sit in one
+    partition, the per-(u, w) counts are complete in-task and the
+    ``min_common`` filter drops ~100% of the pair stream BEFORE anything
+    is emitted — no 120M-row shuffle, no JVM hash table at all (measured
+    at sf0.1, jaccard pair-count pass: 12-24 s single-shot — pure numpy
+    is ~1.4 s/task; the spread is Python-worker + broadcast-deser +
     concurrent-worker memory contention — vs 41.7 s for the shuffle
-    form). TWO regime bounds, both required:
-    (1) E_capped ≤ |V|·τ int64s must broadcast (~8 GB at 10^9 capped
-    directed edges); (2) each task holds its partitions' RAW pair
-    stream for the flat sort — Σ C(d,2)/n_parts packed uint64s — so
-    the kernel needs the hub cap to bound it at C(τ,2)·centers/task.
-    UNCAPPED hub graphs violate (2): at sf0.1 on the events graph
-    (τ=None) 32 concurrent workers thrash memory and wall time swings
-    37-143 s across identical reps, while the JVM shuffle agg handles
-    the same stream in a stable 42 s warm — spill-managed execution
-    memory vs Python heaps. The regime rule: kernel when capped,
-    shuffle form when τ=None (q_link_prediction_exact).
+    form). TWO regime bounds, both required: (1) E_capped ≤ |V|·τ int64s
+    must broadcast (~8 GB at 10^9 capped directed edges); (2) each task
+    holds its partitions' RAW pair stream for the flat sort — Σ
+    C(d,2)/n_parts packed uint64s — so the kernel needs the hub cap to
+    bound it at C(τ,2)·centers/task. UNCAPPED hub graphs violate (2): at
+    sf0.1 on the events graph (τ=None) 32 concurrent workers thrash
+    memory and wall time swings 37-143 s across identical reps, while
+    the JVM shuffle agg handles the same stream in a stable 42 s warm —
+    spill-managed execution memory vs Python heaps. The regime rule:
+    kernel when capped, shuffle form when τ=None
+    (q_link_prediction_exact).
 
     ``ra_millionths`` sums per-center integer weights ≤ 10^6 with ≤
     max-degree terms per pair — far inside float64's 2^53 exact-integer
     range in the kernel's bincount, emitted as int64; both regimes and
     the SQL oracle agree bit-for-bit."""
     centered = _wedge_centers(sym_edges, deg, max_center_degree)
-    if broadcast_adjacency == "auto" and max_center_degree is None:
-        broadcast_adjacency = False  # bound 2 fails: no hub cap
-    # bound 1: the capped adjacency must fit the driver-CSR broadcast
-    broadcast_adjacency = resolve_broadcast(
-        broadcast_adjacency, centered.select("v", "u")
-    )
-    if broadcast_adjacency and max_center_degree is None:
-        raise ValueError(
-            "broadcast_adjacency=True with max_center_degree=None is "
-            "memory-unsafe: the kernel's per-task pair sort is bounded "
-            "only by the hub cap (C(tau,2) per center). Set a cap, or "
-            "use broadcast_adjacency=False/'auto' — the shuffle form "
-            "handles uncapped hub graphs spill-managed."
-        )
-    if not broadcast_adjacency:
+    # bound 2 (the hub cap), then bound 1: the capped adjacency must fit
+    # the driver-CSR broadcast
+    if max_center_degree is None or not fits_broadcast(centered.select("v", "u")):
         e1 = centered.select(
             "v", "u", F.expr("1000000 div cdeg").cast("long").alias("ra_part")
         )
@@ -401,7 +382,6 @@ def link_prediction_jaccard(
     sym_edges: DataFrame,
     min_common: int = 2,
     max_center_degree: int | None = None,
-    broadcast_adjacency: bool | str = "auto",
     kernel_parts: int | None = None,
 ) -> DataFrame:
     """Common-neighbor link prediction over a symmetric edge table:
@@ -413,10 +393,8 @@ def link_prediction_jaccard(
     The pair counting runs in ``_pair_counts``, which owns the two
     physical regimes and their measured costs (sf0.1 copurchase, 120M
     wedges, local[32]: shuffle form 41.7 s; broadcast-CSR kernel
-    12-24 s single-shot —
-    opt in with ``broadcast_adjacency=True`` while the capped adjacency
-    fits the broadcast bound, the conservative-default convention of
-    pagerank/lpa/core_numbers). On top of the counts: an anti-join
+    12-24 s single-shot — chosen there, from the hub cap and the
+    capped adjacency's size). On top of the counts: an anti-join
     against the edge set and two degree joins — all on the ≥min_common
     survivors, a vanishing fraction of the wedge stream. ``common`` and
     both degrees are exact integers and jaccard is one double division
@@ -437,7 +415,6 @@ def link_prediction_jaccard(
         deg,
         min_common,
         max_center_degree,
-        broadcast_adjacency,
         with_ra=False,
         kernel_parts=kernel_parts,
     ).drop("ra_millionths")
@@ -513,7 +490,6 @@ def bfs_distances(
     sym_edges: DataFrame,
     source: int,
     max_rounds: int = 32,
-    broadcast_state: bool | str = "auto",
 ) -> tuple[DataFrame, IterationLog]:
     """Single-source BFS shortest-path distances over a symmetric edge
     table: ``v, dist`` for every vertex reachable from ``source``.
@@ -526,15 +502,14 @@ def bfs_distances(
 
     The frontier is vertex-sized (a slice of the visited set) while the
     edge table is edge-sized: the frontier broadcasts onto the pinned
-    edge table, making each expansion shuffle-free on the edge side.
-    The default ``broadcast_state="auto"`` picks that regime from the
-    edge table's Catalyst size estimate (a sound upper bound on the
-    vertex-sized state) and degrades to a shuffle join past the byte
-    ceiling — the 10^12-url regime where a frontier can exceed the
-    broadcast limit; ``True``/``False`` force a regime (same tri-state
-    as pagerank/label_propagation/core_numbers)."""
-    broadcast_state = resolve_broadcast(broadcast_state, sym_edges)
-    pin = F.broadcast if broadcast_state else (lambda df: df)
+    edge table, making each expansion shuffle-free on the edge side,
+    while ``regime.fits_broadcast`` holds for the edge table (a sound
+    upper bound on the vertex-sized state: the state never exceeds one
+    row per edge endpoint); past the ceiling — the 10^12-url regime
+    where a frontier can exceed the broadcast limit — it degrades to a
+    shuffle join."""
+    broadcast = fits_broadcast(sym_edges)
+    pin = F.broadcast if broadcast else (lambda df: df)
     sym_edges = sym_edges.localCheckpoint(eager=False)  # one round-loop pin
     spark = sym_edges.sparkSession
     init = spark.range(1).select(
@@ -561,7 +536,7 @@ def bfs_distances(
 
     return iterate(
         init, step, delta, max_iter=max_rounds, check_every=2,
-        regime="broadcast" if broadcast_state else "shuffle",
+        regime="broadcast" if broadcast else "shuffle",
     )
 
 
@@ -570,7 +545,6 @@ def sssp_distances(
     source: int,
     weight_col: str = "w",
     rounds: int = 8,
-    broadcast_state: bool | str = "auto",
 ) -> tuple[DataFrame, IterationLog]:
     """Weighted single-source shortest paths: ``rounds`` synchronous
     Bellman–Ford relaxations over a directed weighted edge table
@@ -586,13 +560,12 @@ def sssp_distances(
     the same shuffle keys every round, so AQE reuses the partitioning.
     The distance state is vertex-sized: while it fits the broadcast
     ceiling it broadcasts onto the pinned edge table, so the relax
-    join ships no edge bytes per round; ``broadcast_state="auto"``
-    (default) decides that from the edge table's size estimate and
-    swaps in the shuffle join for the 10^12-vertex regime where a
-    |V|-row state exceeds the broadcast limit (``True``/``False``
-    force a regime, same tri-state as pagerank/label_propagation)."""
-    broadcast_state = resolve_broadcast(broadcast_state, weighted_edges)
-    pin = F.broadcast if broadcast_state else (lambda df: df)
+    join ships no edge bytes per round; ``regime.fits_broadcast`` on
+    the edge table decides that, and the shuffle join takes over in
+    the 10^12-vertex regime where a |V|-row state exceeds the broadcast
+    limit."""
+    broadcast = fits_broadcast(weighted_edges)
+    pin = F.broadcast if broadcast else (lambda df: df)
     INF = 1 << 40
     weighted_edges = weighted_edges.localCheckpoint(eager=False)
     verts = (
@@ -627,7 +600,7 @@ def sssp_distances(
 
     return iterate(
         init, step, delta, max_iter=rounds, check_every=rounds,
-        regime="broadcast" if broadcast_state else "shuffle",
+        regime="broadcast" if broadcast else "shuffle",
     )
 
 
@@ -668,9 +641,7 @@ def k_core(
     return core, log
 
 
-def core_numbers(
-    sym_edges: DataFrame, rounds: int = 8, broadcast_state: bool | str = "auto"
-) -> DataFrame:
+def core_numbers(sym_edges: DataFrame, rounds: int = 8) -> DataFrame:
     """FULL core decomposition — per-vertex coreness ``v, coreness``
     (the largest k such that v survives k-core peeling), complementing
     ``k_core``'s fixed-k subgraph.
@@ -686,11 +657,10 @@ def core_numbers(
 
     Physical shape per round: the state is VERTEX-sized (one long per
     vertex) while the work table is EDGE-sized, so the state ships to
-    the edges — broadcast while the size estimate allows
-    (``broadcast_state="auto"``, resolved from the edge table's
-    Catalyst stats; beyond the ceiling — the 10^12-url regime — it
-    degrades to a shuffle join; ``True``/``False`` force a regime). The edge table is hash-partitioned on src ONCE
-    up front; the broadcast join preserves that partitioning, so the
+    the edges — broadcast while ``regime.fits_broadcast`` holds for the
+    edge table; beyond the ceiling — the 10^12-url regime — it
+    degrades to a shuffle join. The edge table is hash-partitioned on
+    src ONCE up front; the broadcast join preserves that partitioning, so the
     per-vertex window (row_number over values desc — per-vertex, never
     global) and the max(min(rank, value)) agg both reuse it: a round is
     ONE stage of local sorts, no per-round edge shuffle. The H-index
@@ -701,8 +671,7 @@ def core_numbers(
     sym_edges = sym_edges.repartition("src").localCheckpoint(eager=True)
     h = degrees(sym_edges).select("v", F.col("deg").cast("long").alias("h"))
     w = Window.partitionBy("v").orderBy(F.desc("nh"))
-    broadcast_state = resolve_broadcast(broadcast_state, sym_edges)
-    pin = F.broadcast if broadcast_state else (lambda df: df)
+    pin = F.broadcast if fits_broadcast(sym_edges) else (lambda df: df)
     for _ in range(rounds):
         nbr = sym_edges.join(
             pin(h.select(F.col("v").alias("dst"), F.col("h").alias("nh"))), "dst"
@@ -747,7 +716,6 @@ def shortest_path_counts(
     sym_edges: DataFrame,
     source: int,
     rounds: int = 6,
-    broadcast_state: bool | str = "auto",
 ) -> DataFrame:
     """Shortest-path COUNTING from one source — the exact-integer
     forward pass of Brandes' betweenness: ``v, dist, sigma`` where
@@ -765,12 +733,10 @@ def shortest_path_counts(
     the principled oracle-checkable unit; sampled betweenness composes
     it with a driver-side accumulation in tests if ever needed.)
 
-    ``broadcast_state="auto"`` (default) broadcasts the frontier while
-    the edge-table size estimate fits the ceiling and swaps in a
-    shuffle join past it (10^12-url frontiers — same tri-state as
-    pagerank/label_propagation/bfs_distances)."""
-    broadcast_state = resolve_broadcast(broadcast_state, sym_edges)
-    pin = F.broadcast if broadcast_state else (lambda df: df)
+    The frontier broadcasts while ``regime.fits_broadcast`` holds for
+    the edge table and takes a shuffle join past it (10^12-url
+    frontiers), as in ``bfs_distances``."""
+    pin = F.broadcast if fits_broadcast(sym_edges) else (lambda df: df)
     # pinned once: every level joins the frontier against `sym_edges`
     sym_edges = sym_edges.localCheckpoint(eager=False)
     spark = sym_edges.sparkSession
@@ -858,7 +824,6 @@ def link_prediction_ra(
     sym_edges: DataFrame,
     min_common: int = 2,
     max_center_degree: int | None = None,
-    broadcast_adjacency: bool | str = "auto",
     kernel_parts: int | None = None,
 ) -> DataFrame:
     """Resource-allocation link prediction: non-adjacent pairs ``u < w``
@@ -886,7 +851,6 @@ def link_prediction_ra(
         deg,
         min_common,
         max_center_degree,
-        broadcast_adjacency,
         kernel_parts=kernel_parts,
     )
     existing = sym_edges.where(F.col("src") < F.col("dst")).select(

@@ -1,40 +1,64 @@
 """The one broadcast-or-shuffle regime rule.
 
-Every ``"auto"`` physical-regime decision in the engine — the closure
-side of the triangle joins, the vertex-sized state of the iterative and
-frontier operators, the link-prediction adjacency — is the same
-question the reference answers once: does the operand fit in one
-worker's memory (the whole CSR resident on-device), or must it be
-partitioned? Here "fits" means "can be broadcast", and the answer comes
-from ``fits_broadcast``; every regime flag goes through
-``resolve_broadcast``. For the iterative operators and the arrays
-triangle count a fitting graph is not partitioned at all: it goes to
-the resident regime (operators/iterative.py; operators/triangles.py),
-the reference's on-device CSR, built once per job from the raw edges
-(operators/canonicalize.py); those consumers ask ``fits_resident``,
-which builds the graph a frame carries, while ``fits_broadcast`` never
-builds one. PageRank alone keeps a third regime between them: an edge
-table over the ceiling whose vertex table fits broadcasts the rank
-vector (``resolve_broadcast`` on that vertex table). Resident was
-measured faster than the distributed plans at every size run, up to
-16M raw edges (31.9M symmetric rows, just under ``ROW_LIMIT``;
-tools/resident_crossover.py, README "Measured regime rules"), so the
-ceilings below stand as the crossover. Larger raw inputs are
-unmeasured: there the builders decline and the frame's own probe
-decides.
+Every physical-regime decision in the engine — the closure side of the
+triangle joins, the vertex-sized state of the iterative and frontier
+operators, the link-prediction adjacency — is the same question the
+reference answers once: does the operand fit in one worker's memory
+(the whole CSR resident on-device), or must it be partitioned? Here
+"fits" means "can be broadcast", and the answer comes from
+``fits_broadcast``, which each operator asks inside its one entry
+point; no caller picks a plan. For the iterative operators and the
+arrays triangle count a fitting graph is not partitioned at all: it
+goes to the resident regime (operators/iterative.py;
+operators/triangles.py), the reference's on-device CSR, built once per
+job from the raw edges (operators/canonicalize.py); those consumers
+ask ``fits_resident``, which builds the graph a frame carries, while
+``fits_broadcast`` never builds one. PageRank alone keeps a third
+regime between them: an edge table over the ceiling whose vertex table
+fits broadcasts the rank vector (``resolve_broadcast`` on that vertex
+table), and it alone still takes a ``broadcast_state`` override.
+Resident was measured faster than the distributed plans at every size
+run, up to 16M raw edges (31.9M symmetric rows, just under
+``ROW_LIMIT``; tools/resident_crossover.py, README "Measured regime
+rules"), so the ceilings below stand as the crossover. Larger raw
+inputs are unmeasured: there the builders decline and the frame's own
+probe decides.
+
+Tools and tests pin a plan only through the ceilings: ``ceilings(-1,
+-1)`` sends every decision to its distributed plan with no probe job.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 from trianglecount_spark.operators.iterative import attached_graph, built_graph
 
 # Broadcast ceilings: 32M packed edges ≈ 512 MB serialized — the
-# practical single-executor broadcast ceiling. Tests shrink them to
-# force the shuffle regime on a small fixture.
+# practical single-executor broadcast ceiling. Set them only through
+# ``ceilings`` (tests monkeypatch them).
 BYTE_LIMIT = 512 * 1024 * 1024
 ROW_LIMIT = 32_000_000
+
+
+@contextmanager
+def ceilings(byte_limit: int, row_limit: int) -> Iterator[None]:
+    """Both broadcast ceilings set for the block, restored on exit: how a
+    tool pins a plan. Decisions are taken when an operator builds its
+    plan, so the operator call goes inside the block. At ``-1`` nothing
+    fits and no probe runs a job; ceilings above every estimate let
+    each probe settle from its estimate, with no job."""
+    global BYTE_LIMIT, ROW_LIMIT
+    saved = BYTE_LIMIT, ROW_LIMIT
+    BYTE_LIMIT, ROW_LIMIT = byte_limit, row_limit
+    try:
+        yield
+    finally:
+        BYTE_LIMIT, ROW_LIMIT = saved
+
 
 # For FILE-SCAN relations Catalyst's sizeInBytes is the COMPRESSED
 # on-disk footprint (spark.sql.sources.fileCompressionFactor defaults to
@@ -127,16 +151,11 @@ def check_flag(flag: bool | str) -> bool | str:
 
 
 def resolve_broadcast(flag: bool | str, proxy: DataFrame) -> bool:
-    """Resolve a regime tri-state (``closure``, ``broadcast_state``,
-    ``broadcast_adjacency``) to a bool: ``True``/``False`` pass through
-    as explicit overrides; ``"auto"`` is ``fits_broadcast(proxy)``.
-    Callers pass the EDGE table as the proxy for vertex-sized state (a
-    sound upper bound: the state never exceeds one row per edge
-    endpoint), so an oversized input degrades to the always-correct
-    shuffle regime instead of failing at the broadcast. ``pagerank``,
-    which caches and counts its vertex table anyway, passes that.
-
-    Anything else raises (``check_flag``)."""
+    """Resolve PageRank's ``broadcast_state`` tri-state to a bool:
+    ``True``/``False`` pass through as explicit overrides; ``"auto"`` is
+    ``fits_broadcast(proxy)``, where ``pagerank`` passes the vertex
+    table it caches and counts anyway. Anything else raises
+    (``check_flag``)."""
     if check_flag(flag) == "auto":
         return fits_broadcast(proxy)
     return bool(flag)

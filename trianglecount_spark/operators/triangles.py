@@ -53,17 +53,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 from trianglecount_spark.operators.iterative import collect_edges, local_frame
-from trianglecount_spark.operators.regime import (
-    fits_broadcast,
-    fits_resident,
-    resolve_broadcast,
-)
+from trianglecount_spark.operators.regime import fits_broadcast, fits_resident
 
 # ---------------------------------------------------------------------------
 # Strategy 1: declarative join form
 # ---------------------------------------------------------------------------
 
-def triangles_join(oriented: DataFrame, closure: bool | str = "auto") -> DataFrame:
+def triangles_join(oriented: DataFrame) -> DataFrame:
     """All triangles as (u, v, w) rows, u ≺ v ≺ w in oriented order.
 
     Wedge join on v, then closure semi-join of (u, w) against the edge
@@ -71,25 +67,20 @@ def triangles_join(oriented: DataFrame, closure: bool | str = "auto") -> DataFra
     (≤ O(√E) amortized), which is what makes the wedge join feasible on
     power-law graphs at all.
 
-    ``closure`` picks the physical strategy for the closure probe, the
-    regime tri-state of ``regime.resolve_broadcast`` with the edge side
-    as its own proxy:
-    - ``True``: broadcast-hash semi-join — the wedge stream is
-      filtered in place, never shuffled. The dominant cost of the
-      declarative form is otherwise the exchange of |wedges| ≫ |E| rows;
-      broadcasting the *edge* side (16 bytes/row) eliminates it. This is
-      the physical analog of the reference keeping the full CSR resident
-      on-device and probing it per wedge
-      (ShareKernelTCV62_update_v1.cu:100-173).
-    - ``False``: shuffled semi-join — required when E itself is too
-      big for one executor's memory (the 100 TB regime); AQE handles
-      skew splitting.
-    - ``"auto"``: broadcast iff ``regime.fits_broadcast(oriented)``.
+    The closure probe broadcasts its edge side iff
+    ``regime.fits_broadcast(oriented)``: a broadcast-hash semi-join
+    filters the wedge stream in place, never shuffling it. The dominant
+    cost of the declarative form is otherwise the exchange of
+    |wedges| ≫ |E| rows; broadcasting the *edge* side (16 bytes/row)
+    eliminates it — the physical analog of the reference keeping the
+    full CSR resident on-device and probing it per wedge
+    (ShareKernelTCV62_update_v1.cu:100-173). Past the ceiling (the
+    100 TB regime) the semi-join shuffles; AQE handles skew splitting.
     """
     e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     e2 = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
     e3 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    if resolve_broadcast(closure, oriented):
+    if fits_broadcast(oriented):
         e3 = F.broadcast(e3)
     wedges = e1.join(e2, "v")
     return wedges.join(e3, ["u", "w"], "left_semi").select("u", "v", "w")
@@ -206,11 +197,10 @@ _KERNEL_OUT_SCHEMA = "v long, tri long"
 _EMPTY = pd.DataFrame({"v": pd.Series([], dtype="int64"), "tri": pd.Series([], dtype="int64")})
 
 # row kinds in the kernel shuffle
-_K_HALO = 0          # adjacency operand: (v, full sorted N+(v))
-_K_SEED = 1          # unsalted anchor: seeds == full sorted N+(u)
-_K_SEED_SALTED = 2   # salted hub anchor: full N+(u); the kernel expands
-#                      only the group's bucket slice (dst % n_salts == b)
-#                      but probes against the full array
+_K_HALO = 0  # adjacency operand: (v, full sorted N+(v))
+_K_SEED = 1  # anchor: full sorted N+(u); in a salt-bucket group the
+#              kernel expands only the bucket's slice (dst % n_salts == b)
+#              but probes against the full array
 
 # wedges in flight per _count_closures call (one kernel pass; split over
 # the threads of a resident count) — caps the int64 probe-key / gather
@@ -548,18 +538,8 @@ def triangles_per_vertex_kernel(
     # routing assignments, all map-side-combined distincts on (id, part):
     #   anchors — one row per (anchor, group with ≥1 of its seeds);
     #   halos   — one row per (seed target, demanding group)  (P4 + P5)
-    anchors = (
-        ep.select(F.col("src").alias("v"), "part")
-        .distinct()
-        .select(
-            "v",
-            "part",
-            F.when(
-                F.pmod("part", F.lit(n_salts + 1)) == 0, F.lit(_K_SEED)
-            )
-            .otherwise(F.lit(_K_SEED_SALTED))
-            .alias("kind"),
-        )
+    anchors = ep.select(F.col("src").alias("v"), "part").distinct().select(
+        "v", "part", F.lit(_K_SEED).alias("kind")
     )
     halos = ep.select(F.col("dst").alias("v"), "part").distinct().select(
         "v", "part", F.lit(_K_HALO).alias("kind")
@@ -607,7 +587,7 @@ def weighted_triangle_total(raw_pairs: DataFrame) -> DataFrame:
     stream to Σ deg+²); the only addition is the exact-integer weight
     carried on each oriented edge and a LEAST folded at the closure
     match — no extra shuffle. The closure side follows
-    ``triangles_join``'s ``"auto"`` rule (broadcast the 24-byte/row
+    ``triangles_join``'s rule (broadcast the 24-byte/row
     weighted edge side while it fits, so the wedge stream is never
     exchanged; shuffle past the ceiling). Reference parity: the reference's
     edge_weight.cu is weight-free despite its name (SURVEY §2.4); this

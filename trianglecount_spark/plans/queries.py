@@ -659,8 +659,8 @@ def q_link_prediction(spark, sf_dir):
     exact cross-engine contract (the uncapped τ=None form stays the
     default API and is bruteforce-checked in tests/test_property.py
     and q_link_prediction_exact). No hard-coded regime (r3 verdict
-    #1): the default ``broadcast_adjacency="auto"`` measures the two
-    kernel bounds at plan time and picks the broadcast-CSR kernel here
+    #1): the engine measures the two kernel bounds at plan time and
+    picks the broadcast-CSR kernel here
     — the capped adjacency is ≤ |V|·τ int64s, far inside the broadcast
     bound at every test scale (sweep single-shot 19.7 s — was 40.0 s
     in r2 — vs 41.7 s shuffle form at sf0.1); past the bound the SAME
@@ -685,10 +685,8 @@ def q_link_prediction_exact(spark, sf_dir):
     regime on purpose: uncapped hub wedges violate the kernel regime's
     per-task pair-memory bound (metrics._pair_counts — measured 37-143s
     swings from Python memory thrash at sf0.1, vs the JVM agg's
-    spill-managed 42s warm). The regime rule is now IN the engine:
-    ``broadcast_adjacency="auto"`` (default) routes τ=None to the
-    all-shuffle plan, and the explicit kernel+uncapped combination
-    raises (r3 verdict #3)."""
+    spill-managed 42s warm). The regime rule is IN the engine, which
+    routes τ=None to the all-shuffle plan."""
     from trianglecount_spark.operators.canonicalize import canonicalize_edges
     from trianglecount_spark.operators.metrics import link_prediction_jaccard
 
@@ -4417,7 +4415,7 @@ SELECT v, min(m) AS comp FROM (
 """
 
 # web graph on vids: the url→vid dictionary (row_number over sorted urls,
-# identical to vertex_dictionary) applied to the mined link table, then
+# the sorted-rank mapping of vertex_dictionary_scalable) applied to the mined link table, then
 # symmetrized — the `und` table _pagerank_sql iterates over.
 _WEB_VID = _WEB + """
 , u AS MATERIALIZED (SELECT DISTINCT url FROM (
