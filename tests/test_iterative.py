@@ -245,18 +245,26 @@ def test_pagerank_resume_skips_partial_round_dir(spark, tmp_path):
 
 def test_pagerank_partition_metrics(spark):
     # north_rule: per-partition lineage + metrics — check rounds must
-    # record the per-partition row histogram and a skew ratio.
+    # record the per-partition row histogram and a skew ratio, with the
+    # same keys in the resident rounds (the default on bowtie) as in the
+    # forced shuffle plan's.
     raw, _ = GOLDEN["bowtie"]
     sym = canonicalize_edges(edges_df(spark, raw))
-    _, log = pagerank(
-        sym, tol=0.0, max_iter=4, check_every=4, partition_metrics=True,
-        broadcast_state=False,
-    )
-    entry = log.rounds[-1]
-    assert entry["rows_total"] == sym.select("src").distinct().count()
-    assert entry["rows_max_partition"] >= 1
-    assert entry["skew_ratio"] >= 1.0
-    assert sum(entry["rows_per_partition"]) == entry["rows_total"]
+    n_vertices = sym.select("src").distinct().count()
+    entries = {}
+    for flag in ("auto", False):
+        _, log = pagerank(
+            sym, tol=0.0, max_iter=4, check_every=4, partition_metrics=True,
+            broadcast_state=flag,
+        )
+        entry = entries[flag] = log.rounds[-1]
+        assert entry["rows_total"] == n_vertices
+        assert entry["rows_max_partition"] >= 1
+        assert entry["skew_ratio"] >= 1.0
+        assert sum(entry["rows_per_partition"]) == entry["rows_total"]
+    assert entries["auto"]["regime"] == "resident"
+    assert entries[False]["regime"] == "shuffle"
+    assert entries["auto"].keys() == entries[False].keys()
 
 
 def test_iteration_log_dump_follows_the_uri(spark, tmp_path):

@@ -223,12 +223,7 @@ def run_job(spark, cpus: int, job: str, n_edges: int, n_vertices: int, reps: int
             # Measured local[8]/8M edges: 64 parts 14.6s vs 256 parts
             # 19.4s. Held FIXED across parallelism levels.
             out["n_triangles"] = int(
-                triangles_per_vertex_kernel(
-                    oriented,
-                    n_parts=int(
-                        os.environ.get("SPARK_GRAFT_KERNEL_PARTS", SHUFFLE_PARTITIONS)
-                    ),
-                )
+                triangles_per_vertex_kernel(oriented, n_parts=SHUFFLE_PARTITIONS)
                 .agg(F.coalesce(F.sum("tri"), F.lit(0)).alias("t"))
                 .collect()[0]["t"]
             )

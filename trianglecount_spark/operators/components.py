@@ -30,7 +30,6 @@ from trianglecount_spark.operators.iterative import (
     IterationLog,
     collect_edges,
     iterate,
-    iterate_resident,
     local_frame,
     vertex_field,
 )
@@ -191,7 +190,7 @@ def _components_resident(
     state = g.symmetric_keys()
     log = IterationLog()
     if len(state):
-        state, log = iterate_resident(
+        state, log = iterate(
             state,
             lambda key, i: small_star(large_star(key)),
             lambda prev, cur: 0.0 if np.array_equal(prev, cur) else 1.0,
@@ -199,7 +198,7 @@ def _components_resident(
             check_every=check_every,
             state_dir=state_dir,
             resume=resume,
-            spark=spark,
+            regime="resident",
             to_frame=to_frame,
             from_frame=from_frame,
         )

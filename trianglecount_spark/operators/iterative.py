@@ -13,7 +13,8 @@ process); PageRank / CC / LPA are driver-mandated extensions
   the scalability ceiling of any iterative algorithm; this keeps them
   at one per ``check_every`` rounds.
 - resumability: optionally persist state to ``state_dir/round=NNN``
-  parquet; ``resume`` picks up the latest.
+  parquet; ``resume`` picks up the latest round with a ``_SUCCESS``
+  marker.
 - per-check metrics: deltas / wall time / partition counts — and, with
   ``partition_metrics=True``, per-partition row counts + skew ratio —
   returned as an IterationLog (the per-partition lineage+metrics the
@@ -26,10 +27,11 @@ one worker is not partitioned at all (the whole CSR stays on one
 device). ``collect_edges`` pulls an edge table that passed
 ``regime.fits_resident`` onto the driver once (Spark collects every
 broadcast relation there anyway, so the same ceilings bound it), and
-``iterate_resident`` runs the operator's numpy step with ``iterate``'s
-check cadence, stop rule, log keys and ``state_dir`` round format — so
-a run resumes across regimes. A resident round is microseconds of
-numpy instead of one or more Spark jobs.
+the same ``iterate`` loop runs the operator's numpy step
+(``regime="resident"``): one check cadence, stop rule, log key set and
+``state_dir`` round format for every regime, so a run resumes across
+regimes. A resident round is microseconds of numpy instead of one or
+more Spark jobs.
 
 One graph per job: a frame can carry a driver-side builder of its
 ``ResidentGraph`` (``attach_graph`` — canonicalize.py attaches one to
@@ -134,65 +136,87 @@ def _is_check(i: int, check_every: int, max_iter: int) -> bool:
 
 
 def iterate(
-    state: DataFrame,
-    step: Callable[[DataFrame, int], DataFrame],
-    delta_fn: Callable[[DataFrame, DataFrame], float],
+    state: Any,
+    step: Callable[[Any, int], Any],
+    delta_fn: Callable[[Any, Any], float],
     max_iter: int,
     tol: float = 0.0,
     check_every: int = 4,
     state_dir: str | None = None,
     resume: bool = False,
-    log: IterationLog | None = None,
     partition_metrics: bool = False,
     regime: str = "shuffle",
-) -> tuple[DataFrame, IterationLog]:
-    """Run ``step(state, i) -> new_state`` (pure plan transform, NO
-    actions) for up to ``max_iter`` rounds, localCheckpointing each
-    round's state (its only job). Every ``check_every`` rounds evaluate
-    ``delta_fn(prev_checked_state, state)`` and stop if ``delta <= tol``.
+    to_frame: Callable[[Any], DataFrame] | None = None,
+    from_frame: Callable[[DataFrame], Any] | None = None,
+) -> tuple[Any, IterationLog]:
+    """Run ``step(state, i) -> new_state`` for up to ``max_iter`` rounds.
+    Every ``check_every`` rounds (and the last) evaluate
+    ``delta_fn(prev_checked_state, state)``, write the state to
+    ``state_dir/round=i`` when given, log the round, and stop if
+    ``delta <= tol``. ``resume`` restarts after the highest round whose
+    ``_SUCCESS`` marker exists, so on a committer that writes no marker
+    it starts again from round 0.
 
     Note the convergence test spans ``check_every`` rounds — for
     contraction-style algorithms (PageRank) this is conservative; for
     fixpoint algorithms (min-label, LPA, star-contraction) state equality
     across K rounds implies the fixpoint was reached.
 
-    ``regime`` (``"shuffle"`` or ``"broadcast"``: how ``step`` ships its
-    vertex-sized state) is recorded in every log entry.
-    """
-    log = log or IterationLog()
-    start_round = 0
-    spark = state.sparkSession
+    ``regime`` is recorded in every log entry and picks the state's form:
 
+    - ``"shuffle"`` or ``"broadcast"`` (how ``step`` ships its
+      vertex-sized state): a DataFrame. ``step`` is a pure plan
+      transform, NO actions; each round's state is localCheckpointed
+      (its only job) and written to ``state_dir`` as is.
+    - ``"resident"``: a driver-side numpy state, one partition of
+      ``len(state)`` rows, never checkpointed. ``to_frame`` and
+      ``from_frame`` convert it to and from the distributed form's
+      state DataFrame, through which rounds are written and resumed,
+      so rounds written in either regime resume in the other.
+    """
+    log = IterationLog()
+    resident = regime == "resident"
+    start_round = 0
     if resume and state_dir:
+        spark = SparkSession.active() if resident else state.sparkSession
         last = _last_complete_round(spark, state_dir)
         if last is not None:
             start_round = last + 1
             state = spark.read.parquet(f"{state_dir}/round={last}")
-
-    state = state.localCheckpoint(eager=True)
+            if resident:
+                state = from_frame(state)
+    if not resident:
+        state = state.localCheckpoint(eager=True)
     prev_checked = state
     t0 = time.time()
     for i in range(start_round, max_iter):
-        # every round is materialized (the GraphX per-round cadence): a
-        # step that references its input more than once (PageRank's
-        # dangling-mass form; star-contraction's mins + join) would
-        # otherwise recompute the lazy chain once per reference. Old
-        # checkpoint blocks are GC'd by ContextCleaner.
-        state = step(state, i).localCheckpoint(eager=True)
+        state = step(state, i)
+        if not resident:
+            # every round is materialized (the GraphX per-round cadence):
+            # a step that references its input more than once
+            # (PageRank's dangling-mass form; star-contraction's mins +
+            # join) would otherwise recompute the lazy chain once per
+            # reference. Old checkpoint blocks are GC'd by ContextCleaner.
+            state = state.localCheckpoint(eager=True)
         if not _is_check(i, check_every, max_iter):
             continue
         if state_dir:
-            state.write.mode("overwrite").parquet(f"{state_dir}/round={i}")
+            frame = to_frame(state) if resident else state
+            frame.write.mode("overwrite").parquet(f"{state_dir}/round={i}")
         delta = float(delta_fn(prev_checked, state))
         entry = dict(
             round=i,
             delta=delta,
             seconds=round(time.time() - t0, 3),
-            partitions=state.rdd.getNumPartitions(),
+            partitions=1 if resident else state.rdd.getNumPartitions(),
             regime=regime,
         )
         if partition_metrics:
-            entry.update(_partition_rows(state))
+            entry.update(
+                _skew_summary({0: len(state)} if len(state) else {})
+                if resident
+                else _partition_rows(state)
+            )
         log.add(**entry)
         t0 = time.time()
         prev_checked = state
@@ -372,57 +396,3 @@ def collect_edges(edges: DataFrame, *extra: str) -> ResidentGraph:
     if not extra:
         attach_graph(edges, lambda: g)
     return g
-
-
-def iterate_resident(
-    state: Any,
-    step: Callable[[Any, int], Any],
-    delta_fn: Callable[[Any, Any], float],
-    *,
-    max_iter: int,
-    check_every: int,
-    state_dir: str | None,
-    resume: bool,
-    spark: SparkSession,
-    to_frame: Callable[[Any], DataFrame],
-    from_frame: Callable[[DataFrame], Any],
-    tol: float = 0.0,
-    partition_metrics: bool = False,
-) -> tuple[Any, IterationLog]:
-    """``iterate`` for a driver-resident numpy state: the same check
-    cadence, ``tol`` stop rule, log keys and ``state_dir``/``resume``
-    rounds. ``to_frame``/``from_frame`` convert the state to and from
-    the distributed form's state DataFrame, so rounds written by either
-    loop resume in the other. The state is one partition: ``len(state)``
-    rows."""
-    log = IterationLog()
-    start_round = 0
-    if resume and state_dir:
-        last = _last_complete_round(spark, state_dir)
-        if last is not None:
-            start_round = last + 1
-            state = from_frame(spark.read.parquet(f"{state_dir}/round={last}"))
-    prev_checked = state
-    t0 = time.time()
-    for i in range(start_round, max_iter):
-        state = step(state, i)
-        if not _is_check(i, check_every, max_iter):
-            continue
-        if state_dir:
-            to_frame(state).write.mode("overwrite").parquet(f"{state_dir}/round={i}")
-        delta = float(delta_fn(prev_checked, state))
-        entry = dict(
-            round=i,
-            delta=delta,
-            seconds=round(time.time() - t0, 3),
-            partitions=1,
-            regime="resident",
-        )
-        if partition_metrics:
-            entry.update(_skew_summary({0: len(state)} if len(state) else {}))
-        log.add(**entry)
-        t0 = time.time()
-        prev_checked = state
-        if delta <= tol:
-            break
-    return state, log

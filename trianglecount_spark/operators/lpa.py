@@ -34,7 +34,6 @@ from trianglecount_spark.operators.iterative import (
     IterationLog,
     collect_edges,
     iterate,
-    iterate_resident,
     local_frame,
     vertex_field,
 )
@@ -140,7 +139,7 @@ def _lpa_resident(
         )
         return lab
 
-    labels, log = iterate_resident(
+    labels, log = iterate(
         np.arange(n),
         step,
         lambda prev, cur: np.count_nonzero(prev != cur),
@@ -148,7 +147,7 @@ def _lpa_resident(
         check_every=check_every,
         state_dir=state_dir,
         resume=resume,
-        spark=spark,
+        regime="resident",
         to_frame=to_frame,
         from_frame=from_frame,
     )

@@ -55,7 +55,6 @@ from trianglecount_spark.operators.iterative import (
     IterationLog,
     collect_edges,
     iterate,
-    iterate_resident,
     local_frame,
     vertex_field,
 )
@@ -243,7 +242,7 @@ def _pagerank_resident(
     """The resident regime of ``pagerank``: the distributed plan's
     arithmetic — per-edge ``rank(u)·w(u,v)/W_out(u)`` summed on dst,
     the dangling-free or missing-mass closure — on the collected edge
-    table, with ``iterate``'s cadence through ``iterate_resident``."""
+    table, as ``iterate``'s ``"resident"`` rounds."""
     g = collect_edges(edges, *([weight] if weight else []))
     n, spark = g.n, edges.sparkSession
 
@@ -281,7 +280,7 @@ def _pagerank_resident(
         r[g.positions(t.column("v").to_numpy())] = t.column("rank").to_numpy()
         return r
 
-    ranks, log = iterate_resident(
+    ranks, log = iterate(
         init,
         step,
         lambda prev, cur: np.abs(cur - prev).sum(),
@@ -291,7 +290,7 @@ def _pagerank_resident(
         state_dir=state_dir,
         resume=resume,
         partition_metrics=partition_metrics,
-        spark=spark,
+        regime="resident",
         to_frame=to_frame,
         from_frame=from_frame,
     )

@@ -2,7 +2,8 @@
 
 Every physical-regime decision in the engine — the closure side of the
 triangle joins, the vertex-sized state of the iterative and frontier
-operators, the link-prediction adjacency — is the same question the
+operators, the link-prediction adjacency, the wedge sides of the
+streaming triangle count — is the same question the
 reference answers once: does the operand fit in one worker's memory
 (the whole CSR resident on-device), or must it be partitioned? Here
 "fits" means "can be broadcast", and the answer comes from

@@ -60,6 +60,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trianglecount_spark.operators import regime
+
 EDGE_SCHEMA = "src long, dst long"
 
 
@@ -83,7 +85,6 @@ def incremental_triangle_count(
     n_files: int = 8,
     n_buckets: int = 16,
     state_dir: str | None = None,
-    broadcast_slice_rows: int = 4_000_000,
 ) -> DataFrame:
     """Stage ``raw_edges(src, dst)`` as ``n_files`` parquet files, stream
     them one file per micro-batch, maintain the canonical edge set and
@@ -105,7 +106,6 @@ def incremental_triangle_count(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
-        n_slice = 0
         new = _canonical(batch_df).persist()
         # vertex set + touched buckets of this batch: the literal IN
         # list below is what lets the parquet scan partition-prune
@@ -131,11 +131,11 @@ def incremental_triangle_count(
                 .select("v", "w")
                 .persist()
             )
-            n_slice = adj_old.count()  # materialize: the closure join
-            # plans against REAL cached sizes, not parquet guesses
-            # (measured ~3x on the sf0.1 events graph — lazy persist let
-            # the wedge joins pick pre-AQE strategies off stale stats);
-            # the measured size also drives the broadcast regime below
+            adj_old.count()  # materialize: the closure join plans
+            # against REAL cached sizes, not parquet guesses (measured
+            # ~3x on the sf0.1 events graph — lazy persist let the wedge
+            # joins pick pre-AQE strategies off stale stats); the cached
+            # size also settles the broadcast regime below
             # cross-batch dedupe: canonical (a,b) exists iff adjacency
             # row (v=a, w=b) exists — a<b rows live in bucket(a) ⊆ touched
             new_only = new.join(
@@ -143,26 +143,26 @@ def incremental_triangle_count(
                 ["a", "b"],
                 "left_anti",
             ).persist()
-            n_new = new_only.count()
+            new_only.count()
             new.unpersist()
             new2 = new_only
         else:
-            adj_old = ss.createDataFrame([], "v long, w long")
             new2 = new
-            n_new = new2.count()
+            new2.count()
         key = F.struct("a", "b").alias("key")
         # symmetric adjacency over accumulated-slice ∪ new, keyed by
         # arrival order: old edges sort before every new edge; new by key
-        old_sym = adj_old.select(
-            "v", "w", F.lit(True).alias("is_old"), F.lit(None).cast("struct<a:long,b:long>").alias("key")
-        )
         uni = new2.select("a", "b", F.lit(False).alias("is_old"), key)
-        new_sym = uni.select(
+        adj = uni.select(
             F.col("a").alias("v"), F.col("b").alias("w"), "is_old", "key"
         ).unionByName(
             uni.select(F.col("b").alias("v"), F.col("a").alias("w"), "is_old", "key")
         )
-        adj = old_sym.unionByName(new_sym)
+        if have_state:
+            adj = adj_old.select(
+                "v", "w", F.lit(True).alias("is_old"),
+                F.lit(None).cast("struct<a:long,b:long>").alias("key"),
+            ).unionByName(adj)
         e = new2.select("a", "b", F.struct("a", "b").alias("ekey"))
         s1 = adj.select(
             F.col("v").alias("a"),
@@ -176,17 +176,17 @@ def incremental_triangle_count(
             F.col("is_old").alias("old2"),
             F.col("key").alias("key2"),
         )
-        # broadcast regime: the adjacency slice size is MEASURED
-        # (n_slice + both directions of the batch); when it fits an
-        # executor, hinting both wedge sides keeps the entire closure
-        # in one stage — the wedge stream (Σ per-batch triangle
-        # closures, the dominant volume) never hits an exchange. At
-        # sf0.1 this is wall-time parity with the shuffle plan (the
-        # hash-table build offsets the exchange saved); the win is
-        # plan-shape at scale — no wedge-stream shuffle to spill.
-        # Above the threshold the joins fall back to shuffles on
-        # a / (b, w).
-        if n_slice + 2 * n_new <= broadcast_slice_rows:
+        # broadcast regime: ``adj`` is built from the cached, counted
+        # slice and batch, so ``regime.fits_broadcast`` settles from
+        # their in-memory sizes with no job. When it fits, hinting both
+        # wedge sides keeps the entire closure in one stage — the wedge
+        # stream (Σ per-batch triangle closures, the dominant volume)
+        # never hits an exchange. At sf0.1 this is wall-time parity
+        # with the shuffle plan (the hash-table build offsets the
+        # exchange saved); the win is plan-shape at scale — no
+        # wedge-stream shuffle to spill. Otherwise the joins shuffle
+        # on a / (b, w).
+        if regime.fits_broadcast(adj):
             s1, s2 = F.broadcast(s1), F.broadcast(s2)
         closed = (
             e.join(s1, "a")
