@@ -183,16 +183,18 @@ def test_pipeline_stale_pr_state_cleared_on_crash(spark, tmp_path, monkeypatch):
 
 
 def test_pipeline_records_iterative_regimes(spark, tmp_path, monkeypatch):
-    """metrics.json names the regime every iterative stage ran in: the
-    resident one on a graph that fits the broadcast ceiling, the
-    shuffle plan once the ceilings are shrunk below it — with the same
-    results."""
+    """metrics.json names the plan the edges stage ran and the regime
+    every iterative stage ran in: the resident ones on a graph that fits
+    the broadcast ceiling, the distributed plans once the ceilings are
+    shrunk below it — with the same results. Each run's out_dir then
+    resumes under the other run's ceilings with the same metrics."""
     from trianglecount_spark.operators import regime
     from trianglecount_spark.plans.pipeline import run_pipeline
     from trianglecount_spark.sources.pages import make_pages
 
     pages = make_pages(spark, n_pages=300, n_sites=20)
     iterative = ("pagerank", "components", "lpa")
+    same = ("edges_fingerprint", "n_vertices", "n_und_edges", "n_triangles", "n_components")
 
     def run(name):
         out = str(tmp_path / name)
@@ -200,19 +202,28 @@ def test_pipeline_records_iterative_regimes(spark, tmp_path, monkeypatch):
         with open(f"{out}/metrics.json") as f:
             m = json.load(f)
         regimes = {s: {r["regime"] for r in m["stages"][s]["rounds"]} for s in iterative}
+        regimes["edges"] = m["stages"]["edges"]["regime"]
         tables = {
             s: {r[0]: r[1] for r in spark.read.parquet(f"{out}/{s}").collect()}
             for s in iterative
         }
-        return regimes, tables
+        return regimes, tables, {k: m[k] for k in same}
 
-    res_regimes, res = run("resident")
+    def resume(name):
+        m = run_pipeline(spark, pages, str(tmp_path / name), pr_rounds=4, lpa_rounds=2)
+        assert all(s.get("skipped") for s in m["stages"].values())
+        return {k: m[k] for k in same}
+
+    res_regimes, res, res_m = run("resident")
     with monkeypatch.context() as m:
         m.setattr(regime, "BYTE_LIMIT", -1)
         m.setattr(regime, "ROW_LIMIT", -1)
-        shu_regimes, shu = run("shuffle")
-    assert res_regimes == {s: {"resident"} for s in iterative}
-    assert shu_regimes == {s: {"shuffle"} for s in iterative}
+        shu_regimes, shu, shu_m = run("shuffle")
+        res_resumed = resume("resident")
+    shu_resumed = resume("shuffle")
+    assert res_regimes == {"edges": "resident", **{s: {"resident"} for s in iterative}}
+    assert shu_regimes == {"edges": "distributed", **{s: {"shuffle"} for s in iterative}}
+    assert res_m == shu_m == res_resumed == shu_resumed
     assert res["components"] == shu["components"]
     assert res["lpa"] == shu["lpa"]
     assert res["pagerank"].keys() == shu["pagerank"].keys()

@@ -1,15 +1,39 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from trianglecount_spark.functions.extract import edges_from_pages, extract_links, extract_text
 from trianglecount_spark.operators import (
     canonicalize_edges,
     orient,
+    regime,
     triangle_count_join,
     triangle_count_kernel,
 )
+from trianglecount_spark.operators.iterative import local_frame
 from trianglecount_spark.sources.pages import make_pages
+
+_PAGES = StructType([StructField("url", StringType()), StructField("html", BinaryType())])
+
+
+def _pages(spark, links):
+    """A pages frame with a size estimate (a local relation), one page
+    per ``(url, [href, ...])``, each href in an ``<a>`` tag."""
+    urls = [u for u, _ in links]
+    html = [
+        "".join(f'<a href="{h}">{i}</a>' for i, h in enumerate(hrefs)).encode()
+        for _, hrefs in links
+    ]
+    return local_frame(spark, _PAGES, [urls, html])
+
+
+def _mined(edges, vertices):
+    """(sorted edge list, url → vid) of an ``edges_from_pages`` result."""
+    return (
+        sorted((r.src, r.dst) for r in edges.collect()),
+        {r.url: r.vid for r in vertices.collect()},
+    )
 
 
 def test_text_extraction_byte_identical(spark):
@@ -99,6 +123,125 @@ def test_longkey_mapping_collision_fallback(spark):
         assert got == golden, f"fallback not exact at dup fraction {frac}"
     raw.unpersist()
     vertices.unpersist()
+
+
+def test_mined_links_never_have_a_null_endpoint(spark):
+    # a root-relative href on a page with no http(s) origin has no
+    # target, and a page with a null url no source: both links are
+    # skipped by both miners, so no url dictionary gets a null vertex
+    from trianglecount_spark.functions.extract import extract_links_text
+
+    pages = _pages(
+        spark,
+        [
+            ("ftp://c/z", ["/rel", "https://x.example/abs"]),
+            (None, ["https://y.example/", "/n"]),
+            ("https://h.example/p", ["/q"]),
+        ],
+    )
+    want = {
+        ("ftp://c/z", "https://x.example/abs"),
+        ("https://h.example/p", "https://h.example/q"),
+    }
+    assert {(r.src_url, r.dst_url) for r in extract_links(pages).collect()} == want
+    assert {
+        (r.src_url, r.dst_url) for r in extract_links_text(pages).collect()
+    } == want
+    urls = sorted({u for link in want for u in link})
+    resident = _mined(*edges_from_pages(pages))
+    with regime.ceilings(-1, -1):
+        distributed = _mined(*edges_from_pages(pages))
+    assert resident == distributed == (
+        [(0, 3), (1, 2)], {u: i for i, u in enumerate(urls)}
+    )
+
+
+def test_edges_from_pages_regime_parity(spark):
+    """The resident dictionary (Arrow, on the driver) equals the
+    distributed plan's: the same url → vid ranks in UTF-8 byte order and
+    the same edge multiset, on urls where other orders disagree —
+    2-, 3- and 4-byte UTF-8 (UTF-16 puts the emoji before the fullwidth
+    ``ａ``), mixed case, prefix-sharing — and on pages with no links."""
+    urls = [
+        "https://b.com/",
+        "https://b.com/e",
+        "https://B.com/",
+        "https://a.com/é",
+        "https://a.com/ａ",
+        "https://a.com/😀",
+        "https://a.com/Z",
+        "https://a.com/z",
+    ]
+    links = [
+        (u, [urls[(i + 1) % len(urls)], urls[(i + 3) % len(urls)], "/é", u])
+        for i, u in enumerate(urls)
+    ] + [("https://a.com/z", ["https://c.com/ß", "https://b.com/e"])]
+    no_links = [(u, []) for u in urls]
+    mined = {}
+    for name, page_set in (("links", links), ("no_links", no_links)):
+        pages = _pages(spark, page_set)
+        # only the distributed plan persists frames for the caller
+        res_handles, dis_handles = [], []
+        resident = edges_from_pages(pages, handles=res_handles)
+        with regime.ceilings(-1, -1):
+            distributed = edges_from_pages(pages, handles=dis_handles)
+        assert res_handles == [] and dis_handles
+        mined[name] = _mined(*resident)
+        assert mined[name] == _mined(*distributed)
+        for h in dis_handles:
+            h.unpersist()
+    assert mined["no_links"] == ([], {})
+    edges, dictionary = mined["links"]
+    assert len(edges) == 4 * len(urls) + 2
+    assert dictionary == {
+        u: i for i, u in enumerate(sorted(dictionary, key=lambda u: u.encode()))
+    }
+    # the byte order really differs from UTF-16's here
+    assert dictionary["https://a.com/ａ"] < dictionary["https://a.com/😀"]
+
+
+def test_links_over_the_row_ceiling_are_mined_once(spark, monkeypatch):
+    """A generated crawl's size estimate (Range → ``mapInPandas``) is
+    far below its mined links, so only the row bounds stop the
+    resident path: the collect brings back at most ``ROW_LIMIT // 2 +
+    1`` rows, declines, and the distributed plan runs over the links
+    that collect persisted — the miner runs once, and the result is the
+    resident one. ``RESIDENT_LINKS`` bounds the collect the same way."""
+    from trianglecount_spark.functions import extract
+
+    pages = make_pages(spark, n_pages=200, n_sites=10, n_partitions=2)
+    handles: list = []
+    want = _mined(*edges_from_pages(pages, handles=handles))
+    assert handles == []
+    n_links = len(want[0])
+
+    mined_rows = spark.sparkContext.accumulator(0)
+    mine = extract.extract_links
+
+    def counted(pages):
+        def run(batches):
+            for pdf in batches:
+                mined_rows.add(len(pdf))
+                yield pdf
+
+        return mine(pages).mapInPandas(run, schema="src_url string, dst_url string")
+
+    monkeypatch.setattr(extract, "extract_links", counted)
+    with regime.ceilings(regime.BYTE_LIMIT, n_links // 2):
+        assert 2 * regime.estimated_bytes(counted(pages)) <= regime.BYTE_LIMIT
+        e, vertices = edges_from_pages(pages, handles=handles)
+    assert handles
+    assert _mined(e, vertices) == want
+    for h in handles:
+        h.unpersist()
+    assert mined_rows.value == n_links
+    # the dictionary's own crossover declines the same way
+    monkeypatch.setattr(extract, "RESIDENT_LINKS", n_links - 1)
+    handles = []
+    assert _mined(*edges_from_pages(pages, handles=handles)) == want
+    assert handles
+    for h in handles:
+        h.unpersist()
 
 
 def test_url_canonicalization_rules(spark):

@@ -23,6 +23,19 @@ def test_incremental_equals_batch_k4_with_dupes(spark):
     assert row.n_batches >= 2  # genuinely incremental, not one batch
 
 
+def test_incremental_removes_its_temp_dirs(spark, tmp_path, monkeypatch):
+    # the staging copy, the stream checkpoint and the default state dir
+    # are gone once the result row is back
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
+    row = incremental_triangle_count(spark, df, n_files=2).collect()[0]
+    assert row.n_triangles == 1
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("tc_inc_")]
+
+
 def test_state_is_bucketed_and_reads_prune(spark, tmp_path):
     """The accumulated state is written as pb= directory partitions on
     pmod(xxhash64(v), B), and a batch-shaped read (pb IN literals) is

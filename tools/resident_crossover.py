@@ -25,7 +25,8 @@ The canonical and oriented tables the operator cells read are
 unpersisted before ``build`` runs: Spark's cache manager would
 otherwise serve its distributed plans from them.
 ``built`` records whether the last ``build``/``over`` run under
-non-negative ceilings used the attached graph: past the ceilings (twice the raw rows over
+non-negative ceilings used the attached graph (for ``dictionary``,
+whether it built the dictionary on the driver): past the ceilings (twice the raw rows over
 ``ROW_LIMIT``) the builder declines and the frame's own probe decides.
 
 ``over`` is ``build`` past the ceilings with probing on: its ``probe``
@@ -35,14 +36,23 @@ passes; the row ceiling is a quarter of the raw rows), so every probe
 and its jobs counted, against the ``shuffle`` regime, whose negative
 ceilings skip every probe.
 
+``dictionary`` is the web job's url dictionary
+(``extract.edges_from_pages``) over persisted pages, its edges forced
+with a count: the Arrow dictionary on the driver against the
+range-partitioned dictionary and long-key mapping joins (the edge
+counts must agree). It runs only on a pages input, the only op there.
+
 Graphs: an ``sf_dir`` — the copurchase graph bench.py runs at sf0.1
 (raw = the lineitem self-join); ``powerlaw4m``, ``powerlaw16m`` and
 ``powerlaw32m`` — 4M, 16M and 32M raw ``powerlaw_edges`` (50k, 200k
-and 400k vertices, skew 2.0).
+and 400k vertices, skew 2.0); ``pages200k`` and ``pages600k`` —
+``make_pages`` crawls of 200k and 600k pages (about 1M and 3M mined
+links, 30 pages a site), persisted.
 
-Usage: python tools/resident_crossover.py {<sf_dir>|powerlaw4m|powerlaw16m|powerlaw32m} [reps] [op,...]
+Usage: python tools/resident_crossover.py {<sf_dir>|powerlaw4m|powerlaw16m|powerlaw32m|pages200k|pages600k} [reps] [op,...]
 (ops: pagerank, components, lpa, triangles, build, over; default
-all, in that order). Prints one JSON line: {graph, cores, raw_edges, und_edges,
+all, in that order; dictionary alone on pages). Prints one JSON line:
+{graph, cores, raw_edges (the pages, on a pages input), und_edges,
 cells: {op: {regime: s}}, jobs: {op: {regime: n}}, built,
 py_peak_rss_mb}; the distributed regime's key is ``shuffle``. ``jobs``
 is the Spark jobs of the last timed run (AQE submits each shuffle
@@ -68,10 +78,12 @@ POWERLAW = {
     "powerlaw16m": (16_000_000, 200_000),
     "powerlaw32m": (32_000_000, 400_000),
 }
+PAGES = {f"pages{k}k": k * 1000 for k in (25, 50, 100, 200)}
 OPS = ("pagerank", "components", "lpa", "triangles", "build", "over")
 
 
 def main() -> None:
+    from trianglecount_spark.functions.extract import edges_from_pages
     from trianglecount_spark.operators import regime
     from trianglecount_spark.operators.canonicalize import canonicalize_edges, orient
     from trianglecount_spark.operators.components import connected_components
@@ -81,26 +93,29 @@ def main() -> None:
     from trianglecount_spark.operators.triangles import triangle_count_arrays
     from trianglecount_spark.plans.queries import copurchase_raw
     from trianglecount_spark.session import get_spark
+    from trianglecount_spark.sources.pages import make_pages
     from trianglecount_spark.sources.synth import powerlaw_edges
 
     graph = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     wanted = sys.argv[3].split(",") if len(sys.argv) > 3 else OPS
-    names = [name for name in OPS if name in wanted]
+    names = ["dictionary"] if graph in PAGES else [name for name in OPS if name in wanted]
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
     spark = get_spark(
         app_name="resident-crossover", cores=cores,
         extra_confs={"spark.ui.showConsoleProgress": "false"},
     )
     sc = spark.sparkContext
-    if graph in POWERLAW:
+    if graph in PAGES:
+        raw = make_pages(spark, PAGES[graph], PAGES[graph] // 30)
+    elif graph in POWERLAW:
         raw = powerlaw_edges(spark, *POWERLAW[graph], 2.0)
     else:
         raw = copurchase_raw(spark, graph)
     raw = raw.persist()
     raw_edges = raw.count()
     sym = oriented = und_edges = None
-    if set(names) - {"build", "over"}:
+    if set(names) - {"build", "over", "dictionary"}:
         sym = canonicalize_edges(raw).persist()
         und_edges = sym.count() // 2
         oriented = orient(sym).persist()
@@ -122,6 +137,16 @@ def main() -> None:
 
         return run
 
+    def dictionary():
+        handles: list = []
+        e, _ = edges_from_pages(raw, handles=handles)
+        n = e.count()
+        if regime.ROW_LIMIT >= 0:  # the "auto" regime's run
+            built["dictionary"] = not handles
+        for h in handles:
+            h.unpersist(blocking=True)
+        return n
+
     ops = {
         "pagerank": lambda: pagerank(
             fresh(sym), tol=0.0, max_iter=10, check_every=10, dangling_free=True
@@ -131,6 +156,7 @@ def main() -> None:
         "triangles": lambda: triangle_count_arrays(fresh(oriented)),
         "build": build("build"),
         "over": build("over"),
+        "dictionary": dictionary,
     }
     # the "auto" regime's ceilings per op: the defaults, or for "over"
     # positive ceilings below the graph — no estimate passes, and the
@@ -147,7 +173,7 @@ def main() -> None:
             with regime.ceilings(*((-1, -1) if shuffle else auto[name])):
                 t0 = time.perf_counter()
                 out = ops[name]()
-                if isinstance(out, int):  # a triangle total
+                if isinstance(out, int):  # a triangle total or edge count
                     totals.add(out)
                 else:
                     out, log = out

@@ -259,7 +259,11 @@ def run_job(spark, cpus: int, job: str, n_edges: int, n_vertices: int, reps: int
             )
 
             handles: list = []
-            we, _verts = edges_from_pages(pages, handles=handles)
+            # the row measures the distributed url dictionary and
+            # mapping joins; a fitting crawl would otherwise be mapped
+            # on the driver
+            with regime.ceilings(-1, -1):
+                we, _verts = edges_from_pages(pages, handles=handles)
             # materialize each stage artifact once, exactly like the
             # resumable pipeline job (plans/pipeline.py): orient
             # references sym twice (degree agg + join) and the arrays

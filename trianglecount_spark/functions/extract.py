@@ -14,8 +14,10 @@ reference):
 - text     = <title> content + "\\n" + first <p> content
 - links    = every double-quoted href: absolute ``http(s)://...`` kept
              as-is; root-relative ``/path`` resolved against the page's
-             scheme+host; anything else (empty, single-quoted, missing)
-             skipped
+             scheme+host; anything else (empty, single-quoted, missing,
+             root-relative on a page with no http(s) origin, any link
+             of a page with a null url) skipped, so no mined endpoint
+             is null
 - self-links survive extraction (the graph canonicalizer drops them —
   that separation mirrors the reference, where parsing and cleaning are
   distinct stages: without_part_preprocess.py:126-177 vs :193-208)
@@ -25,9 +27,16 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from trianglecount_spark.operators import regime
+from trianglecount_spark.operators.iterative import local_frame
 
 _TITLE_RE = re.compile(r"<title>(.*?)</title>", re.S)
 _PARA_RE = re.compile(r"<p>(.*?)</p>", re.S)
@@ -58,6 +67,21 @@ def extract_text(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(run, schema="url string, text string")
 
 
+def _resolve(urls: pd.Series, hrefs: pd.Series) -> tuple[pd.Series, pd.Series, pd.Series]:
+    """Each href (indexed by its page's row in ``urls``) as ``(src,
+    dst, keep)``: the page url, the resolved target, and whether the
+    link is mined. An absolute href is its own target; a root-relative
+    one is resolved against the page's ``http(s)://`` origin. Every
+    other href, and any link of a page with a null url, is skipped, so
+    no mined link has a null endpoint."""
+    src = urls.reindex(hrefs.index)
+    origin = src.str.extract(_ORIGIN_RE, expand=False)
+    absolute = hrefs.str.match(r"https?://")
+    rootrel = hrefs.str.startswith("/")
+    dst = hrefs.where(absolute, other=(origin + hrefs).where(rootrel))
+    return src, dst, src.notna() & dst.notna()
+
+
 def extract_links(pages: DataFrame) -> DataFrame:
     """pages → edges_raw(src_url, dst_url); duplicates/self-links kept
     (canonicalization is a separate operator)."""
@@ -73,16 +97,10 @@ def extract_links(pages: DataFrame) -> DataFrame:
                 )
                 continue
             hrefs = hrefs.reset_index(level=1, drop=True)[0]
-            src = pdf["url"].reindex(hrefs.index)
-            origin = src.str.extract(_ORIGIN_RE, expand=False)
-            absolute = hrefs.str.match(r"https?://")
-            rootrel = hrefs.str.startswith("/")
-            dst = hrefs.where(absolute, other=(origin + hrefs).where(rootrel))
-            keep = (absolute | rootrel) & hrefs.ne("")
-            out = pd.DataFrame(
+            src, dst, keep = _resolve(pdf["url"], hrefs)
+            yield pd.DataFrame(
                 {"src_url": src[keep].values, "dst_url": dst[keep].values}
             )
-            yield out
 
     return pages.select("url", "html").mapInPandas(
         run, schema="src_url string, dst_url string"
@@ -111,12 +129,7 @@ def extract_links_text(pages: DataFrame) -> DataFrame:
                 continue
             m = m.reset_index(level=1, drop=True)
             hrefs, anchors = m[0], m[1]
-            src = pdf["url"].reindex(m.index)
-            origin = src.str.extract(_ORIGIN_RE, expand=False)
-            absolute = hrefs.str.match(r"https?://")
-            rootrel = hrefs.str.startswith("/")
-            dst = hrefs.where(absolute, other=(origin + hrefs).where(rootrel))
-            keep = (absolute | rootrel) & hrefs.ne("")
+            src, dst, keep = _resolve(pdf["url"], hrefs)
             yield pd.DataFrame(
                 {
                     "src_url": src[keep].values,
@@ -130,6 +143,20 @@ def extract_links_text(pages: DataFrame) -> DataFrame:
     )
 
 
+# mined links up to which the url dictionary is built on the driver.
+# Past it the driver-side dictionary loses to the distributed plan
+# although the links fit the ceilings: its collect, its one-threaded
+# Arrow work and the shipping of its local frames grow with the links,
+# while the plan's fixed cost of about ten small jobs is spread over
+# the cores (tools/resident_crossover.py pagesNk, warm local[4], median
+# of 3: about 120k links 1.61 vs 1.81 s, 240k 2.25 vs 1.97 s, 960k
+# 7.68 vs 3.73 s).
+RESIDENT_LINKS = 150_000
+
+_EDGES = StructType([StructField("src", LongType()), StructField("dst", LongType())])
+_VERTICES = StructType([StructField("url", StringType()), StructField("vid", LongType())])
+
+
 def edges_from_pages(
     pages: DataFrame, handles: list | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -138,12 +165,36 @@ def edges_from_pages(
 
     The dictionary covers both link endpoints (a dst_url may point at a
     page outside the crawl — it still becomes a vertex, mirroring how a
-    real web graph has edges into uncrawled urls).
+    real web graph has edges into uncrawled urls). Its vids are the
+    urls' sorted ranks in Spark's binary UTF-8 order, dense from 0 (the
+    reference's DGL relabeling, SURVEY.md §1.1 step 4), in either
+    regime:
 
-    Uses the two-phase ``vertex_dictionary_scalable`` (range partition +
-    per-partition numbering + offset cumsum): same key → sorted-rank
-    mapping as the window form, but no single-task global window — the
-    r1 flagship path funneled 10^12 urls through one task here.
+    - RESIDENT while the mined links fit, by the builder rule of
+      ``regime.collect_if_fits`` (the dictionary can hold both
+      endpoints of every row): twice Catalyst's estimate of the
+      persisted links under ``regime.BYTE_LIMIT``, never a
+      ``count()``, then one ``toArrow()`` bounded by rows, not by the
+      estimate (a generated crawl's estimate can be far below its
+      links), declined once more than ``min(ROW_LIMIT // 2,
+      RESIDENT_LINKS)`` come back; ``RESIDENT_LINKS`` is the measured
+      crossover. The miner stays the ``mapInPandas`` UDF. The
+      dictionary is then built in Arrow — ``unique`` of both columns,
+      sorted bytewise, ``index_in`` for each endpoint — and returned
+      as two local frames
+      (``iterative.local_frame``: exact estimates, no job). The
+      reference relabels on the device that holds the edge list; here
+      the driver does, and a fitting job runs no dictionary or mapping
+      shuffle. ``handles`` gets nothing.
+    - DISTRIBUTED otherwise: the plan below, over the same persisted
+      mined links (a declined collect has filled their cache, so the
+      miner runs once), whose persisted frames go to ``handles``.
+
+    The distributed plan uses the two-phase ``vertex_dictionary_scalable``
+    (range partition + per-partition numbering + offset cumsum): same
+    key → sorted-rank mapping as the window form, but no single-task
+    global window — the r1 flagship path funneled 10^12 urls through
+    one task here.
 
     LONG-KEY MAPPING JOINS (r4): the url→vid mapping joins are the
     pipeline's dominant shuffle (E rows × two endpoints), and shuffling
@@ -175,9 +226,14 @@ def edges_from_pages(
     from trianglecount_spark.operators.canonicalize import vertex_dictionary_scalable
 
     # the mined link table is referenced three times downstream (the url
-    # scan + two mapping joins); persist it so the HTML extractor runs
-    # ONCE — at crawl scale this table is materialized to storage anyway
+    # scan + two mapping joins), and first by the resident collect;
+    # persist it so the HTML extractor runs ONCE — at crawl scale this
+    # table is materialized to storage anyway
     raw = extract_links(pages).persist()
+    t = regime.collect_if_fits(raw, max_rows=RESIDENT_LINKS)
+    if t is not None:
+        raw.unpersist()
+        return _resident_edges(raw.sparkSession, t)
     if handles is not None:
         # caller-managed cleanup: repeated invocations (bench reps,
         # scaling harness) unpersist these instead of stacking blocks
@@ -231,6 +287,24 @@ def edges_from_pages(
     else:
         e = _map_edges_longkey(raw, vertices, dup)
     return e, vertices
+
+
+def _resident_edges(spark: SparkSession, t: pa.Table) -> tuple[DataFrame, DataFrame]:
+    """The resident regime of ``edges_from_pages`` over the collected
+    mined links ``t``. Arrow sorts strings bytewise, which is UTF-8
+    byte order, the order Spark sorts them in; the urls are distinct,
+    so ranks are unique."""
+    src, dst = t.column("src_url"), t.column("dst_url")
+    urls = pc.unique(pa.chunked_array(src.chunks + dst.chunks, type=src.type))
+    urls = urls.take(pc.array_sort_indices(urls))
+
+    def vids(col: pa.ChunkedArray) -> np.ndarray:
+        return pc.index_in(col, value_set=urls).to_numpy().astype(np.int64)
+
+    return (
+        local_frame(spark, _EDGES, [vids(src), vids(dst)]),
+        local_frame(spark, _VERTICES, [urls, np.arange(len(urls), dtype=np.int64)]),
+    )
 
 
 def _map_edges_longkey(

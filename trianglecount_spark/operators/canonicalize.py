@@ -22,8 +22,9 @@ its rows to the frame it returns (``iterative.attach_graph``). The
 first resident consumer (``regime.fits_resident``, then
 ``iterative.collect_edges``) builds it when the symmetric table fits
 the ceilings — twice the raw input's size estimate under the byte
-ceiling, twice its collected rows under the row ceiling: one collect
-of the raw edges, the symmetrize + dedupe as one ``np.unique`` and the
+ceiling, twice its collected rows under the row ceiling
+(``regime.collect_if_fits``): one collect of the raw edges, the
+symmetrize + dedupe as one ``np.unique`` and the
 degrees as one ``np.bincount`` — the reference's preprocessing on the
 device that then holds the CSR (``remove_self_loop``,
 ``to_bidirected``, the count-then-fill orientation kernel). A fitting
@@ -69,23 +70,21 @@ def _numpy_orders(*types: DataType) -> bool:
 
 def _canonical_graph(pairs: DataFrame, packed: bool) -> ResidentGraph | None:
     """The resident evaluation of the canonicalize plans over
-    ``pairs`` (``src, dst``), or None when the symmetric table would
-    not fit the ceilings. The output is up to twice the input, so it
-    runs only when twice Catalyst's estimate of ``pairs`` is under the
-    byte ceiling — never a ``count()``: an unknown or large estimate
-    declines without a job and the frame's own probe decides. Then one
-    ``toArrow()``; rows with a null endpoint and self-loops dropped as
-    the plan's ``src != dst`` (and the not-null filters Catalyst infers
-    from it) drops them; None, before any dedupe, when twice the rows
-    left exceed the row ceiling; else the symmetric distinct edge set
-    from ``ResidentGraph.symmetric_keys``. ``packed`` applies the
-    packed form's contract to the rows left after the null filter,
-    self-loops included: an id outside [0, 2^31) raises, as the plan's
+    ``pairs`` (``src, dst``), or None when the symmetric table, up to
+    twice the input, would not fit the ceilings
+    (``regime.collect_if_fits``: an unknown or large estimate, or too
+    many rows, declines, and the frame's own probe decides). Rows with
+    a null endpoint and self-loops are dropped as the plan's ``src !=
+    dst`` (and the not-null filters Catalyst infers from it) drops
+    them; then the symmetric distinct edge set from
+    ``ResidentGraph.symmetric_keys``. ``packed`` applies the packed
+    form's contract to the rows left after the null filter, self-loops
+    included: an id outside [0, 2^31) raises, as the plan's
     ``raise_error`` does."""
-    est = regime.estimated_bytes(pairs)
-    if est is None or 2 * est > regime.BYTE_LIMIT:
+    t = regime.collect_if_fits(pairs)
+    if t is None:
         return None
-    t = pairs.toArrow().drop_null()
+    t = t.drop_null()
     s, d = t.column("src"), t.column("dst")
     if packed:
         s64, d64 = pc.cast(s, "int64"), pc.cast(d, "int64")
@@ -100,8 +99,6 @@ def _canonical_graph(pairs: DataFrame, packed: bool) -> ResidentGraph | None:
                 "outside [0, 2^31); use canonicalize_edges"
             )
     t = t.filter(pc.not_equal(s, d))
-    if 2 * t.num_rows > regime.ROW_LIMIT:
-        return None
     g = ResidentGraph.from_ids(t.column("src").to_numpy(), t.column("dst").to_numpy(), {})
     src, dst = np.divmod(g.symmetric_keys(), g.n)
     return ResidentGraph(g.vertices, src, dst, {})

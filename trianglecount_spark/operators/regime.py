@@ -14,7 +14,9 @@ goes to the resident regime (operators/iterative.py;
 operators/triangles.py), the reference's on-device CSR, built once per
 job from the raw edges (operators/canonicalize.py); those consumers
 ask ``fits_resident``, which builds the graph a frame carries, while
-``fits_broadcast`` never builds one. PageRank alone keeps a third
+``fits_broadcast`` never builds one. The url dictionary of the web job
+(``functions/extract.py:edges_from_pages``) is built on the driver by
+the same builder rule, ``collect_if_fits``. PageRank alone keeps a third
 regime between them: an edge table over the ceiling whose vertex table
 fits broadcasts the rank vector (``resolve_broadcast`` on that vertex
 table), and it alone still takes a ``broadcast_state`` override.
@@ -34,6 +36,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from trianglecount_spark.operators.iterative import attached_graph, built_graph
@@ -102,6 +105,35 @@ def fits_estimate(df: DataFrame) -> bool:
     ceiling — no job."""
     est = estimated_bytes(df)
     return est is not None and est <= BYTE_LIMIT
+
+
+def collect_if_fits(df: DataFrame, max_rows: int | None = None) -> pa.Table | None:
+    """The rows of ``df`` in one ``toArrow()`` when a driver-side
+    builder whose output is up to twice ``df`` fits the ceilings, else
+    None: the builder rule of the resident graph
+    (operators/canonicalize.py) and the url dictionary
+    (functions/extract.py). An unknown estimate, or twice the estimate
+    over ``BYTE_LIMIT``, declines with no job; no ``count()`` ever
+    decides. More than ``ROW_LIMIT // 2`` rows collected (or
+    ``max_rows``, if lower) decline too.
+
+    Given ``max_rows``, the collect itself is bounded: at most that
+    many rows plus one reach the driver, whatever the estimate said —
+    for a frame whose estimate can be far below its rows, such as a
+    ``mapInPandas`` output. The bound is a ``limit``, which on a frame
+    of more than one partition adds a shuffle of the rows into one
+    (0.2 s on 300k edges in four partitions, warm local[4]), so the
+    canonicalize builders, whose edge tables are usually file scans or
+    caches, collect unbounded and trust the estimate."""
+    est = estimated_bytes(df)
+    if est is None or 2 * est > BYTE_LIMIT:
+        return None
+    cap = ROW_LIMIT // 2
+    if max_rows is not None:
+        cap = min(cap, max_rows)
+        df = df.limit(cap + 1)
+    t = df.toArrow()
+    return t if t.num_rows <= cap else None
 
 
 def fits_broadcast(df: DataFrame) -> bool:

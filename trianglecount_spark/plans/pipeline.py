@@ -21,12 +21,14 @@ with the three properties the north rule names:
   MID-ITERATION from ``out_dir/pr_state/round=N``
   (operators/iterative.py) — a killed 100-round job continues from its
   last check round, not from scratch.
-- PER-PARTITION LINEAGE + METRICS: each iterative stage's IterationLog
-  (round deltas, wall seconds, per-partition row counts + skew ratio,
-  and the regime each round ran in: ``resident`` while the graph fits
-  the broadcast ceiling, else ``shuffle`` — or, for PageRank,
-  ``broadcast`` while its vertex table fits) and each stage's wall time /
-  row count land in ``out_dir/metrics.json``.
+- PER-PARTITION LINEAGE + METRICS: the plan the edges stage ran
+  (``regime``: ``resident`` when ``edges_from_pages`` built the url
+  dictionary on the driver, else ``distributed``), each iterative
+  stage's IterationLog (round deltas, wall seconds, per-partition row
+  counts + skew ratio, and the regime each round ran in: ``resident``
+  while the graph fits the broadcast ceiling, else ``shuffle`` — or,
+  for PageRank, ``broadcast`` while its vertex table fits) and each
+  stage's wall time / row count land in ``out_dir/metrics.json``.
 - CLUSTER JOB FORM: stages exchange data through parquet, and ALL
   control artifacts — ``_SUCCESS`` probes, fingerprint markers,
   ``tc.json``/``metrics.json`` sidecars — go through the Hadoop
@@ -182,7 +184,8 @@ def run_pipeline(
         for h in handles:
             h.unpersist()
         fp_stamp("edges", pages_fp)
-        fin(skipped=False)
+        # only the distributed plan persists frames for the caller
+        fin(skipped=False, regime="distributed" if handles else "resident")
     edges = spark.read.parquet(edges_dir)
     fp = _edges_fingerprint(edges)
     metrics["edges_fingerprint"] = fp
@@ -277,6 +280,8 @@ def run_pipeline(
         fin(skipped=False, rounds=log.rounds)
 
     sym.unpersist()
-    metrics["n_components"] = spark.read.parquet(cc_dir).select("comp").distinct().count()
+    # a component's label is its minimum vertex, which is in the table
+    # labelled with itself: one row per component, in either regime
+    metrics["n_components"] = spark.read.parquet(cc_dir).where("v = comp").count()
     fsio.write_text(spark, f"{out_dir}/metrics.json", json.dumps(metrics, indent=1))
     return metrics

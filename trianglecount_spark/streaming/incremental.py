@@ -54,6 +54,7 @@ idempotent for the edge state.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
@@ -92,152 +93,156 @@ def incremental_triangle_count(
     ``(n_batches, n_edges, n_triangles)`` — the oracle for the final
     totals is the plain batch computation on the same input.
     ``state_dir`` pins the bucketed state location (tests inspect the
-    ``pb=`` partition layout there); default is a fresh temp dir."""
-    in_dir = tempfile.mkdtemp(prefix="tc_inc_in_")
-    if state_dir is None:
-        state_dir = tempfile.mkdtemp(prefix="tc_inc_state_")
-    ckpt = tempfile.mkdtemp(prefix="tc_inc_ckpt_")
-    adj_dir = os.path.join(state_dir, "adj")
-    raw_edges.select("src", "dst").repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(in_dir)
+    ``pb=`` partition layout there); default is a fresh temp dir. The
+    temp dirs made here (staging, checkpoint, a default state dir) are
+    removed before returning: the result row is built on the driver."""
+    with (
+        tempfile.TemporaryDirectory(prefix="tc_inc_in_") as in_dir,
+        tempfile.TemporaryDirectory(prefix="tc_inc_ckpt_") as ckpt,
+        contextlib.nullcontext(state_dir)
+        if state_dir is not None
+        else tempfile.TemporaryDirectory(prefix="tc_inc_state_") as state_dir,
+    ):
+        adj_dir = os.path.join(state_dir, "adj")
+        raw_edges.select("src", "dst").repartition(n_files).write.mode(
+            "overwrite"
+        ).parquet(in_dir)
 
-    totals = {"triangles": 0, "batches": 0}
+        totals = {"triangles": 0, "batches": 0}
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
-        new = _canonical(batch_df).persist()
-        # vertex set + touched buckets of this batch: the literal IN
-        # list below is what lets the parquet scan partition-prune
-        verts = (
-            new.select(F.col("a").alias("v"))
-            .unionByName(new.select(F.col("b").alias("v")))
-            .distinct()
-            .persist()
-        )
-        touched = [
-            r.pb for r in verts.select(_bucket("v", n_buckets).alias("pb")).distinct().collect()
-        ]
-        have_state = os.path.isdir(adj_dir) and any(
-            e.startswith("pb=") for e in os.listdir(adj_dir)
-        )
-        if have_state:
-            # bucket-pruned scan of the symmetric adjacency, then one
-            # broadcast semi-join cuts the slice the whole batch reuses
-            state = ss.read.schema("v long, w long, pb int").parquet(adj_dir)
-            adj_old = (
-                state.where(F.col("pb").isin(touched))
-                .join(F.broadcast(verts), "v", "left_semi")
-                .select("v", "w")
+        def process(batch_df: DataFrame, batch_id: int) -> None:
+            ss = batch_df.sparkSession
+            new = _canonical(batch_df).persist()
+            # vertex set + touched buckets of this batch: the literal IN
+            # list below is what lets the parquet scan partition-prune
+            verts = (
+                new.select(F.col("a").alias("v"))
+                .unionByName(new.select(F.col("b").alias("v")))
+                .distinct()
                 .persist()
             )
-            adj_old.count()  # materialize: the closure join plans
-            # against REAL cached sizes, not parquet guesses (measured
-            # ~3x on the sf0.1 events graph — lazy persist let the wedge
-            # joins pick pre-AQE strategies off stale stats); the cached
-            # size also settles the broadcast regime below
-            # cross-batch dedupe: canonical (a,b) exists iff adjacency
-            # row (v=a, w=b) exists — a<b rows live in bucket(a) ⊆ touched
-            new_only = new.join(
-                adj_old.select(F.col("v").alias("a"), F.col("w").alias("b")),
-                ["a", "b"],
-                "left_anti",
-            ).persist()
-            new_only.count()
-            new.unpersist()
-            new2 = new_only
-        else:
-            new2 = new
-            new2.count()
-        key = F.struct("a", "b").alias("key")
-        # symmetric adjacency over accumulated-slice ∪ new, keyed by
-        # arrival order: old edges sort before every new edge; new by key
-        uni = new2.select("a", "b", F.lit(False).alias("is_old"), key)
-        adj = uni.select(
-            F.col("a").alias("v"), F.col("b").alias("w"), "is_old", "key"
-        ).unionByName(
-            uni.select(F.col("b").alias("v"), F.col("a").alias("w"), "is_old", "key")
-        )
-        if have_state:
-            adj = adj_old.select(
-                "v", "w", F.lit(True).alias("is_old"),
-                F.lit(None).cast("struct<a:long,b:long>").alias("key"),
-            ).unionByName(adj)
-        e = new2.select("a", "b", F.struct("a", "b").alias("ekey"))
-        s1 = adj.select(
-            F.col("v").alias("a"),
-            "w",
-            F.col("is_old").alias("old1"),
-            F.col("key").alias("key1"),
-        )
-        s2 = adj.select(
-            F.col("v").alias("b2"),
-            F.col("w").alias("w2"),
-            F.col("is_old").alias("old2"),
-            F.col("key").alias("key2"),
-        )
-        # broadcast regime: ``adj`` is built from the cached, counted
-        # slice and batch, so ``regime.fits_broadcast`` settles from
-        # their in-memory sizes with no job. When it fits, hinting both
-        # wedge sides keeps the entire closure in one stage — the wedge
-        # stream (Σ per-batch triangle closures, the dominant volume)
-        # never hits an exchange. At sf0.1 this is wall-time parity
-        # with the shuffle plan (the hash-table build offsets the
-        # exchange saved); the win is plan-shape at scale — no
-        # wedge-stream shuffle to spill. Otherwise the joins shuffle
-        # on a / (b, w).
-        if regime.fits_broadcast(adj):
-            s1, s2 = F.broadcast(s1), F.broadcast(s2)
-        closed = (
-            e.join(s1, "a")
-            .join(
-                s2,
-                (F.col("b") == F.col("b2")) & (F.col("w") == F.col("w2")),
-                "inner",
+            buckets = verts.select(_bucket("v", n_buckets).alias("pb")).distinct()
+            touched = [r.pb for r in buckets.collect()]
+            have_state = os.path.isdir(adj_dir) and any(
+                e.startswith("pb=") for e in os.listdir(adj_dir)
             )
-            .where(
-                (F.col("old1") | (F.col("key1") < F.col("ekey")))
-                & (F.col("old2") | (F.col("key2") < F.col("ekey")))
+            if have_state:
+                # bucket-pruned scan of the symmetric adjacency, then one
+                # broadcast semi-join cuts the slice the whole batch reuses
+                state = ss.read.schema("v long, w long, pb int").parquet(adj_dir)
+                adj_old = (
+                    state.where(F.col("pb").isin(touched))
+                    .join(F.broadcast(verts), "v", "left_semi")
+                    .select("v", "w")
+                    .persist()
+                )
+                adj_old.count()  # materialize: the closure join plans
+                # against REAL cached sizes, not parquet guesses (measured
+                # ~3x on the sf0.1 events graph — lazy persist let the wedge
+                # joins pick pre-AQE strategies off stale stats); the cached
+                # size also settles the broadcast regime below
+                # cross-batch dedupe: canonical (a,b) exists iff adjacency
+                # row (v=a, w=b) exists — a<b rows live in bucket(a) ⊆ touched
+                new_only = new.join(
+                    adj_old.select(F.col("v").alias("a"), F.col("w").alias("b")),
+                    ["a", "b"],
+                    "left_anti",
+                ).persist()
+                new_only.count()
+                new.unpersist()
+                new2 = new_only
+            else:
+                new2 = new
+                new2.count()
+            key = F.struct("a", "b").alias("key")
+            # symmetric adjacency over accumulated-slice ∪ new, keyed by
+            # arrival order: old edges sort before every new edge; new by key
+            uni = new2.select("a", "b", F.lit(False).alias("is_old"), key)
+            adj = uni.select(
+                F.col("a").alias("v"), F.col("b").alias("w"), "is_old", "key"
+            ).unionByName(
+                uni.select(F.col("b").alias("v"), F.col("a").alias("w"), "is_old", "key")
             )
-        )
-        delta = closed.count()
-        totals["triangles"] += delta
-        totals["batches"] += 1
-        # append BOTH directions of the new edges, bucketed on the
-        # adjacency key — the layout every later batch prunes against;
-        # the pre-write repartition gives one file per (batch, bucket)
-        # instead of writers x buckets splinters (listing cost compounds
-        # per trigger on a long-lived state dir)
-        sym_new = (
-            new2.select(F.col("a").alias("v"), F.col("b").alias("w"))
-            .unionByName(new2.select(F.col("b").alias("v"), F.col("a").alias("w")))
-            .withColumn("pb", _bucket("v", n_buckets))
-        )
-        sym_new.repartition("pb").write.mode("append").partitionBy("pb").parquet(
-            adj_dir
-        )
-        new2.unpersist()
-        verts.unpersist()
-        if have_state:
-            adj_old.unpersist()
+            if have_state:
+                adj = adj_old.select(
+                    "v", "w", F.lit(True).alias("is_old"),
+                    F.lit(None).cast("struct<a:long,b:long>").alias("key"),
+                ).unionByName(adj)
+            e = new2.select("a", "b", F.struct("a", "b").alias("ekey"))
+            s1 = adj.select(
+                F.col("v").alias("a"),
+                "w",
+                F.col("is_old").alias("old1"),
+                F.col("key").alias("key1"),
+            )
+            s2 = adj.select(
+                F.col("v").alias("b2"),
+                F.col("w").alias("w2"),
+                F.col("is_old").alias("old2"),
+                F.col("key").alias("key2"),
+            )
+            # broadcast regime: ``adj`` is built from the cached, counted
+            # slice and batch, so ``regime.fits_broadcast`` settles from
+            # their in-memory sizes with no job. When it fits, hinting both
+            # wedge sides keeps the entire closure in one stage — the wedge
+            # stream (Σ per-batch triangle closures, the dominant volume)
+            # never hits an exchange. At sf0.1 this is wall-time parity
+            # with the shuffle plan (the hash-table build offsets the
+            # exchange saved); the win is plan-shape at scale — no
+            # wedge-stream shuffle to spill. Otherwise the joins shuffle
+            # on a / (b, w).
+            if regime.fits_broadcast(adj):
+                s1, s2 = F.broadcast(s1), F.broadcast(s2)
+            closed = (
+                e.join(s1, "a")
+                .join(
+                    s2,
+                    (F.col("b") == F.col("b2")) & (F.col("w") == F.col("w2")),
+                    "inner",
+                )
+                .where(
+                    (F.col("old1") | (F.col("key1") < F.col("ekey")))
+                    & (F.col("old2") | (F.col("key2") < F.col("ekey")))
+                )
+            )
+            delta = closed.count()
+            totals["triangles"] += delta
+            totals["batches"] += 1
+            # append BOTH directions of the new edges, bucketed on the
+            # adjacency key — the layout every later batch prunes against;
+            # the pre-write repartition gives one file per (batch, bucket)
+            # instead of writers x buckets splinters (listing cost compounds
+            # per trigger on a long-lived state dir)
+            sym_new = (
+                new2.select(F.col("a").alias("v"), F.col("b").alias("w"))
+                .unionByName(new2.select(F.col("b").alias("v"), F.col("a").alias("w")))
+                .withColumn("pb", _bucket("v", n_buckets))
+            )
+            sym_new.repartition("pb").write.mode("append").partitionBy("pb").parquet(
+                adj_dir
+            )
+            new2.unpersist()
+            verts.unpersist()
+            if have_state:
+                adj_old.unpersist()
 
-    q = (
-        spark.readStream.schema(EDGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        q = (
+            spark.readStream.schema(EDGE_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+            .writeStream.foreachBatch(process)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
-    n_edges = (
-        spark.read.schema("v long, w long, pb int").parquet(adj_dir)
-        .where(F.col("v") < F.col("w"))
-        .count()
-    )
-    return spark.createDataFrame(
-        [(totals["batches"], n_edges, totals["triangles"])],
-        "n_batches long, n_edges long, n_triangles long",
-    )
+        n_edges = (
+            spark.read.schema("v long, w long, pb int").parquet(adj_dir)
+            .where(F.col("v") < F.col("w"))
+            .count()
+        )
+        return spark.createDataFrame(
+            [(totals["batches"], n_edges, totals["triangles"])],
+            "n_batches long, n_edges long, n_triangles long",
+        )
