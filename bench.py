@@ -29,8 +29,9 @@ local[$SPARK_GRAFT_CPUS]:
 
 tc_arrays, pagerank10 and components read the cached table through a fresh
 projection on every rep: a frame keeps the resident graph built from
-it (operators/iterative.py, ``attach_graph``), so reusing one frame
-would time the collect once and a dictionary lookup thereafter.
+it (operators/regime.py: ``resident_graph`` attaches the graph it
+collects, ``attach_graph``), so reusing one frame would time the
+collect once and a dictionary lookup thereafter.
 
 REPS DISCIPLINE: passes are interleaved round-robin — every query runs
 once per pass, then the next pass starts — so a noisy-neighbor window

@@ -121,7 +121,8 @@ RESIDENT_GRAPHS = {
 def _graph_frame(spark, frame):
     """The attached graph's rows as a local frame of ``frame``'s schema,
     or None when ``frame`` has no graph (over the ceiling)."""
-    from trianglecount_spark.operators.iterative import attached_graph, local_frame
+    from trianglecount_spark.operators.iterative import local_frame
+    from trianglecount_spark.operators.regime import attached_graph
 
     g = attached_graph(frame)
     if g is None:
@@ -196,8 +197,8 @@ def test_packed_out_of_range_raises_in_both_regimes(spark, bad, monkeypatch):
         df = _sized(spark.createDataFrame([(0, 1), (1, 2), bad], "src long, dst long"))
         with pytest.raises(Exception, match="outside"):
             # resident: the graph raises; distributed: the plan's job
-            if regime.fits_resident(canonicalize_edges_packed(df)):
-                raise AssertionError("fits_resident passed an out-of-range id")
+            if regime.resident_graph(canonicalize_edges_packed(df)) is not None:
+                raise AssertionError("resident_graph passed an out-of-range id")
             canonicalize_edges_packed(df).collect()
         return True
 
@@ -282,14 +283,14 @@ def test_probe_over_the_ceiling_runs_one_count(spark, monkeypatch):
     count (as many jobs as counting the plan: AQE submits each shuffle
     stage as one), as without attached graphs, and builds nothing."""
     from trianglecount_spark.operators import regime
-    from trianglecount_spark.operators.iterative import built_graph
+    from trianglecount_spark.operators.regime import built_graph
 
     raw = _sized(edges_df(spark, GOLDEN["k5"][0]))
     monkeypatch.setattr(regime, "BYTE_LIMIT", -1)
     monkeypatch.setattr(regime, "ROW_LIMIT", 3)
     sym = canonicalize_edges(raw)
     oriented = orient(sym)
-    fits, jobs = _jobs_of(spark, "probe-over", lambda: regime.fits_resident(oriented))
+    fits, jobs = _jobs_of(spark, "probe-over", lambda: regime.resident_graph(oriented))
     assert not fits
     _, count_jobs = _jobs_of(spark, "count-oriented", orient(canonicalize_edges(raw)).count)
     assert len(jobs) == len(count_jobs), (jobs, count_jobs)
@@ -301,7 +302,7 @@ def test_distributed_consumer_probe_builds_nothing(spark, monkeypatch):
     the join closure and the broadcast-state operators ask — runs the
     frame's count, as without attached graphs, and collects nothing."""
     from trianglecount_spark.operators import regime
-    from trianglecount_spark.operators.iterative import built_graph
+    from trianglecount_spark.operators.regime import built_graph
 
     raw = _sized(edges_df(spark, GOLDEN["k5"][0]))
     sym = canonicalize_edges(raw)
@@ -318,7 +319,7 @@ def test_builder_declines_a_symmetric_table_over_the_row_ceiling(spark, monkeypa
     it gets no graph (none is kept), and the consumer still counts the
     plan's triangles."""
     from trianglecount_spark.operators import regime
-    from trianglecount_spark.operators.iterative import attached_graph, built_graph
+    from trianglecount_spark.operators.regime import attached_graph, built_graph
     from trianglecount_spark.operators.triangles import triangle_count_arrays
 
     raw_edges, want = GOLDEN["k5"]
@@ -329,3 +330,33 @@ def test_builder_declines_a_symmetric_table_over_the_row_ceiling(spark, monkeypa
     sym = canonicalize_edges(raw)
     assert attached_graph(sym) is None and built_graph(sym) is None
     assert triangle_count_arrays(orient(sym)) == want
+
+
+def test_python_generator_estimate_is_not_trusted(spark):
+    """An unpersisted Python row generator (``powerlaw_edges``:
+    ``mapInPandas`` over a ``Range``, whose estimate passes the Range's
+    on) has no size estimate under the default ceilings: its canonical
+    builder declines without a job, the consumer's probe counts the
+    plan, and the triangle count equals the run on the cached input,
+    whose estimate is trusted and whose graph is built."""
+    from trianglecount_spark.operators import regime
+    from trianglecount_spark.operators.regime import attached_graph
+    from trianglecount_spark.operators.triangles import triangle_count_arrays
+    from trianglecount_spark.sources.synth import powerlaw_edges
+
+    gen = powerlaw_edges(spark, 3000, 300, n_partitions=2)
+    assert regime.estimated_bytes(gen) is None
+    sym = canonicalize_edges(gen)
+    graph, jobs = _jobs_of(spark, "generator-builder", lambda: attached_graph(sym))
+    assert graph is None and jobs == []
+    oriented = orient(sym)
+    fits, jobs = _jobs_of(spark, "generator-probe", lambda: regime.fits_broadcast(oriented))
+    assert fits and jobs
+    got = triangle_count_arrays(oriented)
+
+    cached = _sized(powerlaw_edges(spark, 3000, 300, n_partitions=2))
+    assert regime.estimated_bytes(cached) is not None
+    cached_sym = canonicalize_edges(cached)
+    assert attached_graph(cached_sym) is not None
+    assert triangle_count_arrays(orient(cached_sym)) == got > 0
+    cached.unpersist()

@@ -511,3 +511,26 @@ def test_resume_across_regimes(spark, tmp_path, monkeypatch, op, writer):
     b = {r[0]: r[1] for r in fresh.collect()}
     assert set(a) == set(b)
     assert all(abs(a[v] - b[v]) < 1e-8 for v in a)
+
+
+def test_resident_consumers_reject_null_endpoints(spark):
+    """Under the default ceilings every resident consumer collects a
+    raw edge table that fits, and a null endpoint raises ``ValueError``:
+    it is no vertex the resident rounds can order."""
+    from trianglecount_spark.operators.triangles import (
+        triangle_count_arrays,
+        triangles_per_vertex_arrays,
+    )
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, None), (0, 2)], "src long, dst long"
+    )
+    for op in (
+        pagerank,
+        connected_components,
+        label_propagation,
+        triangle_count_arrays,
+        triangles_per_vertex_arrays,
+    ):
+        with pytest.raises(ValueError, match="nulls"):
+            op(edges)

@@ -694,12 +694,18 @@ def test_frontier_auto_resolves_by_size(spark, monkeypatch):
     results either way — and triangles_join's closure follows the same
     rule."""
     import trianglecount_spark.operators.metrics as M
+    from tests.conftest import broadcast_regime
     from trianglecount_spark.operators import regime
     from trianglecount_spark.operators.canonicalize import orient
+    from trianglecount_spark.operators.pagerank import pagerank
     from trianglecount_spark.operators.triangles import triangles_join
 
     sym = _sym(spark, [(0, 1), (1, 2), (2, 3), (0, 3), (1, 4), (0, 2)])
     o = orient(sym)
+
+    def pagerank_regime(flag):
+        _, log = pagerank(sym, max_iter=1, check_every=1, broadcast_state=flag)
+        return log.rounds[-1]["regime"]
 
     def closure_hinted(df):
         plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
@@ -708,14 +714,15 @@ def test_frontier_auto_resolves_by_size(spark, monkeypatch):
     def tris(df):
         return {(r.u, r.v, r.w) for r in df.collect()}
 
-    assert regime.resolve_broadcast("auto", sym) is True
-    assert regime.resolve_broadcast(True, sym) is True
-    assert regime.resolve_broadcast(False, sym) is False
+    assert pagerank_regime("auto") == "resident"
+    assert broadcast_regime(monkeypatch, lambda: pagerank_regime("auto"), sym) == "broadcast"
+    assert pagerank_regime(True) == "broadcast"
+    assert pagerank_regime(False) == "shuffle"
     t_bc = triangles_join(o)
     assert closure_hinted(t_bc)
     monkeypatch.setattr(regime, "BYTE_LIMIT", 1)
     monkeypatch.setattr(regime, "ROW_LIMIT", 1)
-    assert regime.resolve_broadcast("auto", sym) is False
+    assert pagerank_regime("auto") == "shuffle"
     # end-to-end under the shrunken ceiling: the shuffle regime runs and
     # must agree with the broadcast run under the default ceilings
     d_auto, _ = M.bfs_distances(sym, 0, max_rounds=6)
@@ -736,12 +743,11 @@ def test_broadcast_tristate_typo_raises(spark):
     silently force the memory-unsafe broadcast regime."""
     import pytest
 
-    from trianglecount_spark.operators import regime
     from trianglecount_spark.operators.pagerank import pagerank
 
     sym = _sym(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])
     with pytest.raises(ValueError, match="auto"):
-        regime.resolve_broadcast("Auto", sym)
+        pagerank(sym, max_iter=2, broadcast_state="Auto")
     with pytest.raises(ValueError, match="auto"):
         pagerank(sym, max_iter=2, broadcast_state="yes")
 

@@ -275,3 +275,26 @@ def test_streamed_upsert_state_batching_independent(spark, tmp_path):
     # (t=5; event 4 is EARLIER and arrives in a later batch — the merge
     # must not overwrite newer state with older data)
     assert got == {1: (5, "click", 3), 2: (2, "click", 2)}
+
+
+def test_stream_checkpoints_do_not_outlive_their_query(spark):
+    """A drained stream's checkpoint dir is removed when its query
+    ends: the ``tc_*_ckpt_*`` entries in the temp dir are the same
+    before and after a call (the ``out`` dirs back the returned lazy
+    reads and stay)."""
+    import glob
+    import tempfile
+
+    from trianglecount_spark.streaming.edges_stream import (
+        streamed_upsert_state,
+        windowed_event_counts,
+    )
+
+    def checkpoints():
+        return sorted(glob.glob(os.path.join(tempfile.gettempdir(), "tc_*_ckpt_*")))
+
+    sf = "/root/testdata/sf0.001"
+    before = checkpoints()
+    assert windowed_event_counts(spark, sf).count() > 0
+    assert streamed_upsert_state(spark, sf).count() > 0
+    assert checkpoints() == before

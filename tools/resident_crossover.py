@@ -13,7 +13,7 @@ ceiling. Every cell is one untimed warmup, then ``reps`` timed runs
 totals must agree); the median is kept.
 
 A frame keeps the resident graph built from it
-(``iterative.attach_graph``), so each timed call builds its input
+(``regime.attach_graph``), so each timed call builds its input
 inside the call and every rep pays its collect: the operator cells
 read the persisted ``sym`` (``orient(sym)`` for triangles) through a
 fresh projection; ``build`` is the whole chain raw → sym → oriented →
@@ -87,7 +87,6 @@ def main() -> None:
     from trianglecount_spark.operators import regime
     from trianglecount_spark.operators.canonicalize import canonicalize_edges, orient
     from trianglecount_spark.operators.components import connected_components
-    from trianglecount_spark.operators.iterative import built_graph
     from trianglecount_spark.operators.lpa import label_propagation
     from trianglecount_spark.operators.pagerank import pagerank
     from trianglecount_spark.operators.triangles import triangle_count_arrays
@@ -132,7 +131,7 @@ def main() -> None:
             s = canonicalize_edges(raw)
             n = triangle_count_arrays(orient(s))
             if regime.ROW_LIMIT >= 0:  # the "auto" regime's run
-                built[name] = built_graph(s) is not None
+                built[name] = regime.built_graph(s) is not None
             return n
 
         return run

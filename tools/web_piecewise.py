@@ -85,9 +85,8 @@ def run_stages(spark, reps: int) -> dict[str, float]:
             return df
 
         raw = stage("extract", lambda: pin(extract_links(pages)))
-        urls = raw.select(F.col("src_url").alias("url")).unionByName(
-            raw.select(F.col("dst_url").alias("url"))
-        )
+        # one scan for both endpoints, as edges_from_pages builds it
+        urls = raw.select(F.explode(F.array("src_url", "dst_url")).alias("url"))
         verts = stage(
             "dict", lambda: pin(vertex_dictionary_scalable(urls, "url"))
         )

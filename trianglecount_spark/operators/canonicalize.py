@@ -18,20 +18,21 @@ shuffles; never assume it broadcasts.
 
 The attached graph is a driver-side evaluation of that plan. Each
 function also attaches a memoized builder of the ``ResidentGraph`` of
-its rows to the frame it returns (``iterative.attach_graph``). The
-first resident consumer (``regime.fits_resident``, then
-``iterative.collect_edges``) builds it when the symmetric table fits
-the ceilings — twice the raw input's size estimate under the byte
-ceiling, twice its collected rows under the row ceiling
-(``regime.collect_if_fits``): one collect of the raw edges, the
-symmetrize + dedupe as one ``np.unique`` and the
-degrees as one ``np.bincount`` — the reference's preprocessing on the
-device that then holds the CSR (``remove_self_loop``,
-``to_bidirected``, the count-then-fill orientation kernel). A fitting
-job so collects its raw edges once and runs no canonicalize or orient
+its rows to the frame it returns (``regime.attach_graph``). The
+first resident consumer (``regime.resident_graph``) builds it when the
+symmetric table fits the ceilings — twice the raw input's size
+estimate under the byte ceiling, twice its collected rows under the
+row ceiling (``regime.collect_if_fits``): one collect of the raw
+edges, the symmetrize + dedupe as one ``np.unique`` and the degrees as
+one ``np.bincount`` — the reference's preprocessing on the device that
+then holds the CSR (``remove_self_loop``, ``to_bidirected``, the
+count-then-fill orientation kernel). ``orient``'s builder starts from
+the graph of its input (``regime.source_graph``). A fitting job so
+collects its raw edges once and runs no canonicalize or orient
 shuffle. A builder never runs a ``count()``: past the ceilings, or
-with an estimate it cannot trust, it declines without a job and the
-frame's own probe decides, as without it. A distributed consumer
+with an estimate it cannot trust (none, or one through a Python row
+generator), it declines without a job and the frame's own probe
+decides, as without it. A distributed consumer
 (``regime.fits_broadcast``) never builds the graph and runs the plan.
 No function here launches a job when called.
 """
@@ -45,14 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, IntegralType, StringType
 
 from trianglecount_spark.operators import regime
-from trianglecount_spark.operators.iterative import (
-    NullColumnError,
-    ResidentGraph,
-    attach_graph,
-    attached_graph,
-    collect_edges,
-    has_attached_graph,
-)
+from trianglecount_spark.operators.iterative import ResidentGraph
 
 # exclusive upper bound on ids the packed form accepts: two 31-bit ids
 # pack into one non-negative int64 (src << 32) | dst
@@ -122,7 +116,7 @@ def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> 
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
     if _numpy_orders(*(f.dataType for f in e.schema)):
-        attach_graph(sym, lambda: _canonical_graph(e, packed=False))
+        regime.attach_graph(sym, lambda: _canonical_graph(e, packed=False))
     return sym
 
 
@@ -178,7 +172,7 @@ def canonicalize_edges_packed(
     )
     pairs = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if all(isinstance(f.dataType, IntegralType) for f in pairs.schema):
-        attach_graph(sym, lambda: _canonical_graph(pairs, packed=True))
+        regime.attach_graph(sym, lambda: _canonical_graph(pairs, packed=True))
     return sym
 
 
@@ -222,30 +216,19 @@ def orient(sym_edges: DataFrame, deg: DataFrame | None = None) -> DataFrame:
         .select("src", "dst")
     )
     if resident and _numpy_orders(*(f.dataType for f in oriented.schema)):
-        attach_graph(oriented, lambda: _oriented_graph(sym_edges))
+        regime.attach_graph(oriented, lambda: _oriented_graph(sym_edges))
     return oriented
 
 
 def _oriented_graph(sym_edges: DataFrame) -> ResidentGraph | None:
     """The resident evaluation of ``orient(sym_edges)``, from the graph
-    of ``sym_edges``: the one it carries (for a canonical table, a memo
-    hit), or for a frame with none, one collect when Catalyst's
-    estimate of it is under the byte ceiling. None when that graph
-    declines or the estimate is unknown or large (no job: the frame's
-    own probe decides), or when ``sym_edges`` has null endpoints (never
-    a canonical table; the plan decides). Degrees by ``np.bincount`` of
-    ``dst`` — one per row, as ``degrees`` counts — and the orientation
-    rule on positions, which follow id order. ``deg(src) > 0`` mirrors
-    the plan's inner join for input that is not symmetric."""
-    if has_attached_graph(sym_edges):
-        g = attached_graph(sym_edges)
-    elif regime.fits_estimate(sym_edges):
-        try:
-            g = collect_edges(sym_edges)
-        except NullColumnError:
-            return None
-    else:
-        return None
+    of ``sym_edges`` (``regime.source_graph``; for a canonical table, a
+    memo hit), or None when it has none: the frame's own probe decides.
+    Degrees by ``np.bincount`` of ``dst`` — one per row, as ``degrees``
+    counts — and the orientation rule on positions, which follow id
+    order. ``deg(src) > 0`` mirrors the plan's inner join for input
+    that is not symmetric."""
+    g = regime.source_graph(sym_edges)
     if g is None:
         return None
     deg = np.bincount(g.dst, minlength=g.n)

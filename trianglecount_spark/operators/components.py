@@ -13,7 +13,7 @@ Convergence is detected by state-equality across a check window
 (fixpoint ⇒ equality is exact, see iterative.iterate).
 
 ``connected_components`` runs RESIDENT whenever the edge table fits the
-broadcast ceiling (``regime.fits_resident``): the same large-star /
+broadcast ceiling (``regime.resident_graph``): the same large-star /
 small-star rounds in numpy on the collected edge positions, so the
 state, the stop round and the ``state_dir`` rounds are the distributed
 form's.
@@ -28,12 +28,11 @@ from pyspark.sql.types import StructField, StructType
 
 from trianglecount_spark.operators.iterative import (
     IterationLog,
-    collect_edges,
     iterate,
     local_frame,
     vertex_field,
 )
-from trianglecount_spark.operators.regime import fits_resident
+from trianglecount_spark.operators.regime import resident_graph
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -68,8 +67,9 @@ def connected_components(
     self-loops ignored). Iterated state: the shrinking parent-link edge
     set, converging to stars (u → component min). No rounds run (empty
     log) when the graph has no edge between distinct vertices."""
-    if fits_resident(edges):
-        return _components_resident(edges, max_iter, check_every, state_dir, resume)
+    g = resident_graph(edges)
+    if g is not None:
+        return _components_resident(edges, g, max_iter, check_every, state_dir, resume)
     all_v = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
@@ -132,13 +132,12 @@ def connected_components(
 
 
 def _components_resident(
-    edges, max_iter, check_every, state_dir, resume
+    edges, g, max_iter, check_every, state_dir, resume
 ) -> tuple[DataFrame, IterationLog]:
     """``connected_components``' rounds on vertex positions: the state
     is the sorted distinct edge set packed as ``src·n + dst``
     (``ResidentGraph.symmetric_keys``), which makes ``distinct`` a
     ``np.unique`` and the delta an array comparison."""
-    g = collect_edges(edges)
     n, spark = g.n, edges.sparkSession
 
     def distinct(a: np.ndarray, b: np.ndarray) -> np.ndarray:

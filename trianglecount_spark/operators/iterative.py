@@ -24,30 +24,22 @@ process); PageRank / CC / LPA are driver-mandated extensions
 
 The RESIDENT regime is the reference's other half: a graph that fits
 one worker is not partitioned at all (the whole CSR stays on one
-device). ``collect_edges`` pulls an edge table that passed
-``regime.fits_resident`` onto the driver once (Spark collects every
-broadcast relation there anyway, so the same ceilings bound it), and
-the same ``iterate`` loop runs the operator's numpy step
+device). ``regime.resident_graph`` hands a fitting edge table's
+``ResidentGraph`` to the operator (Spark collects every broadcast
+relation on the driver anyway, so the same ceilings bound it), and the
+same ``iterate`` loop runs the operator's numpy step
 (``regime="resident"``): one check cadence, stop rule, log key set and
 ``state_dir`` round format for every regime, so a run resumes across
 regimes. A resident round is microseconds of numpy instead of one or
-more Spark jobs.
-
-One graph per job: a frame can carry a driver-side builder of its
-``ResidentGraph`` (``attach_graph`` — canonicalize.py attaches one to
-every canonical and oriented edge table). ``collect_edges`` and
-``regime.fits_resident`` build and use that graph instead of running
-the frame's plan, and a graph ``collect_edges`` collects itself is kept
-the same way, so each edge table reaches the driver at most once.
-``regime.fits_broadcast`` reads a graph only once it is built: a
-distributed consumer never collects.
+more Spark jobs. This module holds the graph and the loop; which
+regime runs is decided in operators/regime.py, which this module does
+not import.
 """
 
 from __future__ import annotations
 
 import json
 import time
-import weakref
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -308,91 +300,3 @@ class ResidentGraph:
         ):
             raise ValueError("state ids are not vertices of this graph")
         return pos
-
-
-class NullColumnError(ValueError):
-    """A collected column the resident regime needs has nulls."""
-
-
-def _column(table: pa.Table, name: str) -> np.ndarray:
-    col = table.column(name)
-    if col.null_count:
-        raise NullColumnError(f"column {name!r} has nulls")
-    return col.to_numpy()
-
-
-class _Attached:
-    """A frame's memoized graph builder (``attach_graph``)."""
-
-    def __init__(self, build: Callable[[], ResidentGraph | None]):
-        self.build = build
-        self.graph: ResidentGraph | None = None
-        # the ceilings build() last returned None under
-        self.declined: tuple | None = None
-
-    def get(self) -> ResidentGraph | None:
-        # regime imports this module
-        from trianglecount_spark.operators import regime
-
-        ceilings = (regime.BYTE_LIMIT, regime.ROW_LIMIT)
-        if self.graph is None and self.declined != ceilings:
-            self.graph = self.build()
-            self.declined = None if self.graph is not None else ceilings
-        return self.graph
-
-
-# frame -> its _Attached. Weak keys: an entry lives as long as its
-# frame, and persist()/cache() return the same object.
-_GRAPHS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def attach_graph(
-    frame: DataFrame, build: Callable[[], ResidentGraph | None]
-) -> DataFrame:
-    """Give ``frame`` a driver-side evaluation of its plan: ``build()``
-    returns the graph of ``frame``'s rows, or None when it would not
-    fit the broadcast ceilings. The first graph built is kept; a None
-    only for the ceilings it was found under, so a later call under
-    other ceilings tries again while repeated calls under the same
-    ones do not. Returns ``frame``; no job runs here."""
-    _GRAPHS[frame] = _Attached(build)
-    return frame
-
-
-def has_attached_graph(frame: DataFrame) -> bool:
-    """True iff ``frame`` has a graph builder (or a collected graph)."""
-    return frame in _GRAPHS
-
-
-def attached_graph(frame: DataFrame) -> ResidentGraph | None:
-    """``frame``'s graph, built on first use, or None when ``frame``
-    has none (no builder, or the builder declined)."""
-    entry = _GRAPHS.get(frame)
-    return entry.get() if entry is not None else None
-
-
-def built_graph(frame: DataFrame) -> ResidentGraph | None:
-    """``frame``'s graph if it is already built; never builds."""
-    entry = _GRAPHS.get(frame)
-    return entry.graph if entry is not None else None
-
-
-def collect_edges(edges: DataFrame, *extra: str) -> ResidentGraph:
-    """``src, dst`` (plus the ``extra`` columns) on the driver. Callers
-    have checked ``regime.fits_resident(edges)``. Without ``extra`` the
-    frame's attached graph is returned when it has one; otherwise one
-    ``toArrow`` job collects the rows, and that graph is attached to
-    the frame for the next caller. Null endpoints raise: they are no
-    vertex the numpy rounds can order."""
-    if not extra:
-        g = attached_graph(edges)
-        if g is not None:
-            return g
-    table = edges.select("src", "dst", *extra).toArrow()
-    g = ResidentGraph.from_ids(
-        _column(table, "src"), _column(table, "dst"),
-        {c: _column(table, c) for c in extra},
-    )
-    if not extra:
-        attach_graph(edges, lambda: g)
-    return g

@@ -10,7 +10,7 @@ gate needs; asynchronous LPA is run-order dependent).
 Two regimes, chosen the way ``connected_components`` chooses:
 
 - resident, whenever the edge table fits the broadcast ceiling
-  (``regime.fits_resident``): the same synchronous rounds in numpy over
+  (``regime.resident_graph``): the same synchronous rounds in numpy over
   the collected edge table, labels held as vertex positions (positions
   sort like ids, so "smallest label" is unchanged);
 - shuffle otherwise. The label state is VERTEX-sized while the work
@@ -32,12 +32,11 @@ from pyspark.sql.types import StructField, StructType
 
 from trianglecount_spark.operators.iterative import (
     IterationLog,
-    collect_edges,
     iterate,
     local_frame,
     vertex_field,
 )
-from trianglecount_spark.operators.regime import fits_resident
+from trianglecount_spark.operators.regime import resident_graph
 
 
 def label_propagation(
@@ -52,8 +51,9 @@ def label_propagation(
     table gives an empty result and log."""
     vf = vertex_field(edges)
     schema = StructType([vf, StructField("label", vf.dataType, vf.nullable)])
-    if fits_resident(edges):
-        return _lpa_resident(edges, schema, max_iter, check_every, state_dir, resume)
+    g = resident_graph(edges)
+    if g is not None:
+        return _lpa_resident(edges, g, schema, max_iter, check_every, state_dir, resume)
     sym = (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -103,12 +103,11 @@ def label_propagation(
 
 
 def _lpa_resident(
-    edges, schema, max_iter, check_every, state_dir, resume
+    edges, g, schema, max_iter, check_every, state_dir, resume
 ) -> tuple[DataFrame, IterationLog]:
     """``label_propagation``'s rounds on vertex positions. Each round's
     ``(dst, label)`` frequency table is an ``np.unique`` over keys
     packed as ``dst·n + label``, like ``ResidentGraph.symmetric_keys``."""
-    g = collect_edges(edges)
     n, spark = g.n, edges.sparkSession
 
     def to_frame(lab: np.ndarray) -> DataFrame:

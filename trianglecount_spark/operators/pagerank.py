@@ -31,11 +31,11 @@ partial aggregation absorbs it without salting.
 Three regimes, chosen by ``broadcast_state="auto"`` (the default) in
 this order:
   1. resident, while the edge table fits the broadcast ceiling
-     (``regime.fits_resident``): the same algebra as numpy over the
+     (``regime.resident_graph``): the same algebra as numpy over the
      collected edge table — one ``bincount`` per round instead of one
      Spark job;
   2. broadcast, while the vertex table fits it
-     (``regime.resolve_broadcast`` on the cached vertex table): the rank
+     (``regime.fits_broadcast`` on the cached vertex table): the rank
      vector broadcasts onto an edge table partitioned on dst, so a
      round's edge-sized work runs with no shuffle — measured 2.3x faster
      than the shuffle plan at 32M raw edges / 2M vertices (README
@@ -53,16 +53,11 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from trianglecount_spark.operators.iterative import (
     IterationLog,
-    collect_edges,
     iterate,
     local_frame,
     vertex_field,
 )
-from trianglecount_spark.operators.regime import (
-    check_flag,
-    fits_resident,
-    resolve_broadcast,
-)
+from trianglecount_spark.operators.regime import fits_broadcast, resident_graph
 
 
 def pagerank(
@@ -107,20 +102,30 @@ def pagerank(
 
     ``broadcast_state``: ``"auto"`` (default) picks the resident,
     broadcast or shuffle regime (module docstring); ``True`` and
-    ``False`` force the broadcast and shuffle plans. Same result, log
-    keys and ``state_dir`` rounds in every regime; an empty edge table
-    gives an empty result and log.
+    ``False`` force the broadcast and shuffle plans. Any other value
+    raises: a typo like ``"Auto"`` is a truthy string and must not
+    silently pick a regime. Same result, log keys and ``state_dir``
+    rounds in every regime; an empty edge table gives an empty result
+    and log.
     """
-    resident = check_flag(broadcast_state) == "auto" and fits_resident(edges)
+    if broadcast_state not in (True, False, "auto"):
+        raise ValueError(
+            f"broadcast_state must be True, False or 'auto', got {broadcast_state!r}"
+        )
+    g = (
+        resident_graph(edges, *([weight] if weight else []))
+        if broadcast_state == "auto"
+        else None
+    )
     schema = StructType([
         vertex_field(edges),
         # the rank expression is non-null in the dangling-free and
         # teleport forms, nullable (a division) in the uniform closure
         StructField("rank", DoubleType(), not dangling_free and teleport is None),
     ])
-    if resident:
+    if g is not None:
         return _pagerank_resident(
-            edges, schema, alpha, tol, max_iter, check_every, state_dir, resume,
+            edges, g, schema, alpha, tol, max_iter, check_every, state_dir, resume,
             dangling_free, teleport, weight, partition_metrics,
         )
     verts = (
@@ -135,7 +140,7 @@ def pagerank(
         return local_frame(edges.sparkSession, schema, [[], []]), IterationLog()
     # the probe reads the cached table's size: no job unless its
     # estimate is over the ceiling, then one count of the cache
-    broadcast = resolve_broadcast(broadcast_state, verts)
+    broadcast = fits_broadcast(verts) if broadcast_state == "auto" else broadcast_state
     if teleport is not None:
         # s joined once onto the (cached) vertex table; absent rows get 0
         verts = (
@@ -236,14 +241,13 @@ def pagerank(
 
 
 def _pagerank_resident(
-    edges, schema, alpha, tol, max_iter, check_every, state_dir, resume,
+    edges, g, schema, alpha, tol, max_iter, check_every, state_dir, resume,
     dangling_free, teleport, weight, partition_metrics,
 ) -> tuple[DataFrame, IterationLog]:
     """The resident regime of ``pagerank``: the distributed plan's
     arithmetic — per-edge ``rank(u)·w(u,v)/W_out(u)`` summed on dst,
-    the dangling-free or missing-mass closure — on the collected edge
-    table, as ``iterate``'s ``"resident"`` rounds."""
-    g = collect_edges(edges, *([weight] if weight else []))
+    the dangling-free or missing-mass closure — on the edge table's
+    graph ``g``, as ``iterate``'s ``"resident"`` rounds."""
     n, spark = g.n, edges.sparkSession
 
     def to_frame(r: np.ndarray) -> DataFrame:

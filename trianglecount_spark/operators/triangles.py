@@ -30,9 +30,9 @@ a→b, a→c, b→c, so it is found exactly once at its anchor a):
 
 The arrays form (``triangles_per_vertex_arrays`` / ``triangle_count_arrays``)
 carries the reference's regime rule inside it: a graph that fits one
-worker is not partitioned at all. When ``regime.fits_resident(oriented)``
-holds, the oriented edges are collected once (``iterative.collect_edges``)
-and counted in a driver-resident numpy CSR with the kernel's own chunked
+worker is not partitioned at all. When ``regime.resident_graph(oriented)``
+hands over the oriented edges' graph (collected once, or built from the
+raw edges by canonicalize.py), it is counted in a driver-resident numpy CSR with the kernel's own chunked
 intersection loop, spread over threads — the whole CSR on one device.
 Past the ceiling the distributed arrays plan runs.
 
@@ -48,12 +48,13 @@ from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
-from trianglecount_spark.operators.iterative import collect_edges, local_frame
-from trianglecount_spark.operators.regime import fits_broadcast, fits_resident
+from trianglecount_spark.operators.iterative import ResidentGraph, local_frame
+from trianglecount_spark.operators.regime import fits_broadcast, resident_graph
 
 # ---------------------------------------------------------------------------
 # Strategy 1: declarative join form
@@ -128,9 +129,9 @@ def _per_vertex_arrays_plan(oriented: DataFrame) -> DataFrame:
     )
 
 
-def _resident_counts(oriented: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """The resident regime: sorted vertex ids and each one's anchored
-    triangle count, from one ``toArrow()`` collect.
+def _resident_counts(g: ResidentGraph, sc: SparkContext) -> np.ndarray:
+    """The resident regime: each vertex's anchored triangle count, in
+    the order of ``g.vertices``.
 
     The oriented edges, sorted by (src, dst) position, are a CSR: the
     ``dst`` column is the flat adjacency and ``np.bincount`` of ``src``
@@ -138,16 +139,13 @@ def _resident_counts(oriented: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     (u, v, w), w ∈ N+(v); a wedge closes iff (u, w) is an edge, probed
     as the key ``(u<<32)|w`` against the sorted edge keys (T1) —
     positions are below 2^31 under the broadcast ceiling."""
-    g = collect_edges(oriented)
     keys = np.sort((g.src << 32) | g.dst)
     src = (keys >> 32).astype(np.int32)
     dst = (keys & 0xFFFFFFFF).astype(np.int32)
     deg = np.bincount(src, minlength=g.n)
     starts = np.cumsum(deg) - deg
-    sc = oriented.sparkSession.sparkContext
     threads = min(sc.defaultParallelism, os.cpu_count() or 1)
-    counts = _count_closures(src, starts[dst], deg[dst], dst, keys, g.n, threads)
-    return g.vertices, counts
+    return _count_closures(src, starts[dst], deg[dst], dst, keys, g.n, threads)
 
 
 def triangles_per_vertex_arrays(oriented: DataFrame) -> DataFrame:
@@ -164,22 +162,24 @@ def triangles_per_vertex_arrays(oriented: DataFrame) -> DataFrame:
     Work is Σ_(u,v)∈E (d⁺(u)+d⁺(v)) hash-set operations, the same
     asymptotics as the reference's probe loop.
 
-    A graph under the broadcast ceiling (``regime.fits_resident``)
+    A graph under the broadcast ceiling (``regime.resident_graph``)
     runs resident instead (``_resident_counts``); its rows are a local
     relation with the distributed plan's schema, taken from analysis —
     no job — and, as there, only vertices with ``tri > 0``.
     """
     plan = _per_vertex_arrays_plan(oriented)
-    if not fits_resident(oriented):
+    g = resident_graph(oriented)
+    if g is None:
         return plan
-    vertices, counts = _resident_counts(oriented)
+    counts = _resident_counts(g, oriented.sparkSession.sparkContext)
     nz = counts > 0
-    return local_frame(oriented.sparkSession, plan.schema, [vertices[nz], counts[nz]])
+    return local_frame(oriented.sparkSession, plan.schema, [g.vertices[nz], counts[nz]])
 
 
 def triangle_count_arrays(oriented: DataFrame) -> int:
-    if fits_resident(oriented):
-        return int(_resident_counts(oriented)[1].sum())
+    g = resident_graph(oriented)
+    if g is not None:
+        return int(_resident_counts(g, oriented.sparkSession.sparkContext).sum())
     row = (
         _per_vertex_arrays_plan(oriented)
         .agg(F.coalesce(F.sum("tri"), F.lit(0)).alias("t"))

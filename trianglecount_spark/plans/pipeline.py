@@ -117,10 +117,9 @@ def run_pipeline(
         orient,
     )
     from trianglecount_spark.operators.components import connected_components
-    from trianglecount_spark.operators.iterative import collect_edges
     from trianglecount_spark.operators.lpa import label_propagation
     from trianglecount_spark.operators.pagerank import pagerank
-    from trianglecount_spark.operators.regime import fits_resident
+    from trianglecount_spark.operators.regime import resident_graph
     from trianglecount_spark.operators.triangles import triangle_count_arrays
 
     fsio.mkdirs(spark, out_dir)
@@ -220,9 +219,8 @@ def run_pipeline(
     # a fitting graph is counted from its resident graph — built by the
     # stage above unless it was skipped — so the canonicalize plan
     # never runs
-    metrics["n_und_edges"] = (
-        len(collect_edges(sym).src) if fits_resident(sym) else sym.count()
-    ) // 2
+    g = resident_graph(sym)
+    metrics["n_und_edges"] = (len(g.src) if g is not None else sym.count()) // 2
 
     # ---- stage: pagerank (mid-iteration resumable) -------------------
     fin = stage("pagerank")

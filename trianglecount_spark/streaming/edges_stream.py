@@ -14,6 +14,8 @@ Iceberg/Kafka swaps), and the stream maintains:
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,8 +82,6 @@ def windowed_event_counts(
     ``value`` is summed in integer cents (``floor(v*100 + 0.5)``) so the
     aggregate is order-independent and hash-exact across engines.
     """
-    import tempfile
-
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 16)
@@ -99,9 +99,7 @@ def windowed_event_counts(
         )
         .select(F.col("w.start").alias("win_start"), "event_type", "n_events", "value_cents")
     )
-    out = tempfile.mkdtemp(prefix="tc_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="tc_stream_ckpt_")
-    run_available_now(agg, out, ckpt)
+    out = _drain(agg, "stream")
     # explicit schema: an all-windows-open drain writes no files and a
     # schemaless read of the empty dir would fail
     return spark.read.schema(WINDOWED_EVENTS_SCHEMA).parquet(out)
@@ -131,8 +129,6 @@ def session_event_counts(
     that with a gaps-and-islands window query (new session when the gap
     is >= 30 min, mirroring session windows' exclusive end bound).
     """
-    import tempfile
-
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 16)
@@ -150,9 +146,7 @@ def session_event_counts(
             "n_events",
         )
     )
-    out = tempfile.mkdtemp(prefix="tc_sess_out_")
-    ckpt = tempfile.mkdtemp(prefix="tc_sess_ckpt_")
-    run_available_now(agg, out, ckpt)
+    out = _drain(agg, "sess")
     return spark.read.schema(SESSION_EVENTS_SCHEMA).parquet(out)
 
 
@@ -172,8 +166,6 @@ def sliding_event_counts(
     event's two member windows closed-form (win_start = 30-min floor
     and that minus one slide). Integer-cents value sum keeps the
     aggregate order-independent."""
-    import tempfile
-
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 16)
@@ -196,9 +188,7 @@ def sliding_event_counts(
             "value_cents",
         )
     )
-    out = tempfile.mkdtemp(prefix="tc_slide_out_")
-    ckpt = tempfile.mkdtemp(prefix="tc_slide_ckpt_")
-    run_available_now(agg, out, ckpt)
+    out = _drain(agg, "slide")
     return spark.read.schema(WINDOWED_EVENTS_SCHEMA).parquet(out)
 
 
@@ -228,8 +218,6 @@ def spend_alarms(
     cents sum in (ts, event_id) order, emit when cum div threshold
     increases (one row per crossing event, carrying the new level).
     The DuckDB oracle is that window query verbatim."""
-    import tempfile
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -283,9 +271,7 @@ def spend_alarms(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = tempfile.mkdtemp(prefix="tc_alarm_out_")
-    ckpt = tempfile.mkdtemp(prefix="tc_alarm_ckpt_")
-    run_available_now(alarms, out, ckpt)
+    out = _drain(alarms, "alarm")
     return spark.read.schema(SPEND_ALARMS_SCHEMA).parquet(out)
 
 
@@ -308,8 +294,6 @@ def streamed_dedup_keys(
     guards the batch-boundary case where a key's state expired between
     micro-batches and the key was re-emitted. The result is therefore
     exactly the distinct key set — closed-form for the DuckDB oracle."""
-    import tempfile
-
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 16)
@@ -322,9 +306,7 @@ def streamed_dedup_keys(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    out = tempfile.mkdtemp(prefix="tc_stream_dedup_out_")
-    ckpt = tempfile.mkdtemp(prefix="tc_stream_dedup_ckpt_")
-    run_available_now(dedup, out, ckpt)
+    out = _drain(dedup, "stream_dedup")
     return spark.read.schema(DEDUP_KEYS_SCHEMA).parquet(out).distinct()
 
 
@@ -354,10 +336,8 @@ def streamed_upsert_state(
     same data because the fold recomputes from the union rather than
     appending blindly."""
     import shutil
-    import tempfile
 
     state_dir = tempfile.mkdtemp(prefix="tc_upsert_state_")
-    ckpt = tempfile.mkdtemp(prefix="tc_upsert_ckpt_")
     cur = f"{state_dir}/cur"
 
     raw = (
@@ -411,13 +391,14 @@ def streamed_upsert_state(
         shutil.rmtree(cur, ignore_errors=True)
         shutil.move(nxt, cur)
 
-    q = (
-        raw.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="tc_upsert_ckpt_") as ckpt:
+        (
+            raw.writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     return (
         spark.read.schema(
             "user_id long, ts timestamp, event_id long, "
@@ -447,6 +428,17 @@ def run_available_now(stream_df: DataFrame, out_path: str, checkpoint: str) -> N
     q.awaitTermination()
 
 
+def _drain(stream_df: DataFrame, name: str) -> str:
+    """``run_available_now`` into a new ``tc_<name>_out_*`` temp dir,
+    which is returned: it backs the caller's lazy read, so it outlives
+    this call. The checkpoint is only the query's and is removed when
+    the drain returns."""
+    out = tempfile.mkdtemp(prefix=f"tc_{name}_out_")
+    with tempfile.TemporaryDirectory(prefix=f"tc_{name}_ckpt_") as ckpt:
+        run_available_now(stream_df, out, ckpt)
+    return out
+
+
 ATTRIB_PAIRS_SCHEMA = "user_id long, click_id long, purchase_id long"
 
 
@@ -468,8 +460,6 @@ def stream_attribution_pairs(
     the closed-form batch interval join and is exactly oracle-checkable.
     Emits (user_id, click_id, purchase_id): id-keyed rows, hash-exact.
     """
-    import tempfile
-
     def src() -> DataFrame:
         return (
             spark.readStream.schema(EVENTS_SCHEMA)
@@ -505,7 +495,5 @@ def stream_attribution_pairs(
         ),
         "inner",
     ).select(F.col("cu").alias("user_id"), "click_id", "purchase_id")
-    out = tempfile.mkdtemp(prefix="tc_stream_attr_out_")
-    ckpt = tempfile.mkdtemp(prefix="tc_stream_attr_ckpt_")
-    run_available_now(joined, out, ckpt)
+    out = _drain(joined, "stream_attr")
     return spark.read.schema(ATTRIB_PAIRS_SCHEMA).parquet(out)
