@@ -36,20 +36,27 @@ passes; the row ceiling is a quarter of the raw rows), so every probe
 and its jobs counted, against the ``shuffle`` regime, whose negative
 ceilings skip every probe.
 
-``dictionary`` is the web job's url dictionary
-(``extract.edges_from_pages``) over persisted pages, its edges forced
-with a count: the Arrow dictionary on the driver against the
-range-partitioned dictionary and long-key mapping joins (the edge
-counts must agree). It runs only on a pages input, the only op there.
+``dictionary`` is the web job's edges stage: the url dictionary
+(``extract.edges_from_pages``) over persisted pages, its edges and
+vertices written as ``run_pipeline`` writes them
+(``iterative.write_parquet``: from the driver's Arrow tables in the
+resident regime, by Spark write jobs in the distributed one): the
+Arrow dictionary on the driver against the range-partitioned
+dictionary and long-key mapping joins (the edge counts, read from the
+written files' footers, must agree). ``extract.RESIDENT_LINKS`` is
+lifted to the row ceiling for it, so its resident regime runs past the
+crossover that constant records. It runs only on a pages input, the
+only op there.
 
 Graphs: an ``sf_dir`` — the copurchase graph bench.py runs at sf0.1
 (raw = the lineitem self-join); ``powerlaw4m``, ``powerlaw16m`` and
 ``powerlaw32m`` — 4M, 16M and 32M raw ``powerlaw_edges`` (50k, 200k
-and 400k vertices, skew 2.0); ``pages200k`` and ``pages600k`` —
-``make_pages`` crawls of 200k and 600k pages (about 1M and 3M mined
-links, 30 pages a site), persisted.
+and 400k vertices, skew 2.0); ``pages25k``, ``pages50k``,
+``pages100k`` and ``pages200k`` — ``make_pages`` crawls of 25k to
+200k pages (about 120k to 960k mined links, 30 pages a site),
+persisted.
 
-Usage: python tools/resident_crossover.py {<sf_dir>|powerlaw4m|powerlaw16m|powerlaw32m|pages200k|pages600k} [reps] [op,...]
+Usage: python tools/resident_crossover.py {<sf_dir>|powerlaw4m|powerlaw16m|powerlaw32m|pages25k|pages50k|pages100k|pages200k} [reps] [op,...]
 (ops: pagerank, components, lpa, triangles, build, over; default
 all, in that order; dictionary alone on pages). Prints one JSON line:
 {graph, cores, raw_edges (the pages, on a pages input), und_edges,
@@ -68,6 +75,7 @@ import os
 import resource
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -83,10 +91,13 @@ OPS = ("pagerank", "components", "lpa", "triangles", "build", "over")
 
 
 def main() -> None:
-    from trianglecount_spark.functions.extract import edges_from_pages
+    import pyarrow.dataset as pads
+
+    from trianglecount_spark.functions import extract
     from trianglecount_spark.operators import regime
     from trianglecount_spark.operators.canonicalize import canonicalize_edges, orient
     from trianglecount_spark.operators.components import connected_components
+    from trianglecount_spark.operators.iterative import write_parquet
     from trianglecount_spark.operators.lpa import label_propagation
     from trianglecount_spark.operators.pagerank import pagerank
     from trianglecount_spark.operators.triangles import triangle_count_arrays
@@ -107,6 +118,7 @@ def main() -> None:
     sc = spark.sparkContext
     if graph in PAGES:
         raw = make_pages(spark, PAGES[graph], PAGES[graph] // 30)
+        extract.RESIDENT_LINKS = regime.ROW_LIMIT // 2
     elif graph in POWERLAW:
         raw = powerlaw_edges(spark, *POWERLAW[graph], 2.0)
     else:
@@ -136,15 +148,18 @@ def main() -> None:
 
         return run
 
+    out_dir = tempfile.TemporaryDirectory(prefix="tc_crossover_")
+
     def dictionary():
         handles: list = []
-        e, _ = edges_from_pages(raw, handles=handles)
-        n = e.count()
+        e, verts = extract.edges_from_pages(raw, handles=handles)
+        write_parquet(e, f"{out_dir.name}/edges")
+        write_parquet(verts, f"{out_dir.name}/vertices")
         if regime.ROW_LIMIT >= 0:  # the "auto" regime's run
             built["dictionary"] = not handles
         for h in handles:
             h.unpersist(blocking=True)
-        return n
+        return pads.dataset(f"{out_dir.name}/edges").count_rows()
 
     ops = {
         "pagerank": lambda: pagerank(
@@ -208,6 +223,7 @@ def main() -> None:
         "cells": cells, "jobs": jobs, "built": built, "py_peak_rss_mb": rss,
     }))
     spark.stop()
+    out_dir.cleanup()
 
 
 if __name__ == "__main__":

@@ -145,13 +145,14 @@ def extract_links_text(pages: DataFrame) -> DataFrame:
 
 # mined links up to which the url dictionary is built on the driver.
 # Past it the driver-side dictionary loses to the distributed plan
-# although the links fit the ceilings: its collect, its one-threaded
-# Arrow work and the shipping of its local frames grow with the links,
-# while the plan's fixed cost of about ten small jobs is spread over
-# the cores (tools/resident_crossover.py pagesNk, warm local[4], median
-# of 3: about 120k links 1.61 vs 1.81 s, 240k 2.25 vs 1.97 s, 960k
-# 7.68 vs 3.73 s).
-RESIDENT_LINKS = 150_000
+# although the links fit the ceilings: its collect and its one-threaded
+# Arrow work and parquet encoding grow with the links, while the plan's
+# fixed cost of about ten small jobs is spread over the cores
+# (tools/resident_crossover.py pagesNk, the dictionary plus both
+# written frames, warm local[4], median of 3: about 120k links 1.13 vs
+# 1.77 s, 240k 1.57 vs 2.40 s, 480k 2.86 vs 2.83 s (2.65 vs 2.64 s over
+# 5), 960k 4.29 vs 3.51 s).
+RESIDENT_LINKS = 400_000
 
 _EDGES = StructType([StructField("src", LongType()), StructField("dst", LongType())])
 _VERTICES = StructType([StructField("url", StringType()), StructField("vid", LongType())])

@@ -13,8 +13,9 @@ process); PageRank / CC / LPA are driver-mandated extensions
   the scalability ceiling of any iterative algorithm; this keeps them
   at one per ``check_every`` rounds.
 - resumability: optionally persist state to ``state_dir/round=NNN``
-  parquet; ``resume`` picks up the latest round with a ``_SUCCESS``
-  marker.
+  parquet (``write_parquet``: a resident round from the driver's Arrow
+  table, a distributed one by ``df.write``); ``resume`` picks up the
+  latest round with a ``_SUCCESS`` marker.
 - per-check metrics: deltas / wall time / partition counts — and, with
   ``partition_metrics=True``, per-partition row counts + skew ratio —
   returned as an IterationLog (the per-partition lineage+metrics the
@@ -40,6 +41,7 @@ from __future__ import annotations
 
 import json
 import time
+import weakref
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -47,6 +49,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 from trianglecount_spark.sources import fsio
@@ -165,6 +168,10 @@ def iterate(
       ``from_frame`` convert it to and from the distributed form's
       state DataFrame, through which rounds are written and resumed,
       so rounds written in either regime resume in the other.
+
+    Rounds are written by ``write_parquet``: a ``local_frame`` from
+    ``to_frame`` on the driver, with no Spark job; a DataFrame state by
+    ``df.write``. Either way ``_SUCCESS`` lands last.
     """
     log = IterationLog()
     resident = regime == "resident"
@@ -193,8 +200,7 @@ def iterate(
         if not _is_check(i, check_every, max_iter):
             continue
         if state_dir:
-            frame = to_frame(state) if resident else state
-            frame.write.mode("overwrite").parquet(f"{state_dir}/round={i}")
+            write_parquet(to_frame(state) if resident else state, f"{state_dir}/round={i}")
         delta = float(delta_fn(prev_checked, state))
         entry = dict(
             round=i,
@@ -233,11 +239,43 @@ def vertex_field(edges: DataFrame) -> StructField:
     )
 
 
+# frame -> the Arrow table ``local_frame`` built it from. Weak keys, as
+# regime's frame -> graph registry: an entry lives as long as its frame,
+# and persist()/cache() return the same object.
+_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def local_frame(spark: SparkSession, schema: StructType, columns: list) -> DataFrame:
     """Driver-side arrays as a DataFrame of exactly ``schema``: a local
-    relation built from Arrow — no job, no Python worker."""
-    table = pa.Table.from_arrays([pa.array(c) for c in columns], names=schema.names)
-    return spark.createDataFrame(table, schema)
+    relation built from Arrow — no job, no Python worker. The frame
+    keeps its table (``local_table``), already in the Arrow form of
+    ``schema`` (an empty column would otherwise be of Arrow type null,
+    and an ``IntegerType`` one int64), so ``write_parquet`` writes the
+    file Spark's writer would."""
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    df = spark.createDataFrame(table, schema)
+    _TABLES[df] = table
+    return df
+
+
+def local_table(df: DataFrame) -> pa.Table | None:
+    """The table ``df`` was built from by ``local_frame``, else None."""
+    return _TABLES.get(df)
+
+
+def write_parquet(df: DataFrame, path: str) -> None:
+    """``df`` as the parquet directory ``path``, replacing it. A
+    ``local_frame`` is written from its table on the driver
+    (``fsio.write_table``: one part file, then ``_SUCCESS``), with no
+    Spark job; any other frame by ``df.write``."""
+    table = local_table(df)
+    if table is None:
+        df.write.mode("overwrite").parquet(path)
+    else:
+        fsio.write_table(df.sparkSession, path, table)
 
 
 @dataclass

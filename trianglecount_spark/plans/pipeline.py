@@ -39,7 +39,17 @@ with the three properties the north rule names:
 
 Stage boundaries are parquet (not localCheckpoint) deliberately: a
 resumable multi-hour job must survive DRIVER loss, which executor-local
-checkpoint blocks do not.
+checkpoint blocks do not. Every stage output and check round is written
+by ``iterative.write_parquet``: a resident result (the driver's Arrow
+table behind a ``local_frame``) as one part file plus ``_SUCCESS``
+through the same FileSystem API (``fsio.write_table``), with no Spark
+job; a distributed one by ``df.write``. When the edges stage ran
+resident in this job, the stages after it start from the tables it
+already holds: the canonical builder reads the mined edges' table
+instead of collecting the edges file back, and the vertex and
+component counts come from the tables in hand. The edges fingerprint
+is always taken from the written file. A skipped stage reads its
+artifacts.
 
 FINGERPRINT GUARD (r3 advisor): stage-skip markers alone can go stale —
 if the edges artifact changes (re-mined pages, a cleared edges dir) or
@@ -69,9 +79,11 @@ from __future__ import annotations
 import json
 import time
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trianglecount_spark.operators.iterative import local_table, write_parquet
 from trianglecount_spark.sources import fsio
 
 
@@ -168,6 +180,8 @@ def run_pipeline(
     # discipline applied to the first stage)
     pages_fp = _pages_fingerprint(pages)
     fin = stage("edges")
+    # a resident edges stage's frames: the driver holds their tables
+    resident_edges = verts_table = None
     if (
         resume
         and _done(spark, edges_dir)
@@ -178,14 +192,19 @@ def run_pipeline(
     else:
         handles: list = []
         e, verts = edges_from_pages(pages, handles=handles)
-        e.write.mode("overwrite").parquet(edges_dir)
-        verts.write.mode("overwrite").parquet(verts_dir)
+        write_parquet(e, edges_dir)
+        write_parquet(verts, verts_dir)
         for h in handles:
             h.unpersist()
         fp_stamp("edges", pages_fp)
         # only the distributed plan persists frames for the caller
         fin(skipped=False, regime="distributed" if handles else "resident")
+        if not handles:
+            resident_edges, verts_table = e, local_table(verts)
     edges = spark.read.parquet(edges_dir)
+    # from the file, in either regime: an aggregate over a local frame
+    # ships its rows inside the tasks (1.1 s against 0.2 s at 480k
+    # links, warm local[4])
     fp = _edges_fingerprint(edges)
     metrics["edges_fingerprint"] = fp
     # packed-key canonicalize (one int64 (src<<32|dst) through the
@@ -194,13 +213,17 @@ def run_pipeline(
     # while dictionary vids fit 31 bits; the dictionary is dense from
     # 0, so the vertex COUNT is the bound. Above it (a >2-billion-url
     # crawl) the plan reverts to the unpacked pair — same output.
-    metrics["n_vertices"] = spark.read.parquet(verts_dir).count()
+    metrics["n_vertices"] = (
+        verts_table.num_rows
+        if verts_table is not None
+        else spark.read.parquet(verts_dir).count()
+    )
     canon = (
         canonicalize_edges_packed
         if metrics["n_vertices"] < (1 << 31)
         else canonicalize_edges
     )
-    sym = canon(edges).persist()
+    sym = canon(edges if resident_edges is None else resident_edges).persist()
 
     # ---- stage: triangle count --------------------------------------
     fin = stage("tc")
@@ -251,18 +274,20 @@ def run_pipeline(
             resume=resume_state,
             partition_metrics=True,
         )
-        ranks.write.mode("overwrite").parquet(pr_dir)
+        write_parquet(ranks, pr_dir)
         fp_stamp("pagerank")
         fin(skipped=False, rounds=log.rounds)
 
     # ---- stage: connected components ---------------------------------
     fin = stage("components")
     cc_dir = f"{out_dir}/components"
+    comp_table = None
     if resume and _done(spark, cc_dir) and fp_fresh("components"):
         fin(skipped=True)
     else:
         comp, log = connected_components(sym)
-        comp.write.mode("overwrite").parquet(cc_dir)
+        write_parquet(comp, cc_dir)
+        comp_table = local_table(comp)
         fp_stamp("components")
         fin(skipped=False, rounds=log.rounds)
 
@@ -273,13 +298,17 @@ def run_pipeline(
         fin(skipped=True)
     else:
         labels, log = label_propagation(sym, max_iter=lpa_rounds)
-        labels.write.mode("overwrite").parquet(lpa_dir)
+        write_parquet(labels, lpa_dir)
         fp_stamp("lpa")
         fin(skipped=False, rounds=log.rounds)
 
     sym.unpersist()
     # a component's label is its minimum vertex, which is in the table
     # labelled with itself: one row per component, in either regime
-    metrics["n_components"] = spark.read.parquet(cc_dir).where("v = comp").count()
+    metrics["n_components"] = (
+        spark.read.parquet(cc_dir).where("v = comp").count()
+        if comp_table is None
+        else pc.sum(pc.equal(comp_table["v"], comp_table["comp"])).as_py() or 0
+    )
     fsio.write_text(spark, f"{out_dir}/metrics.json", json.dumps(metrics, indent=1))
     return metrics

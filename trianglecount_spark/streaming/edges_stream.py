@@ -19,6 +19,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trianglecount_spark.sources import fsio
+
 EDGE_EVENT_SCHEMA = "src long, dst long, ts timestamp"
 
 
@@ -339,6 +341,9 @@ def streamed_upsert_state(
 
     state_dir = tempfile.mkdtemp(prefix="tc_upsert_state_")
     cur = f"{state_dir}/cur"
+    state_schema = (
+        "user_id long, ts timestamp, event_id long, event_type string, n_events long"
+    )
 
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -353,17 +358,11 @@ def streamed_upsert_state(
             F.max(F.struct("ts", "event_id", "event_type")).alias("m"),
             F.count("*").cast("long").alias("n_events"),
         )
-        try:
-            prev = s.read.schema(
-                "user_id long, ts timestamp, event_id long, "
-                "event_type string, n_events long"
-            ).parquet(cur)
-        except Exception:
-            prev = s.createDataFrame(
-                [],
-                "user_id long, ts timestamp, event_id long, "
-                "event_type string, n_events long",
-            )
+        # the first batch has no state yet; any other read failure raises
+        if fsio.exists(s, cur):
+            prev = s.read.schema(state_schema).parquet(cur)
+        else:
+            prev = s.createDataFrame([], state_schema)
         merged = (
             delta.select(
                 "user_id",
@@ -400,10 +399,7 @@ def streamed_upsert_state(
             .awaitTermination()
         )
     return (
-        spark.read.schema(
-            "user_id long, ts timestamp, event_id long, "
-            "event_type string, n_events long"
-        )
+        spark.read.schema(state_schema)
         .parquet(cur)
         .select(
             "user_id",
