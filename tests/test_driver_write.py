@@ -171,7 +171,8 @@ def test_crash_before_marker_leaves_no_resumable_round(spark, tmp_path, monkeypa
 def test_fitting_pipeline_writes_from_the_driver(spark, tmp_path, monkeypatch):
     """A pipeline whose graph fits runs no Spark write job: every stage
     dir and check round is one part file plus ``_SUCCESS``, and the
-    mined links are the one table collected to the driver."""
+    mined links and the edges file are the two tables collected to the
+    driver."""
     from trianglecount_spark.sources.pages import make_pages
 
     pages = make_pages(spark, n_pages=300, n_sites=20)
@@ -194,7 +195,7 @@ def test_fitting_pipeline_writes_from_the_driver(spark, tmp_path, monkeypatch):
     m = pipeline.run_pipeline(spark, pages, out, pr_rounds=4, lpa_rounds=2)
     monkeypatch.undo()
     assert m["stages"]["edges"]["regime"] == "resident"
-    assert len(collects) == 1
+    assert len(collects) == 2
     dirs = ["edges", "vertices", "pagerank", "components", "lpa"]
     dirs += [f"pr_state/{d}" for d in os.listdir(f"{out}/pr_state")]
     assert len(dirs) == 7

@@ -52,11 +52,11 @@ Graphs: an ``sf_dir`` — the copurchase graph bench.py runs at sf0.1
 (raw = the lineitem self-join); ``powerlaw4m``, ``powerlaw16m`` and
 ``powerlaw32m`` — 4M, 16M and 32M raw ``powerlaw_edges`` (50k, 200k
 and 400k vertices, skew 2.0); ``pages25k``, ``pages50k``,
-``pages100k`` and ``pages200k`` — ``make_pages`` crawls of 25k to
-200k pages (about 120k to 960k mined links, 30 pages a site),
-persisted.
+``pages80k``, ``pages100k`` and ``pages200k`` — ``make_pages`` crawls
+of 25k to 200k pages (about 120k to 960k mined links, 30 pages a
+site), persisted.
 
-Usage: python tools/resident_crossover.py {<sf_dir>|powerlaw4m|powerlaw16m|powerlaw32m|pages25k|pages50k|pages100k|pages200k} [reps] [op,...]
+Usage: python tools/resident_crossover.py {<sf_dir>|powerlaw4m|powerlaw16m|powerlaw32m|pages25k|pages50k|pages80k|pages100k|pages200k} [reps] [op,...]
 (ops: pagerank, components, lpa, triangles, build, over; default
 all, in that order; dictionary alone on pages). Prints one JSON line:
 {graph, cores, raw_edges (the pages, on a pages input), und_edges,
@@ -86,7 +86,7 @@ POWERLAW = {
     "powerlaw16m": (16_000_000, 200_000),
     "powerlaw32m": (32_000_000, 400_000),
 }
-PAGES = {f"pages{k}k": k * 1000 for k in (25, 50, 100, 200)}
+PAGES = {f"pages{k}k": k * 1000 for k in (25, 50, 80, 100, 200)}
 OPS = ("pagerank", "components", "lpa", "triangles", "build", "over")
 
 

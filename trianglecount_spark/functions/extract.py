@@ -150,8 +150,9 @@ def extract_links_text(pages: DataFrame) -> DataFrame:
 # fixed cost of about ten small jobs is spread over the cores
 # (tools/resident_crossover.py pagesNk, the dictionary plus both
 # written frames, warm local[4], median of 3: about 120k links 1.13 vs
-# 1.77 s, 240k 1.57 vs 2.40 s, 480k 2.86 vs 2.83 s (2.65 vs 2.64 s over
-# 5), 960k 4.29 vs 3.51 s).
+# 1.77 s, 240k 1.57 vs 2.40 s, 384k 2.15 vs 2.47 s and 2.21 vs 2.59 s
+# (two JVMs, median of 5), 480k 2.86 vs 2.83 s (2.65 vs 2.64 s over 5),
+# 960k 4.29 vs 3.51 s).
 RESIDENT_LINKS = 400_000
 
 _EDGES = StructType([StructField("src", LongType()), StructField("dst", LongType())])

@@ -62,15 +62,6 @@ def _numpy_orders(*types: DataType) -> bool:
     )
 
 
-def _pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """``edges`` as ``src, dst``; ``edges`` itself when it is already
-    that pair, so a builder over a ``local_frame`` reads its table
-    instead of collecting it (``regime.collect_if_fits``)."""
-    if edges.columns == [src, dst] == ["src", "dst"]:
-        return edges
-    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-
-
 def _canonical_graph(pairs: DataFrame, packed: bool) -> ResidentGraph | None:
     """The resident evaluation of the canonicalize plans over
     ``pairs`` (``src, dst``), or None when the symmetric table, up to
@@ -118,13 +109,14 @@ def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> 
     distinct on (src, dst). Isolated-vertex removal (C3) is implicit in
     the edge representation.
     """
-    pairs = _pairs(edges, src, dst)
-    e = pairs.where(F.col("src") != F.col("dst"))
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
+        F.col("src") != F.col("dst")
+    )
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
     if _numpy_orders(*(f.dataType for f in e.schema)):
-        regime.attach_graph(sym, lambda: _canonical_graph(pairs, packed=False))
+        regime.attach_graph(sym, lambda: _canonical_graph(e, packed=False))
     return sym
 
 
@@ -178,7 +170,7 @@ def canonicalize_edges_packed(
         F.shiftright("pk", 32).cast(id_type).alias("src"),
         (F.col("pk") % F.lit(1 << 32)).cast(id_type).alias("dst"),
     )
-    pairs = _pairs(edges, src, dst)
+    pairs = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if all(isinstance(f.dataType, IntegralType) for f in pairs.schema):
         regime.attach_graph(sym, lambda: _canonical_graph(pairs, packed=True))
     return sym

@@ -262,7 +262,9 @@ def local_frame(spark: SparkSession, schema: StructType, columns: list) -> DataF
 
 
 def local_table(df: DataFrame) -> pa.Table | None:
-    """The table ``df`` was built from by ``local_frame``, else None."""
+    """The table ``df`` was built from by ``local_frame``, else None.
+    The lookup is by object identity: a frame derived from it (a
+    ``select``, an ``alias``) is not a local frame."""
     return _TABLES.get(df)
 
 

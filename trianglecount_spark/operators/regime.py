@@ -50,7 +50,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from trianglecount_spark.operators.iterative import ResidentGraph, local_table
+from trianglecount_spark.operators.iterative import ResidentGraph
 
 # Broadcast ceilings: 32M packed edges ≈ 512 MB serialized — the
 # practical single-executor broadcast ceiling. Set them only through
@@ -150,15 +150,15 @@ def collect_if_fits(df: DataFrame, max_rows: int | None = None) -> pa.Table | No
     partition adds a shuffle of the rows into one (0.2 s on 300k edges
     in four partitions, warm local[4]), so the canonicalize builders
     collect unbounded and trust the estimate, which a Python row
-    generator outside a cache voids (``estimated_bytes``). A
-    ``local_frame`` is not collected: its table is already here."""
+    generator outside a cache voids (``estimated_bytes``)."""
     est = estimated_bytes(df)
     if est is None or 2 * est > BYTE_LIMIT:
         return None
-    cap = ROW_LIMIT // 2 if max_rows is None else min(ROW_LIMIT // 2, max_rows)
-    t = local_table(df)
-    if t is None:
-        t = (df if max_rows is None else df.limit(cap + 1)).toArrow()
+    cap = ROW_LIMIT // 2
+    if max_rows is not None:
+        cap = min(cap, max_rows)
+        df = df.limit(cap + 1)
+    t = df.toArrow()
     return t if t.num_rows <= cap else None
 
 

@@ -43,13 +43,11 @@ checkpoint blocks do not. Every stage output and check round is written
 by ``iterative.write_parquet``: a resident result (the driver's Arrow
 table behind a ``local_frame``) as one part file plus ``_SUCCESS``
 through the same FileSystem API (``fsio.write_table``), with no Spark
-job; a distributed one by ``df.write``. When the edges stage ran
-resident in this job, the stages after it start from the tables it
-already holds: the canonical builder reads the mined edges' table
-instead of collecting the edges file back, and the vertex and
-component counts come from the tables in hand. The edges fingerprint
-is always taken from the written file. A skipped stage reads its
-artifacts.
+job; a distributed one by ``df.write``. When the edges and
+components stages ran resident in this job, the vertex and component
+counts come from the tables in hand. Every stage after edges reads the
+edges file, so the canonical builder collects it once (a resumed job
+does the same). A skipped stage reads its artifacts.
 
 FINGERPRINT GUARD (r3 advisor): stage-skip markers alone can go stale —
 if the edges artifact changes (re-mined pages, a cleared edges dir) or
@@ -180,8 +178,8 @@ def run_pipeline(
     # discipline applied to the first stage)
     pages_fp = _pages_fingerprint(pages)
     fin = stage("edges")
-    # a resident edges stage's frames: the driver holds their tables
-    resident_edges = verts_table = None
+    # a resident edges stage's dictionary: the driver holds its table
+    verts_table = None
     if (
         resume
         and _done(spark, edges_dir)
@@ -199,12 +197,8 @@ def run_pipeline(
         fp_stamp("edges", pages_fp)
         # only the distributed plan persists frames for the caller
         fin(skipped=False, regime="distributed" if handles else "resident")
-        if not handles:
-            resident_edges, verts_table = e, local_table(verts)
+        verts_table = local_table(verts)
     edges = spark.read.parquet(edges_dir)
-    # from the file, in either regime: an aggregate over a local frame
-    # ships its rows inside the tasks (1.1 s against 0.2 s at 480k
-    # links, warm local[4])
     fp = _edges_fingerprint(edges)
     metrics["edges_fingerprint"] = fp
     # packed-key canonicalize (one int64 (src<<32|dst) through the
@@ -223,7 +217,7 @@ def run_pipeline(
         if metrics["n_vertices"] < (1 << 31)
         else canonicalize_edges
     )
-    sym = canon(edges if resident_edges is None else resident_edges).persist()
+    sym = canon(edges).persist()
 
     # ---- stage: triangle count --------------------------------------
     fin = stage("tc")
